@@ -4,9 +4,12 @@ Re-expresses the moving-window indicators of ahhz/moving_window
 (operators W1–W13, SURVEY.md §2.6) with Spark-friendly per-tile NumPy:
 instead of the reference's incremental accumulator slide (O(edge) per
 step), every kernel here is computed by *chord-decomposed sliding sums*
-(exact, O(r·H·W) per plane) or FFT correlation (weighted kernels) —
-radius-near-independent per tile, matching the paper's headline
-property (SURVEY.md §4.1).
+(exact; one prefix-sum chord per window row, so O(r) per cell and
+O(r·H·W) per plane) or FFT correlation (weighted kernels). That is not
+the paper's radius-near-independent cost (SURVEY.md §4.1): the
+benchmark's radius sweep (perfbench focal_dense, one 318×318 padded
+tile, circle window, 4-core Xeon host) measured focal_mean at 4.1 /
+10.7 / 34.6 ms for r = 1 / 7 / 31, i.e. 3 / 15 / 63 chord rows.
 
 Semantics pinned in SURVEY.md §5.3 (normative):
 - inputs are float64 2-D arrays, NaN = nodata / outside-raster;
@@ -23,7 +26,7 @@ Semantics pinned in SURVEY.md §5.3 (normative):
 - means are sum/count at extract time (no running mean).
 
 These functions operate on a single (already halo-padded) array and are
-called inside ``applyInPandas`` groups by engine/tiling.py; they are
+called inside ``applyInArrow`` groups by engine/tiling.py; they are
 also called directly by the brute-force golden tests, which recompute
 every output cell by explicit window enumeration.
 """
@@ -110,25 +113,35 @@ def chords_for(shape: Shape, r: int, element: str = "cell") -> list[tuple[int, i
 def sliding_sum_chords(
     plane: np.ndarray, chords: list[tuple[int, int, int]]
 ) -> np.ndarray:
-    """out[y, x] = Σ_{(dy,lo,hi)} Σ_{dx=lo..hi} plane[y+dy, x+dx].
+    """out[..., y, x] = Σ_{(dy,lo,hi)} Σ_{dx=lo..hi} plane[..., y+dy, x+dx].
 
     Out-of-array offsets contribute 0 (shrinking-window boundary).
-    Exact (no FFT): per-row prefix sums + vertical shifted adds.
+    Exact (no FFT): per-row prefix sums + vertical shifted adds. The
+    prefix sums are edge-padded (zeros on the left, the row total on the
+    right) so that each chord is two plain slices, not two clipped
+    gathers. Leading axes are independent planes: stacking the planes a
+    kernel needs into one call walks the chord list once.
     """
-    H, W = plane.shape
-    # prefix sums along x with a leading zero column
-    cs = np.zeros((H, W + 1), dtype=np.float64)
-    np.cumsum(plane, axis=1, out=cs[:, 1:])
-    out = np.zeros((H, W), dtype=np.float64)
-    xs = np.arange(W)
+    plane = np.asarray(plane, dtype=np.float64)
+    H, W = plane.shape[-2:]
+    out = np.zeros(plane.shape, dtype=np.float64)
+    if not chords:
+        return out
+    # cs[..., left + j] = Σ plane[..., :clip(j, 0, W)] for every j a
+    # chord reads: x + lo and x + hi + 1 over x ∈ [0, W), lo <= hi
+    left = max(0, -min(lo for _, lo, _ in chords))
+    right = max(0, max(hi for _, _, hi in chords))
+    cs = np.zeros(plane.shape[:-1] + (left + W + 1 + right,), dtype=np.float64)
+    np.cumsum(plane, axis=-1, out=cs[..., left + 1 : left + 1 + W])
+    cs[..., left + 1 + W :] = cs[..., left + W : left + W + 1]
     for dy, lo, hi in chords:
         y0, y1 = max(0, -dy), min(H, H - dy)  # output rows with valid source
         if y0 >= y1:
             continue
-        src = cs[y0 + dy : y1 + dy]
-        a = np.clip(xs + lo, 0, W)
-        b = np.clip(xs + hi + 1, 0, W)
-        out[y0:y1] += src[:, b] - src[:, a]
+        src = cs[..., y0 + dy : y1 + dy, :]
+        out[..., y0:y1, :] += (
+            src[..., left + hi + 1 : left + hi + 1 + W] - src[..., left + lo : left + lo + W]
+        )
     return out
 
 
@@ -153,8 +166,8 @@ def focal_count(arr: np.ndarray, r: int, shape: Shape = "square") -> np.ndarray:
 
 
 def focal_mean(arr: np.ndarray, r: int, shape: Shape = "square") -> np.ndarray:
-    s = focal_sum(arr, r, shape)
-    c = focal_count(arr, r, shape)
+    vals, valid = _valid_and_values(arr)
+    s, c = sliding_sum_chords(np.stack([vals, valid]), chords_for(shape, r))
     with np.errstate(invalid="ignore", divide="ignore"):
         out = s / c
     out[c == 0] = np.nan
@@ -165,12 +178,12 @@ def focal_std(arr: np.ndarray, r: int, shape: Shape = "square") -> np.ndarray:
     """Population focal standard deviation over the valid window
     cells: sqrt(max(0, Σx²/n − (Σx/n)²)) — pinned expression order
     (mirrored by the sq_focal_multi 'std' oracle); NaN when the window
-    has no valid cell. Two chord-sum passes (x and x²) + the count —
-    the same single-exchange cost class as mean."""
+    has no valid cell. One chord pass over the stacked x, x² and valid
+    planes — the same single-exchange cost class as mean."""
     a = np.asarray(arr, dtype=np.float64)
-    s = focal_sum(a, r, shape)
-    s2 = focal_sum(a * a, r, shape)
-    c = focal_count(a, r, shape)
+    vals, valid = _valid_and_values(a)
+    sq, _ = _valid_and_values(a * a)  # a finite x whose x² overflows adds 0
+    s, s2, c = sliding_sum_chords(np.stack([vals, sq, valid]), chords_for(shape, r))
     with np.errstate(invalid="ignore", divide="ignore"):
         m = s / c
         var = s2 / c - m * m
@@ -197,10 +210,10 @@ def focal_gi_star(
     where W_i counts VALID window cells (boundary/nodata windows simply
     shrink), and (n, x̄, S) are the GLOBAL valid-cell count, mean, and
     population std — computed once upstream and passed in, so the
-    raster pass itself is two chord sums riding the usual one-exchange
-    focal plan. Nodata centers emit NaN."""
-    ws = focal_sum(arr, r, shape)
-    wi = focal_count(arr, r, shape)
+    raster pass itself is one chord pass (window sum and count) riding
+    the usual one-exchange focal plan. Nodata centers emit NaN."""
+    vals, valid = _valid_and_values(arr)
+    ws, wi = sliding_sum_chords(np.stack([vals, valid]), chords_for(shape, r))
     with np.errstate(invalid="ignore", divide="ignore"):
         z = (ws - xbar * wi) / (sd * np.sqrt((n * wi - wi * wi) / (n - 1.0)))
     z[wi == 0] = np.nan
@@ -289,9 +302,7 @@ def focal_annulus_mean(arr: np.ndarray, r: int, r_in: float) -> np.ndarray:
     so the sums are order-free integer-exact and the SQL oracle's
     contribution join lands bit-identically); all-invalid ring -> NaN."""
     vals, valid = _valid_and_values(arr)
-    chords = annulus_chords(r, r_in)
-    num = sliding_sum_chords(vals, chords)
-    den = sliding_sum_chords(valid.astype(np.float64), chords)
+    num, den = sliding_sum_chords(np.stack([vals, valid]), annulus_chords(r, r_in))
     with np.errstate(invalid="ignore", divide="ignore"):
         out = num / den
     out[den == 0] = np.nan
@@ -353,26 +364,21 @@ def focal_extremum(arr: np.ndarray, r: int, shape: Shape = "square", mode: str =
 def _class_counts(
     class_arr: np.ndarray, r: int, shape: Shape
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-class focal counts. Returns (classes, counts[c], total_valid)."""
+    """Per-class focal counts. Returns (classes, counts[c], total_valid).
+    Every class indicator and the valid plane go through ONE chord pass."""
     valid = np.isfinite(class_arr)
     classes = np.unique(class_arr[valid]) if valid.any() else np.empty(0)
-    chords = chords_for(shape, r)
-    counts = np.stack(
-        [
-            sliding_sum_chords((class_arr == c) & valid, chords)
-            for c in classes
-        ]
-    ) if len(classes) else np.zeros((0,) + class_arr.shape)
-    total = sliding_sum_chords(valid.astype(np.float64), chords)
-    return classes, counts, total
+    planes = np.stack([(class_arr == c) & valid for c in classes] + [valid])
+    sums = sliding_sum_chords(planes, chords_for(shape, r))
+    return classes, sums[:-1], sums[-1]
 
 
 def focal_proportion(class_arr: np.ndarray, r: int, klass: float, shape: Shape = "square") -> np.ndarray:
     """W5: fraction of valid cells in W equal to `klass`."""
     valid = np.isfinite(class_arr)
-    chords = chords_for(shape, r)
-    num = sliding_sum_chords(((class_arr == klass) & valid).astype(np.float64), chords)
-    den = sliding_sum_chords(valid.astype(np.float64), chords)
+    num, den = sliding_sum_chords(
+        np.stack([(class_arr == klass) & valid, valid]), chords_for(shape, r)
+    )
     with np.errstate(invalid="ignore", divide="ignore"):
         out = num / den
     out[den == 0] = np.nan
@@ -489,10 +495,10 @@ def focal_edge_density(class_arr: np.ndarray, r: int, shape: Shape = "square") -
     """W9: among edges fully inside W, the fraction whose endpoints
     differ in class. NaN where W contains no edges."""
     h_valid, h_diff, v_valid, v_diff = edge_planes(class_arr)
-    hc = chords_for(shape, r, "hedge")
-    vc = chords_for(shape, r, "vedge")
-    diff = sliding_sum_chords(h_diff, hc) + sliding_sum_chords(v_diff, vc)
-    tot = sliding_sum_chords(h_valid, hc) + sliding_sum_chords(v_valid, vc)
+    hd, hv = sliding_sum_chords(np.stack([h_diff, h_valid]), chords_for(shape, r, "hedge"))
+    vd, vv = sliding_sum_chords(np.stack([v_diff, v_valid]), chords_for(shape, r, "vedge"))
+    diff = hd + vd
+    tot = hv + vv
     with np.errstate(invalid="ignore", divide="ignore"):
         out = diff / tot
     out[tot == 0] = np.nan

@@ -394,3 +394,53 @@ def test_focal_minority_brute(class_arr, shape, r):
             if cnt:
                 want[y, x] = min(cnt, key=lambda c: (cnt[c], c))
     np.testing.assert_allclose(got, want, rtol=0, atol=0, equal_nan=True)
+
+
+def _shift_add(plane, chords):
+    """Reference chord sum: one shifted whole-plane add per footprint
+    offset, out-of-array offsets skipped."""
+    H, W = plane.shape[-2:]
+    out = np.zeros(plane.shape)
+    for dy, lo, hi in chords:
+        for dx in range(lo, hi + 1):
+            y0, y1 = max(0, -dy), min(H, H - dy)
+            x0, x1 = max(0, -dx), min(W, W - dx)
+            if y0 < y1 and x0 < x1:
+                out[..., y0:y1, x0:x1] += plane[..., y0 + dy : y1 + dy, x0 + dx : x1 + dx]
+    return out
+
+
+def test_sliding_sum_chords_matches_shift_add():
+    """Property: the edge-padded prefix-sum slices equal shift-and-add
+    exactly (integer-valued planes) for every footprint element, planes
+    smaller than the window, and a stacked leading axis."""
+    hypothesis = pytest.importorskip("hypothesis")
+    st = hypothesis.strategies
+
+    @hypothesis.given(
+        seed=st.integers(0, 2**31 - 1),
+        h=st.integers(1, 40),
+        w=st.integers(1, 40),
+        r=st.integers(0, 31),
+        footprint=st.sampled_from(
+            [(s, e) for s in ("square", "circle") for e in ("cell", "hedge", "vedge")]
+            + [("annulus", None)]
+        ),
+        r_in_frac=st.floats(0.0, 1.0),
+        stack=st.integers(0, 3),
+    )
+    @hypothesis.settings(max_examples=200, deadline=None)
+    def check(seed, h, w, r, footprint, r_in_frac, stack):
+        shape, element = footprint
+        if shape == "annulus":
+            chords = kernels.annulus_chords(r, r_in_frac * r)
+        else:
+            chords = kernels.chords_for(shape, r, element)
+        rng = np.random.default_rng(seed)
+        lead = (stack,) if stack else ()
+        plane = rng.integers(-50, 50, size=lead + (h, w)).astype(np.float64)
+        got = kernels.sliding_sum_chords(plane, chords)
+        assert got.shape == plane.shape
+        assert np.array_equal(got, _shift_add(plane, chords))
+
+    check()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,6 +109,28 @@ def test_focal_multi_stat_single_exchange(spark):
         np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
 
 
+def test_focal_nodata_crosses_as_null(spark):
+    """Nodata output cells are Spark NULL elements, never NaN doubles:
+    the sq_focal_* oracle rows read them as SQL NULLs. One null per NaN
+    cell of the single-array result, and no NaN element at all."""
+    arr = fixtures.raster_fixture(seed=3)
+    arr[20:30, 8:19] = np.nan  # holes wider than the window
+    T, r = 16, 2
+    stats = ["mean", "std", "majority"]
+    out = tiling.apply_focal(tiles_df(spark, arr, T), r, "circle", stats, T, level=10)
+    got = {
+        row.band: (row.nulls, row.nans)
+        for row in out.groupBy("band").agg(
+            F.sum(F.size(F.filter("data", lambda x: x.isNull()))).alias("nulls"),
+            F.sum(F.size(F.filter("data", lambda x: F.isnan(x)))).alias("nans"),
+        ).collect()
+    }
+    for s in stats:
+        want = int(np.isnan(tiling.KERNELS[s](arr, r, "circle")).sum())
+        assert want > 0
+        assert got[s] == (want, 0), s
+
+
 def test_halo_wrap_lon_seam(spark):
     """wrap=True: window crossing the x seam sees the far side's cells."""
     arr = fixtures.raster_fixture(seed=11, wrap=True)
@@ -130,41 +153,54 @@ def test_halo_wrap_lon_seam(spark):
 
 
 @pytest.mark.parametrize("wrap_nx", [None, 4])
-def test_halo_jvm_matches_python(spark, wrap_nx):
-    """The codegen'd (slice/transform) halo emitter is row-for-row,
-    byte-for-byte equal to the mapInPandas emitter — including ragged
-    bottom-edge tiles (nrows < T) and lon wrap."""
-    T, g = 16, 5
+def test_halo_assembles_raster_windows(spark, wrap_nx):
+    """Golden: every tile's assembled padded array — from both the
+    pandas and the Arrow painter — is the (T+2g)-window cut straight out
+    of the whole raster (NaN beyond it, x wrapped when wrap_nx is set).
+    Covers ragged bottom tiles (nrows < T) and one oversized payload
+    (ncols > T+g) whose extra columns repeat its right neighbor's."""
+    T, g, nx, ny = 16, 5, 4, 3
     rng = np.random.default_rng(1)
+    H, W = 2 * T + 11, nx * T
+    raster = rng.random((H, W))
+    raster[rng.random((H, W)) < 0.1] = np.nan
     rows = []
-    for ty in range(3):
-        for tx in range(4):
-            nr = T if ty < 2 else 11
-            # one oversized-payload tile (ncols > T+g) exercises the
-            # w != ncols guard in the JVM dx==0 branch
+    for ty in range(ny):
+        for tx in range(nx):
+            nr = min(T, H - ty * T)
             nc = T + g + 3 if (tx, ty) == (1, 1) else T
-            arr = rng.random(nr * nc)
-            arr[rng.random(nr * nc) < 0.1] = np.nan
+            block = raster[ty * T : ty * T + nr, tx * T : tx * T + nc]
             rows.append(
                 {"tile_x": tx, "tile_y": ty, "level": 8, "band": "b",
-                 "nrows": nr, "ncols": nc, "data": arr}
+                 "nrows": nr, "ncols": nc, "data": block.ravel()}
             )
     tiles = spark.createDataFrame(pd.DataFrame(rows), schema=tiling.TILES_SCHEMA)
-    key = ["dst_tx", "dst_ty", "band", "is_center", "oy", "ox"]
-    a = (
-        tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx, impl="jvm")
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx, impl="python")
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    assert (a[key + ["nrows", "ncols"]].values == b[key + ["nrows", "ncols"]].values).all()
-    for x, y in zip(a["data"], b["data"]):
-        np.testing.assert_array_equal(
-            np.asarray(x, dtype=float), np.asarray(y, dtype=float)
+    halo = tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx).toArrow()
+    centers = set()
+    for tx, ty in set(zip(halo["dst_tx"].to_pylist(), halo["dst_ty"].to_pylist())):
+        group = halo.filter(
+            pc.and_(pc.equal(halo["dst_tx"], tx), pc.equal(halo["dst_ty"], ty))
         )
+        got = tiling.assemble_padded(group.to_pandas(), T, g)
+        arrow = tiling._paint(tiling._arrow_rows(group), T, g)
+        if got is None:
+            assert arrow is None
+            continue
+        centers.add((tx, ty))
+        (padded,) = got[0].values()
+        (arrow_padded,) = arrow[0].values()
+        nr = min(T, H - ty * T)
+        assert got[1:] == arrow[1:] == (nr, min(T + g, rows[ty * nx + tx]["ncols"]))
+        ys = np.arange(ty * T - g, ty * T + nr + g)
+        xs = np.arange(tx * T - g, tx * T + T + g)
+        want = np.full((len(ys), len(xs)), np.nan)
+        if wrap_nx is not None:
+            xs = xs % W
+        ok_y, ok_x = (ys >= 0) & (ys < H), (xs >= 0) & (xs < W)
+        want[np.ix_(ok_y, ok_x)] = raster[np.ix_(ys[ok_y], xs[ok_x])]
+        np.testing.assert_array_equal(padded, want)
+        np.testing.assert_array_equal(arrow_padded, want)
+    assert centers == {(tx, ty) for ty in range(ny) for tx in range(nx)}
 
 
 def brute_rasterize_count(pdf, level, T):
