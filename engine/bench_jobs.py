@@ -10,9 +10,10 @@ job on identical bytes.
 Timing discipline: every leg materializes its input FIRST (parquet in a
 scratch dir) so the timed section measures the operator under test —
 scan → shuffle → kernel → action — not the generator. The action is a
-``count()``: every leg's output is produced inside a pandas-UDF stage
-(applyInPandas/mapInPandas — a black box Catalyst cannot column-prune
-or pushdown through), so count() executes the full pipeline. CAVEAT
+``count()``: every leg's output is produced inside a Python-UDF stage
+(applyInArrow/mapInArrow, or pip's explode of an arrow_udf — a black
+box Catalyst cannot column-prune or push down through), so count()
+executes the full pipeline. CAVEAT
 for future legs: a leg built from PLAIN Catalyst operators would be
 pruned to a row count under count() and must use a noop-format write
 instead.
@@ -86,24 +87,32 @@ def synthetic_tiles(
 
 
 def ensure_inputs(
-    spark: SparkSession, scratch: str, scale: float, T: int = 256
+    spark: SparkSession,
+    scratch: str,
+    scale: float,
+    legs: tuple[str, ...],
+    T: int = 256,
 ) -> None:
-    """Materialize every leg input (idempotent). Called once at full
-    parallelism by the scaling orchestrator so the timed, low-core
+    """Materialize the inputs of ``legs`` (idempotent). Called once at
+    full parallelism by the scaling orchestrator so the timed, low-core
     runners never pay generation cost."""
-    ny = max(int(48 * scale), 2)
-    nx = 2 * ny
-    path = os.path.join(scratch, f"bench_tiles_{nx}x{ny}_{T}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _materialize(synthetic_tiles(spark, nx, ny, T, 14), path)
-    n_points = int(128_000_000 * scale)
-    path = os.path.join(scratch, f"bench_points_{n_points}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _materialize(synthetic_points(spark, n_points), path)
+    if "focal" in legs:
+        ny = max(int(48 * scale), 2)
+        nx = 2 * ny
+        path = os.path.join(scratch, f"bench_tiles_{nx}x{ny}_{T}")
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            _materialize(synthetic_tiles(spark, nx, ny, T, 14), path)
+    if "pip" in legs:
+        n_points = int(128_000_000 * scale)
+        path = os.path.join(scratch, f"bench_points_{n_points}")
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            _materialize(synthetic_points(spark, n_points), path)
     n_docs = int(32_000_000 * scale)
     # raw corpus first (leg_pipeline reads it directly), then typed
-    _ensure_raw_docs(spark, scratch, n_docs)
-    _ensure_typed_docs(spark, scratch, n_docs)
+    if "pipeline" in legs:
+        _ensure_raw_docs(spark, scratch, n_docs)
+    if "pipet" in legs:
+        _ensure_typed_docs(spark, scratch, n_docs)
 
 
 def _ensure_raw_docs(spark: SparkSession, scratch: str, n_docs: int) -> str:
@@ -228,7 +237,7 @@ def synthetic_points(spark: SparkSession, n: int) -> DataFrame:
 def leg_pip(
     spark: SparkSession, scratch: str, n_points: int = 4_000_000, level: int = 7
 ) -> tuple[int, int, float]:
-    """PIP join throughput: broadcast cover + exact refine over n
+    """PIP join throughput: fused cover lookup + exact refine over n
     uniform points × the 3 fixture polygons. Returns (input rows,
     output rows, seconds)."""
     path = os.path.join(scratch, f"bench_points_{n_points}")

@@ -21,6 +21,10 @@ up, so JVM start-up is excluded — the criterion is about job
 throughput, not cold start.
 
 Usage:  python -m engine.bench_scaling [--repeats 3] [--scale 1.0]
+                                       [--legs focal,pip,pipeline,pipet]
+
+``--legs`` limits materialization, the timed runs and both reports to
+the named legs.
 """
 
 from __future__ import annotations
@@ -71,6 +75,17 @@ PRESETS = {
 # engine stages from the span-string parse whose allocation rate is the
 # full composite's single-box ceiling (see BASELINE.md)
 ALL_LEGS = ("focal", "pip", "pipeline", "pipet")
+# per leg, for BENCH/BASELINE.md: throughput column, efficiency row,
+# work unit (a key of the leg's result) and throughput format
+REPORT = {
+    "focal": ("focal tiles/sec (circle r=7, T=256)", "focal (tiles/sec) — BASELINE metric",
+              "tiles", ".1f"),
+    "pip": ("PIP join rows/sec", "PIP join (rows/sec) — BASELINE metric", "rows", ".0f"),
+    "pipeline": ("pipeline docs/sec", "pipeline (docs/sec) — informational composite",
+                 "docs", ".0f"),
+    "pipet": ("typed-ingest pipeline docs/sec",
+              "typed-ingest pipeline (docs/sec) — informational", "docs", ".0f"),
+}
 
 
 def run_legs(
@@ -222,15 +237,15 @@ def _median_leg(runs: list[dict], leg: str) -> dict:
     return out
 
 
-def orchestrate(repeats: int, scale: float) -> dict:
+def orchestrate(repeats: int, scale: float, legs: tuple[str, ...] = ALL_LEGS) -> dict:
     from engine.deploy import build_zip
 
     scratch = _scratch()
     zip_path = build_zip()
     # generate the shared inputs once, at full parallelism, outside any
     # timed run — every timed runner then reads the identical bytes
-    print(f"# materializing shared inputs in {scratch}", file=sys.stderr)
-    _submit_one(os.cpu_count() or 32, scale, scratch, zip_path, materialize=True)
+    print(f"# materializing inputs of {','.join(legs)} in {scratch}", file=sys.stderr)
+    _submit_one(os.cpu_count() or 32, scale, scratch, zip_path, materialize=True, legs=legs)
 
     # INTERLEAVED pairs: one N run immediately followed by one 4N run,
     # ratio taken within the pair. The host VM's speed drifts in
@@ -244,11 +259,11 @@ def orchestrate(repeats: int, scale: float) -> dict:
     # symmetric by construction.
     n, n4 = LEVELS
     runs: dict[int, list] = {n: [], n4: []}
-    pair_eff: dict[str, list[float]] = {leg: [] for leg in ALL_LEGS}
+    pair_eff: dict[str, list[float]] = {leg: [] for leg in legs}
     for i in range(repeats):
         pair = {}
         for cores in (n, n4):
-            r = _submit_one(cores, scale, scratch, zip_path)
+            r = _submit_one(cores, scale, scratch, zip_path, legs=legs)
             print(f"# pair {i + 1}/{repeats} local[{cores}]: "
                   + ", ".join(f"{k}={v['per_sec']:.1f}/s" for k, v in r.items()
                               if isinstance(v, dict)),
@@ -263,18 +278,18 @@ def orchestrate(repeats: int, scale: float) -> dict:
               + ", ".join(f"{k}={v[-1]:.3f}" for k, v in pair_eff.items()),
               file=sys.stderr)
     levels = {
-        cores: {leg: _median_leg(runs[cores], leg) for leg in ALL_LEGS}
+        cores: {leg: _median_leg(runs[cores], leg) for leg in legs}
         for cores in LEVELS
     }
 
     eff = {leg: statistics.median(v) for leg, v in pair_eff.items()}
     eff_block = {
         leg: levels[n4][leg]["per_sec"] / (4.0 * levels[n][leg]["per_sec"])
-        for leg in ALL_LEGS
+        for leg in legs
     }
     eff_best = {
         leg: levels[n4][leg]["per_sec_best"] / (4.0 * levels[n][leg]["per_sec_best"])
-        for leg in ALL_LEGS
+        for leg in legs
     }
     result = {
         "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -303,25 +318,39 @@ def write_reports(result: dict) -> None:
     lv = result["levels"]
     eff = result["efficiency"]
     eff_b = result["efficiency_best"]
+    legs = [leg for leg in REPORT if leg in eff]
     rows = []
     for cores in map(str, LEVELS):
         l = lv[cores]
-        n_runs = l["focal"].get("n_runs", result["repeats"])
-        rows.append(
-            f"| local[{cores}] pinned to {cores} CPUs ({n_runs} runs) | {l['focal']['per_sec']:.1f} "
-            f"({l['focal']['tiles']} tiles / {l['focal']['sec']:.1f}s) "
-            f"| {l['pip']['per_sec']:.0f} ({l['pip']['rows']} rows / {l['pip']['sec']:.1f}s) "
-            f"| {l['pipeline']['per_sec']:.0f} ({l['pipeline']['docs']} docs / {l['pipeline']['sec']:.1f}s) "
-            f"| {l['pipet']['per_sec']:.0f} ({l['pipet']['docs']} docs / {l['pipet']['sec']:.1f}s) |"
+        n_runs = l[legs[0]].get("n_runs", result["repeats"])
+        cells = "".join(
+            f" | {l[leg]['per_sec']:{REPORT[leg][3]}} ({l[leg][REPORT[leg][2]]} "
+            f"{REPORT[leg][2]} / {l[leg]['sec']:.1f}s)"
+            for leg in legs
         )
+        rows.append(f"| local[{cores}] pinned to {cores} CPUs ({n_runs} runs){cells} |")
     # the two BINDING metrics are BASELINE.json's: tiles/sec (focal) and
     # join rows/sec (pip); the pipeline leg is our own informational
     # composite (5 stages incl. string-parse scan) and is reported but
     # not gating
-    ok = all(eff[k] >= 0.8 for k in ("focal", "pip"))
-    ok_b = all(eff_b[k] >= 0.8 for k in ("focal", "pip"))
+    binding = [leg for leg in ("focal", "pip") if leg in legs]
+    ok = all(eff[k] >= 0.8 for k in binding)
+    ok_b = all(eff_b[k] >= 0.8 for k in binding)
     eff_pairs = result.get("efficiency_pairs", {})
     eff_blk = result.get("efficiency_block", eff)
+    header = " | ".join(REPORT[leg][0] for leg in legs)
+    eff_rows = "\n".join(
+        f"| {REPORT[leg][1]} | "
+        + (f"**{eff[leg]:.3f}**" if leg in binding else f"{eff[leg]:.3f}")
+        + f" | {eff_pairs.get(leg, [])} | {eff_blk[leg]:.3f} | {eff_b[leg]:.3f} | "
+        + (">= 0.8 |" if leg in binding else "(reported) |")
+        for leg in legs
+    )
+    verdict = (
+        f"(pairwise medians) {'MET' if ok else 'NOT MET'}; "
+        f"(best-of) {'MET' if ok_b else 'NOT MET'}"
+        if binding else "not measured (neither leg was run)"
+    )
     md = f"""# BENCH/BASELINE.md — measured results (written by engine/bench_scaling.py)
 
 Run: {result["timestamp"]} — INTERLEAVED N/4N pairs (one local[{LEVELS[0]}]
@@ -349,23 +378,22 @@ consumes ~2N cores, which distorts the N-vs-4N ratio. Machine: 32
 cores, local mode (sandbox realization of the "N and 4N cores"
 criterion per the driver instruction).
 
-| parallelism | focal tiles/sec (circle r=7, T=256) | PIP join rows/sec | pipeline docs/sec | typed-ingest pipeline docs/sec |
-|---|---|---|---|---|
+| parallelism | {header} |
+|---{"|---" * len(legs)}|
 {chr(10).join(rows)}
 
 ## Scaling efficiency — throughput(4N) / (4 x throughput(N))
 
 | leg | median of per-pair ratios | per-pair ratios | block-median ratio | best-of | target |
 |---|---|---|---|---|---|
-| focal (tiles/sec) — BASELINE metric | **{eff["focal"]:.3f}** | {eff_pairs.get("focal", [])} | {eff_blk["focal"]:.3f} | {eff_b["focal"]:.3f} | >= 0.8 |
-| PIP join (rows/sec) — BASELINE metric | **{eff["pip"]:.3f}** | {eff_pairs.get("pip", [])} | {eff_blk["pip"]:.3f} | {eff_b["pip"]:.3f} | >= 0.8 |
-| pipeline (docs/sec) — informational composite | {eff["pipeline"]:.3f} | {eff_pairs.get("pipeline", [])} | {eff_blk["pipeline"]:.3f} | {eff_b["pipeline"]:.3f} | (reported) |
-| typed-ingest pipeline (docs/sec) — informational | {eff["pipet"]:.3f} | {eff_pairs.get("pipet", [])} | {eff_blk["pipet"]:.3f} | {eff_b["pipet"]:.3f} | (reported) |
+{eff_rows}
 
 Criterion over the two BASELINE.json metrics (tiles/sec, join rows/sec):
-(pairwise medians) {"MET" if ok else "NOT MET"}; (best-of) {"MET" if ok_b else "NOT MET"}:
+{verdict}:
 {result["criterion"]}
-
+"""
+    if "pipet" in legs:
+        md += f"""
 ## The pipeline composite and the single-box ceiling (r3–r4 evidence)
 
 The pipeline leg is a five-stage end-to-end composite (string-parse
@@ -401,7 +429,8 @@ remains the composite's largest single cost (the typed leg is 3–4×
 faster in absolute docs/s at every level), so a real pipeline parses
 once at ingest and queries the typed table — both variants are
 reported so the trade is measured, not asserted.
-
+"""
+    md += """
 Best-of is reported alongside the median because the host VM exhibits
 intermittent multi-second noise windows (per-run spreads are recorded
 in scaling.json `per_sec_all`); external noise only ever subtracts
@@ -425,6 +454,10 @@ def main() -> None:
     ap.add_argument("--preset", default="scaling", choices=sorted(PRESETS))
     ap.add_argument("--timed-runs", type=int, default=1)
     args = ap.parse_args()
+    legs = tuple(x for x in args.legs.split(",") if x)
+    unknown = set(legs) - set(ALL_LEGS)
+    if unknown or not legs:
+        ap.error(f"--legs: pick from {','.join(ALL_LEGS)} (got {args.legs!r})")
 
     if args.runner:
         if _REPO not in sys.path:
@@ -435,10 +468,9 @@ def main() -> None:
             from engine.session import get_spark
 
             spark = get_spark(f"mat_{args.cores}", cores=args.cores)
-            bench_jobs.ensure_inputs(spark, scratch, args.scale)
+            bench_jobs.ensure_inputs(spark, scratch, args.scale, legs)
             print(json.dumps({"materialized": True}))
         else:
-            legs = tuple(x for x in args.legs.split(",") if x)
             print(json.dumps(
                 run_legs(args.cores, args.scale, scratch, legs, args.preset,
                          timed_runs=args.timed_runs)
@@ -446,7 +478,7 @@ def main() -> None:
     else:
         if _REPO not in sys.path:
             sys.path.insert(0, _REPO)
-        write_reports(orchestrate(args.repeats, args.scale))
+        write_reports(orchestrate(args.repeats, args.scale, legs))
 
 
 if __name__ == "__main__":

@@ -4,10 +4,10 @@ Physical strategy (scale notes):
 
 - **PIP**: polygon covers are computed driver-side (polygon sets are
   small relative to points — BASELINE.json:6 "broadcast polygon
-  cell-cover"), exploded to a (cell_id → poly_id) table and BROADCAST,
-  so the points side never shuffles: BroadcastHashJoin + a pipelined
-  ``mapInPandas`` exact refine in the same stage. Zero exchanges over
-  the big table.
+  cell-cover") and shipped, sorted, in the closure of one ``arrow_udf``
+  that does cover lookup and exact ray-cast refine per Arrow batch; a
+  JVM ``explode`` of its array result emits the matches. One fused
+  stage, no join and no exchange over the points.
 - **kNN**: iterative k-ring expansion with early termination. The
   QUERY side (small) explodes its ring cells and is broadcast against
   the cell-keyed points table; per round one shuffle for the top-k
@@ -22,117 +22,49 @@ invariant) — they only ADD columns.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from engine import geometry, grid, udfs
 
 KM_PER_DEG = np.pi * grid.EARTH_RADIUS_KM / 180.0
 
 
-def cover_table(
-    spark: SparkSession, polys: list[dict], level: int
-) -> DataFrame:
-    """C7: broadcastable (cell_id, poly_id) cover rows."""
-    rows = []
-    for p in polys:
-        for cid in geometry.polygon_cell_cover(
-            p["ring"], level, p.get("holes")
-        ):
-            rows.append((int(cid), int(p["poly_id"])))
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell_id", "poly_id"])
-    )
-
-
 def pip_join(
     points: DataFrame,
     polys: list[dict],
     level: int,
-    spark: SparkSession,
+    spark: SparkSession | None = None,
     lat: str = "lat",
     lon: str = "lon",
-    exact: bool = True,
-    strategy: str = "fused",
 ) -> DataFrame:
     """Inner join point→polygon: one output row per (point, containing
-    polygon).
+    polygon), as the input row plus a ``poly_id`` column. ``spark`` is
+    unused; callers pass it positionally.
 
-    strategy="fused" (default): cover filter + exact refine in ONE
-    vectorized mapInPandas pass — the exploded (cell_id → poly_id)
-    cover rides in the task closure (it is small by the broadcast-cover
-    design premise), so the big side crosses the Arrow boundary exactly
-    once and there is no join stage at all. Measured motivation: the
-    broadcast-hash-join formulation evaluates the cell-encode pandas
-    UDF TWICE (Catalyst infers an isnotnull filter on the join key and
-    ExtractPythonUDFs does not CSE across it) — two full Arrow round
-    trips of the points table.
+    One fused pass, no join stage: the sorted (cell_id → poly_id) cover
+    rides in the UDF closure (it is small by the broadcast-cover design
+    premise), so only the two coordinate columns cross the Arrow
+    boundary, once. The ``arrow_udf`` maps (lat, lon) → array of
+    containing poly_ids (encode → sorted-cover membership via
+    searchsorted → per-polygon ray cast, all NumPy), then a JVM-side
+    ``explode`` fans out matches; explode of an empty array emits no
+    row, which IS the inner-join semantics. Null/NaN coordinates match
+    nothing.
 
-    strategy="join": stage 1 broadcast cover equi-join, stage 2
-    pipelined mapInPandas refine — for polygon sets whose cover is too
-    big for a task closure (still zero shuffles of the points side).
+    The result ``ListArray`` is built from offsets, not from one Python
+    list per point: on one 65,536-point batch drawn like the pip_points
+    benchmark (one Xeon core), per-row lists plus the pandas→Arrow list
+    conversion took 39 of the 56 ms pandas_udf body (~70%, more than
+    encode, cover lookup and ray cast together); the offsets take 1.3 ms.
+    Why neither a broadcast-hash join nor mapInPandas: the join
+    evaluates the cell-encode UDF twice (Catalyst's inferred isnotnull
+    filter on the key is not CSE'd by ExtractPythonUDFs), and
+    mapInPandas' row-stream serialization measured ~1.9 µs/row, 5× the
+    ArrowEvalPython path.
     """
-    if strategy == "fused":
-        return _pip_join_fused(points, polys, level, lat, lon, exact)
-    # the cover's key is renamed BEFORE the join: dropping an ambiguous
-    # "cell_id" after it would also drop a caller's pre-existing
-    # cell_id column (e.g. from with_cell_and_tile), breaking the
-    # "joins only ADD columns" invariant the fused strategy keeps
-    cover = cover_table(spark, polys, level).withColumnRenamed(
-        "cell_id", "_covcell"
-    )
-    # Arrow-batched Morton encode — the inlined Catalyst variant blows
-    # up the join's generated code (see engine/udfs.py docstring)
-    cand = points.withColumn(
-        "_pipcell", udfs.cell_encode_pudf(F.col(lat), F.col(lon), F.lit(level))
-    ).join(
-        F.broadcast(cover), F.col("_pipcell") == F.col("_covcell"), "inner"
-    ).drop("_covcell", "_pipcell")
-    if not exact:
-        return cand
-    rings = {int(p["poly_id"]): geometry.poly_rings(p) for p in polys}
-    out_schema = cand.schema
-
-    def refine(it):
-        for pdf in it:
-            if pdf.empty:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            la = pdf[lat].to_numpy(dtype=np.float64)
-            lo = pdf[lon].to_numpy(dtype=np.float64)
-            pid = pdf["poly_id"].to_numpy()
-            for p, rr in rings.items():
-                sel = pid == p
-                if sel.any():
-                    keep[sel] = geometry.point_in_rings(la[sel], lo[sel], rr)
-            yield pdf[keep]
-
-    return cand.mapInPandas(refine, out_schema)
-
-
-def _pip_join_fused(
-    points: DataFrame,
-    polys: list[dict],
-    level: int,
-    lat: str,
-    lon: str,
-    exact: bool,
-) -> DataFrame:
-    """Single-crossing PIP: a scalar pandas_udf maps (lat, lon) →
-    array of containing poly_ids (encode → sorted-cover membership via
-    searchsorted → per-polygon ray-cast, all NumPy), then a JVM-side
-    ``explode`` fans out matches — explode of an empty array emits no
-    row, which IS the inner-join semantics.
-
-    Why not mapInPandas: its row-stream serialization measured ~1.9 µs/
-    row (5× the ArrowEvalPython path) on this Spark — only the two
-    coordinate columns should cross the Arrow boundary, once.
-    """
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
     pairs = sorted(
         (int(cid), int(p["poly_id"]))
         for p in polys
@@ -142,36 +74,29 @@ def _pip_join_fused(
     poly_sorted = np.array([p for _, p in pairs], dtype=np.int64)
     rings = {int(p["poly_id"]): geometry.poly_rings(p) for p in polys}
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def pip_polys(la_s: pd.Series, lo_s: pd.Series) -> pd.Series:
-        la = la_s.to_numpy(dtype=np.float64)
-        lo = lo_s.to_numpy(dtype=np.float64)
-        cid = grid.cell_encode(la, lo, level)
+    @F.arrow_udf(ArrayType(LongType()))
+    def pip_polys(la_a: pa.Array, lo_a: pa.Array) -> pa.Array:
+        # nulls arrive as NaN; non-finite points get no candidates
+        la = la_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        lo = lo_a.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        ok = np.isfinite(la) & np.isfinite(lo)
+        cid = grid.cell_encode(np.where(ok, la, 0.0), np.where(ok, lo, 0.0), level)
         left = np.searchsorted(cells_sorted, cid, side="left")
-        right = np.searchsorted(cells_sorted, cid, side="right")
-        n = right - left  # candidate polys per point (usually 0 or 1)
-        total = int(n.sum())
-        empty: list[int] = []
-        if total == 0:
-            return pd.Series([empty] * len(la))
+        n = np.where(ok, np.searchsorted(cells_sorted, cid, side="right") - left, 0)
+        # candidate (row, poly) pairs, rows ascending
         reps = np.repeat(np.arange(len(la)), n)
-        offs = np.arange(total) - np.repeat(np.cumsum(n) - n, n)
+        offs = np.arange(len(reps)) - np.repeat(np.cumsum(n) - n, n)
         pid = poly_sorted[np.repeat(left, n) + offs]
-        if exact:
-            keep = np.zeros(total, dtype=bool)
-            for pp, rr in rings.items():
-                sel = pid == pp
-                if sel.any():
-                    keep[sel] = geometry.point_in_rings(
-                        la[reps[sel]], lo[reps[sel]], rr
-                    )
-            reps, pid = reps[keep], pid[keep]
-        out = [empty] * len(la)
-        # group matches back per input row (reps is sorted ascending)
-        starts = np.flatnonzero(np.diff(reps, prepend=-1))
-        for s, e in zip(starts, np.append(starts[1:], len(reps))):
-            out[reps[s]] = pid[s:e].tolist()
-        return pd.Series(out)
+        keep = np.zeros(len(reps), dtype=bool)
+        for pp, rr in rings.items():
+            sel = pid == pp
+            if sel.any():
+                keep[sel] = geometry.point_in_rings(la[reps[sel]], lo[reps[sel]], rr)
+        reps, pid = reps[keep], pid[keep]
+        # reps is sorted, so per-row match counts are the list lengths
+        offsets = np.zeros(len(la) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(reps, minlength=len(la)), out=offsets[1:])
+        return pa.ListArray.from_arrays(offsets, pa.array(pid, pa.int64()))
 
     return points.withColumn(
         "poly_id", F.explode(pip_polys(F.col(lat), F.col(lon)))

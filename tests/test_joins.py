@@ -8,7 +8,6 @@ import math
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from engine import fixtures, geometry, grid, joins
 
@@ -87,13 +86,12 @@ def test_cover_superset():
         assert set(ids.tolist()) <= cover
 
 
-@pytest.mark.parametrize("strategy", ["fused", "join"])
-def test_pip_join_spark(spark, strategy):
+def test_pip_join_spark(spark):
     level = 7
     polys = fixtures.polygons()
     qp = fixtures.query_points(600)
     pts = spark.createDataFrame(qp)
-    out = joins.pip_join(pts, polys, level, spark, strategy=strategy).toPandas()
+    out = joins.pip_join(pts, polys, level, spark).toPandas()
     got = set(zip(out.q_id, out.poly_id))
     want = set()
     for p in polys:
@@ -104,24 +102,68 @@ def test_pip_join_spark(spark, strategy):
     assert len(want) > 50  # fixture guarantees lots of hits
 
 
-def test_pip_join_join_strategy_keeps_callers_cell_id(spark):
+def test_pip_join_keeps_callers_cell_id(spark):
     """The 'joins only ADD columns' invariant: a pre-existing cell_id
-    column on the points side must survive strategy='join' (an
-    ambiguous post-join drop('cell_id') used to remove BOTH sides)."""
+    column on the points side survives with the caller's values."""
     from engine import udfs
 
     level = 7
     qp = fixtures.query_points(200)
     pts = udfs.with_cell_and_tile(spark.createDataFrame(qp), level, 64)
-    polys = fixtures.polygons()
-    out = joins.pip_join(pts, polys, level, spark, strategy="join")
-    assert "cell_id" in out.columns
-    fused = joins.pip_join(pts, polys, level, spark, strategy="fused")
-    assert sorted(out.columns) == sorted(fused.columns)
-    # and the surviving cell_id is the CALLER's (same values per q_id)
+    out = joins.pip_join(pts, fixtures.polygons(), level, spark)
+    assert out.columns == pts.columns + ["poly_id"]
     want = {r.q_id: r.cell_id for r in pts.collect()}
-    for r in out.collect():
+    rows = out.collect()
+    assert len(rows) > 20
+    for r in rows:
         assert r.cell_id == want[r.q_id]
+
+
+def _rect(poly_id, lat0, lat1, lon0, lon1):
+    ring = [(lat0, lon0), (lat0, lon1), (lat1, lon1), (lat1, lon0), (lat0, lon0)]
+    return {"poly_id": poly_id, "ring": [{"lat": a, "lon": o} for a, o in ring]}
+
+
+def test_pip_join_arrow_batches_match_bruteforce(spark):
+    """The UDF's offsets-built list array, across many 7-row Arrow
+    batches: a first batch with no candidate, null and NaN coordinates
+    (no row, no error), and points inside two overlapping polygons (one
+    row per polygon) all equal brute-force point_in_rings."""
+    level = 7
+    polys = [_rect(10, 0.0, 20.0, 0.0, 20.0), _rect(11, 10.0, 30.0, 10.0, 30.0)]
+    nan = float("nan")
+    rows = [(q, -70.0, -170.0 + 10.0 * q) for q in range(7)]  # batch 0: no candidate
+    odd = [(None, 15.0), (15.0, None), (None, None), (nan, 15.0), (15.0, nan), (nan, nan)]
+    rows += [(7 + q, la, lo) for q, (la, lo) in enumerate(odd)]
+    rows += [(13, 15.0, 15.0), (14, 10.0, 10.0), (15, 20.0, 20.0), (16, 5.0, 25.0)]
+    rng = np.random.default_rng(4)
+    for q in range(17, 300):
+        rows.append((q, float(rng.uniform(-5.0, 35.0)), float(rng.uniform(-5.0, 35.0))))
+    rows.insert(150, (300, nan, nan))
+    pts = spark.createDataFrame(rows, "q_id long, lat double, lon double").coalesce(1)
+    assert pts.where("lat IS NULL").count() == 2
+    assert pts.where("isnan(lat)").count() == 3
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = joins.pip_join(pts, polys, level, spark).select("q_id", "poly_id").collect()
+    finally:
+        spark.conf.set(key, prev)
+    got = [(r.q_id, r.poly_id) for r in out]
+
+    q = np.array([r[0] for r in rows])
+    la = np.array([nan if r[1] is None else r[1] for r in rows])
+    lo = np.array([nan if r[2] is None else r[2] for r in rows])
+    want = set()
+    for p in polys:
+        inside = geometry.point_in_rings(la, lo, geometry.poly_rings(p))
+        want |= {(int(i), p["poly_id"]) for i in q[inside]}
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert {(13, 10), (13, 11), (14, 10), (14, 11), (15, 10), (15, 11)} <= want
+    assert not {g for g in got if g[0] < 13 or g[0] == 300}
 
 
 def test_ring_margin_python_matches_catalyst(spark):
@@ -323,8 +365,7 @@ def test_radius_join_auto_level_bounds_fallback(spark):
         assert set(out[out.q_id == qq.q_id].doc_id) == want, f"q{qq.q_id}"
 
 
-@pytest.mark.parametrize("strategy", ["fused", "join"])
-def test_pip_join_holed_polygon(spark, strategy):
+def test_pip_join_holed_polygon(spark):
     """P4 (square with hole): points inside the hole are excluded, on
     the hole boundary included, between rings included — vs a scalar
     per-ring parity oracle. Probes placed explicitly in each regime."""
@@ -342,7 +383,7 @@ def test_pip_join_holed_polygon(spark, strategy):
         }
     )
     pts = spark.createDataFrame(probes)
-    out = joins.pip_join(pts, polys, level, spark, strategy=strategy).toPandas()
+    out = joins.pip_join(pts, polys, level, spark).toPandas()
     got = set(out.q_id)
     want = {
         int(q)
