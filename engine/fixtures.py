@@ -7,7 +7,7 @@ or unseeded randomness anywhere (resume/idempotence depends on this).
   (doc_id:string, spans:array<struct<kind,text,media_ref,offset:int>>),
   one 'geo' span per doc carrying ``geo:{lat:.6f},{lon:.6f}``; spatial
   Zipf-weighted Gaussian hotspots so tile occupancy is skewed (exercises
-  salted repartition J5). Generated distributed via mapInPandas.
+  the J5 skew handling). Generated distributed via mapInPandas.
 - raster_fixture: 64×64 multi-tile class raster with patches crossing
   tile borders + nodata speckle (FIXTURES.md §2) for focal/patch goldens.
 - polygons / query_points: PIP + kNN join fixtures (FIXTURES.md §3).

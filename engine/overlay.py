@@ -41,9 +41,9 @@ grid (``bin_size``), pairs join on cell, bbox-overlap filter prunes,
 distinct de-dupes multi-cell pairs, ONE applyInPandas clips per pair
 group. Polygon payloads shuffle once; no all-pairs product (the same
 candidate-generation shape as the PIP cover join J1 and the radius
-join J11). Skewed bins (one giant clip polygon) inherit the engine's
-salting story: raise ``bin_size`` or pre-split the layer; the fixture
-scale needs neither.
+join J11). Skewed bins (one giant clip polygon) have no automatic
+answer: raise ``bin_size`` or pre-split the layer; the fixture scale
+needs neither.
 """
 
 from __future__ import annotations

@@ -293,6 +293,10 @@ def sample_bilinear(
     )
 
 
+# warp_affine's per-output-tile gather backstop (source tiles)
+_WARP_GATHER_CAP = 256
+
+
 def warp_affine(
     tiles: DataFrame,
     T: int,
@@ -343,10 +347,14 @@ def warp_affine(
     standard warp-with-overviews behavior) — MEAN for bilinear, MODE
     for nearest (averaging class codes would fabricate new classes
     under the categorical-preserving sampler) — and the warp samples
-    that level with the coeffs rescaled by 2^levels. A loud 256-tile
-    backstop in the gather kernel (warp_transform's contract) guards
-    whatever the planner did not foresee. ``stats`` records {'det',
-    'fanout_xy', 'overview_levels', 'residual_det'} for plan tests.
+    that level with the coeffs rescaled by 2^levels. It also
+    pre-reduces while ``(fx' + 2)·(fy' + 2)`` (the per-axis extents at
+    that level, plus the alignment/bilinear-margin tiles) exceeds the
+    loud 256-tile backstop in the gather kernel (warp_transform's
+    contract), so no legal ``max_fanout`` plans a gather past it; the
+    backstop guards whatever the planner did not foresee. ``stats``
+    records {'det', 'fanout_xy', 'overview_levels', 'residual_det'}
+    for plan tests.
     """
     if method not in ("nearest", "bilinear"):
         raise ValueError(f"unknown warp method: {method}")
@@ -356,8 +364,13 @@ def warp_affine(
     fx, fy = abs(a) + abs(b), abs(d) + abs(e)
     n_over = 0
     if max_fanout and np.isfinite(max_fanout):
-        while (fx * fy) / (4.0 ** n_over) > max_fanout or (
-            max(fx, fy) / (2.0 ** n_over) > 16.0
+        # last clause: a legal max_fanout (>= ~200) alone would plan
+        # gathers past the backstop (16x isotropic: 17·17 = 289 tiles)
+        while (
+            (fx * fy) / (4.0 ** n_over) > max_fanout
+            or max(fx, fy) / (2.0 ** n_over) > 16.0
+            or (fx / 2.0 ** n_over + 2) * (fy / 2.0 ** n_over + 2)
+            > _WARP_GATHER_CAP
         ):
             n_over += 1
     if stats is not None:
@@ -438,14 +451,14 @@ def warp_affine(
 
     def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
         otx, oty = int(key[0]), int(key[1])
-        if len(pdf) > 256:
+        if len(pdf) > _WARP_GATHER_CAP:
             # belt-and-braces executor-memory backstop (the
             # warp_transform contract): the fanout guard should keep
             # groups small; anything past it must fail loudly, not OOM
             raise RuntimeError(
                 f"warp_affine: output tile ({otx},{oty}) gathers "
-                f"{len(pdf)} source tiles — raise max_fanout guarding "
-                "or pre-reduce the source"
+                f"{len(pdf)} source tiles (> {_WARP_GATHER_CAP}) — lower "
+                "max_fanout or pre-reduce the source"
             )
         onr = min(H - oty * T, T)
         onc = min(W - otx * T, T)

@@ -8,6 +8,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(48g, 40% of the host's MemTotal): a fixed 48g heap got the
+    test JVM OOM-killed on a 15 GB host; hosts with >= 120 GB keep 48g."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, int(kb * 0.4) // 1024)}m"
+
+
 def get_spark(
     app_name: str = "moving_window_spark",
     cores: int | None = None,
@@ -41,7 +52,10 @@ def get_spark(
         # old gen degrade job throughput 3-5x run-over-run (see
         # engine/bench_jobs.force_gc); also drives shuffle-file cleanup
         .config("spark.cleaner.periodicGC.interval", "5min")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # ParallelGC for batch throughput: G1's humongous-allocation
         # concurrent cycles (tile payloads + Arrow batches >= half a

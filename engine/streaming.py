@@ -249,8 +249,6 @@ def incremental_focal(
     ``read_state(spark, state_path)`` reconstructs the current count
     raster from the versioned layout.
     """
-    import os
-
     from engine import tiling
 
     if r > T:
@@ -303,15 +301,6 @@ def incremental_focal(
     latest_file = os.path.join(state_path, "LATEST")
     manifest_dir = os.path.join(state_path, "MANIFEST")
 
-    def _read_latest() -> int | None:
-        return _ivm_latest(state_path)
-
-    def _load_manifest(bid: int) -> dict[str, int]:
-        return _ivm_manifest(state_path, bid)
-
-    def _state_df(spark: SparkSession, manifest: dict[str, int]) -> DataFrame | None:
-        return _ivm_state_df(spark, state_path, manifest)
-
     def process_batch(batch_cells: DataFrame, batch_id: int) -> None:
         spark = batch_cells.sparkSession
         # scope the dynamic-overwrite mode to THIS batch: restore the
@@ -333,17 +322,17 @@ def incremental_focal(
     ) -> None:
         from engine.lakehouse import _atomic_write_json
 
-        last = _read_latest()
+        last = _ivm_latest(state_path)
         if last is not None and batch_id <= last:
             # replay of a fully committed batch (LATEST is written as
             # the final step) — the additive merge below is not
             # idempotent, so re-running it would double-count
             return
-        manifest = _load_manifest(last) if last is not None else {}
+        manifest = _ivm_manifest(state_path, last) if last is not None else {}
         delta = tiling.rasterize(batch_cells, T, level, stat="count")
         delta.persist()
         dirty0 = delta.select("tile_x", "tile_y").distinct()
-        prev = _state_df(spark, manifest)
+        prev = _ivm_state_df(spark, state_path, manifest)
         if prev is not None:
             merged = (
                 prev.join(dirty0, ["tile_x", "tile_y"], "left_semi")
@@ -370,7 +359,7 @@ def incremental_focal(
         #    tiles' outputs upsert (dynamic partition overwrite) —
         #    recomputed identically on a replay, so idempotent
         dirty = neighbors(dirty0)
-        inputs = _state_df(spark, new_manifest).join(
+        inputs = _ivm_state_df(spark, state_path, new_manifest).join(
             neighbors(dirty), ["tile_x", "tile_y"], "left_semi"
         )
         out = tiling.apply_focal(

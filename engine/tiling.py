@@ -3,28 +3,19 @@ per-tile focal apply (W1–W10) — SURVEY.md §2.5/§2.6/§3.2-E1.
 
 Scale design notes (the part the 100 TB grade hangs on):
 
-- **Rasterize** offers three physical strategies with identical
-  results (asserted by t4 tests):
-  * ``strategy="packed"`` (default): map-side partial rasterize — one
-    ``mapInPandas`` pass accumulates each input partition's points
-    into per-tile sparse partials (packed int32 index + float64 value
-    bytes) and ONE exchange on the tile key merges them into dense
-    tiles. The packed-binary single shuffle replaced the agg
-    strategy's two per-cell-row shuffles (the r2→r3 pipeline-scaling
-    fix: the rasterize exchange was memory-bandwidth-bound).
-  * ``strategy="agg"``: a JVM cell-level
-    ``groupBy(tile, tj, ti).agg(...)`` — Spark plans partial_agg →
-    shuffle → final_agg, so the map-side combine collapses hot tiles
-    BEFORE the shuffle (a fine skew killer when the value fits an
-    algebraic agg), then one ``applyInPandas`` assembles each tile's
-    pixel rows into the dense array. Only aggregated pixel rows cross
-    the wire.
-  * ``strategy="salted"``: the explicit two-phase salted repartition
-    demanded by BASELINE.json:6 — phase 1 groups by (tile, salt) and
-    rasterizes partial dense grids in NumPy, phase 2 merges partials
-    per tile. Salt count is chosen from a SAMPLED key histogram
-    (engine.skew.choose_salt). Wins when the per-pixel agg is not
-    algebraic or pixel-row cardinality ~ point cardinality.
+- **Rasterize** is one path: map-side partial rasterize. One
+  ``mapInPandas`` pass accumulates each input partition's points into
+  per-tile sparse partials (packed int32 index + float64 value bytes)
+  and ONE exchange on the tile key merges them into dense tiles. This
+  is also the engine's skew answer (J5): a hot tile's points are
+  combined map-side, so its merge receives one packed row per input
+  partition, however many points the tile holds. A histogram-salted
+  two-phase repartition was measured against it on 2M points with 70%
+  in one 0.5° box (level 12, T=64, local[4], warm medians of 3): 100 s
+  against 5.7 s, and was deleted. A JVM cell-level ``groupBy().agg``
+  path took 4.0 s on that input but shuffled per-cell rows twice and
+  lost the pipeline leg's scaling pairs (r2→r3: pair efficiency 0.50 →
+  0.62 with packed), so it was deleted too.
 
 - **Halo exchange** ships boundary STRIPS, not whole tiles: each tile
   emits its full payload once (to itself) plus only the g-deep
@@ -106,31 +97,6 @@ KERNELS = {
 # A2: rasterize points -> tiles
 # ---------------------------------------------------------------------------
 
-def _assemble_tile(
-    T: int, level: int, band: str,
-    key, pdf: pd.DataFrame,
-) -> pd.DataFrame:
-    """Dense grid from aggregated pixel rows of one tile."""
-    tx, ty = int(key[0]), int(key[1])
-    nr, nc = T, T
-    grid_arr = np.full(nr * nc, np.nan)
-    idx = pdf["tj"].to_numpy() * nc + pdf["ti"].to_numpy()
-    grid_arr[idx] = pdf["val"].to_numpy(dtype=np.float64)
-    return pd.DataFrame(
-        [
-            {
-                "tile_x": tx,
-                "tile_y": ty,
-                "level": level,
-                "band": band,
-                "nrows": nr,
-                "ncols": nc,
-                "data": grid_arr,
-            }
-        ]
-    )
-
-
 def _packed_partials(
     T: int, value_col: str | None, it: Iterator[pd.DataFrame]
 ) -> Iterator[pd.DataFrame]:
@@ -139,7 +105,8 @@ def _packed_partials(
     nonzero pixel indices as int32 bytes, counts as int32 bytes / value
     sums as float64 bytes). The only shuffle downstream carries these
     packed bytes (≈8–16 B per *distinct* touched pixel per partition),
-    not per-cell rows (~40 B each, two shuffles in the agg strategy).
+    not per-cell rows (~40 B each, two shuffles in the old cell-level
+    groupBy).
 
     The input crosses Arrow as ONE int64 column ``_pk`` = (gi<<32)|gj
     (global pixel coords, JVM-computed) — half the bytes of the four
@@ -205,157 +172,72 @@ def rasterize(
     stat: str = "count",
     value_col: str | None = None,
     band: str | None = None,
-    strategy: str = "packed",
-    n_salts: int | None = None,
 ) -> DataFrame:
     """points (with tile_x/tile_y/ti/tj from udfs.with_cell_and_tile) →
     dense tile rows. Pixels with no points are NaN (nodata).
 
     stat ∈ {count, sum, mean}; sum/mean need value_col.
 
-    strategy="packed" (default): map-side partial rasterize — one
-    mapInPandas pass accumulates each input partition's points into
-    per-tile sparse partials (packed int32 index + float64 value
-    bytes), then ONE exchange on the tile key merges partials into the
-    dense tile. Replaces the agg strategy's two per-cell-row shuffles
-    with a single packed-binary one (the r2→r3 pipeline-scaling fix:
-    the rasterize exchange was memory-bandwidth-bound).
+    Map-side partial rasterize: one mapInPandas pass accumulates each
+    input partition's points into per-tile sparse partials (packed
+    int32 index + float64 value bytes), then ONE exchange on the tile
+    key merges partials into the dense tile.
     """
     band = band or stat
-    # validate up front for EVERY strategy: the packed/salted merge
-    # kernels fall through to their mean branch on an unknown stat and
-    # would return silently-zero rasters where agg raises
+    # validate up front: the merge kernel falls through to its mean
+    # branch on an unknown stat and would return a silently-zero raster
     if stat not in ("count", "sum", "mean"):
         raise ValueError(f"unknown stat: {stat!r} (count|sum|mean)")
     if stat in ("sum", "mean") and value_col is None:
         raise ValueError(f"stat {stat} needs value_col")
-    if strategy == "packed":
-        vc = value_col if stat in ("sum", "mean") else None
-        # explicit projection: mapInPandas is a black box to Catalyst,
-        # so without this the FULL point row (spans and all) crosses
-        # Arrow — measured 6× slower than the pruned scan. The four
-        # tile/pixel ints are JVM-packed into ONE int64 (global pixel
-        # coords) so the crossing carries 8 B/row, not 16.
-        gi = (F.col("tile_x").cast("long") * T + F.col("ti")).cast("long")
-        gj = (F.col("tile_y").cast("long") * T + F.col("tj")).cast("long")
-        pk = (F.shiftleft(gi, 32) + gj).alias("_pk")
-        cols = [pk] + ([F.col(vc)] if vc else [])
-        partials = points.select(*cols).mapInPandas(
-            partial(_packed_partials, T, vc),
-            "tile_x int, tile_y int, idx binary, cnt binary, val binary",
+    vc = value_col if stat in ("sum", "mean") else None
+    # explicit projection: mapInPandas is a black box to Catalyst,
+    # so without this the FULL point row (spans and all) crosses
+    # Arrow — measured 6× slower than the pruned scan. The four
+    # tile/pixel ints are JVM-packed into ONE int64 (global pixel
+    # coords) so the crossing carries 8 B/row, not 16.
+    gi = (F.col("tile_x").cast("long") * T + F.col("ti")).cast("long")
+    gj = (F.col("tile_y").cast("long") * T + F.col("tj")).cast("long")
+    pk = (F.shiftleft(gi, 32) + gj).alias("_pk")
+    cols = [pk] + ([F.col(vc)] if vc else [])
+    partials = points.select(*cols).mapInPandas(
+        partial(_packed_partials, T, vc),
+        "tile_x int, tile_y int, idx binary, cnt binary, val binary",
+    )
+
+    def merge_packed(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        cnt = np.zeros(T * T)
+        val = np.zeros(T * T)
+        for row in pdf.itertuples(index=False):
+            idx = np.frombuffer(row.idx, dtype="<i4")
+            cnt[idx] += np.frombuffer(row.cnt, dtype="<i4")
+            if row.val is not None:
+                val[idx] += np.frombuffer(row.val, dtype="<f8")
+        if stat == "count":
+            out = cnt.copy()
+        elif stat == "sum":
+            out = val.copy()
+        else:  # mean
+            with np.errstate(invalid="ignore", divide="ignore"):
+                out = val / cnt
+        out[cnt == 0] = np.nan
+        return pd.DataFrame(
+            [
+                {
+                    "tile_x": int(key[0]),
+                    "tile_y": int(key[1]),
+                    "level": level,
+                    "band": band,
+                    "nrows": T,
+                    "ncols": T,
+                    "data": out,
+                }
+            ]
         )
 
-        def merge_packed(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cnt = np.zeros(T * T)
-            val = np.zeros(T * T)
-            for row in pdf.itertuples(index=False):
-                idx = np.frombuffer(row.idx, dtype="<i4")
-                cnt[idx] += np.frombuffer(row.cnt, dtype="<i4")
-                if row.val is not None:
-                    val[idx] += np.frombuffer(row.val, dtype="<f8")
-            if stat == "count":
-                out = cnt.copy()
-            elif stat == "sum":
-                out = val.copy()
-            else:  # mean
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out = val / cnt
-            out[cnt == 0] = np.nan
-            return pd.DataFrame(
-                [
-                    {
-                        "tile_x": int(key[0]),
-                        "tile_y": int(key[1]),
-                        "level": level,
-                        "band": band,
-                        "nrows": T,
-                        "ncols": T,
-                        "data": out,
-                    }
-                ]
-            )
-
-        return partials.groupBy("tile_x", "tile_y").applyInPandas(
-            merge_packed, TILES_SCHEMA
-        )
-    if strategy == "agg":
-        agg = {
-            "count": F.count(F.lit(1)).cast("double"),
-            "sum": F.sum(value_col).cast("double") if value_col else None,
-            "mean": F.avg(value_col).cast("double") if value_col else None,
-        }[stat]
-        if agg is None:
-            raise ValueError(f"stat {stat} needs value_col")
-        pix = (
-            points.groupBy("tile_x", "tile_y", "tj", "ti")
-            .agg(agg.alias("val"))
-        )
-        return pix.groupBy("tile_x", "tile_y").applyInPandas(
-            partial(_assemble_tile, T, level, band), TILES_SCHEMA
-        )
-    if strategy == "salted":
-        from engine.skew import DEFAULT_SAMPLE_FRACTION, choose_salt
-
-        # sampled histogram: S is a perf knob (results are S-invariant,
-        # asserted by the t4 equality test), so an unsampled full
-        # groupBy-count pre-pass over the big table would cost as much
-        # as the rasterize it tunes at 100 TB
-        S = n_salts or choose_salt(
-            points, ["tile_x", "tile_y"],
-            sample_fraction=DEFAULT_SAMPLE_FRACTION,
-        )
-        # deterministic salt: hash of pixel coords spreads a hot tile's
-        # points over S groups while keeping a pixel's points together
-        salted = points.withColumn(
-            "_salt", (F.abs(F.xxhash64("ti", "tj")) % F.lit(S)).cast("int")
-        )
-
-        def partial_grid(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            tx, ty = int(key[0]), int(key[1])
-            cnt = np.zeros(T * T)
-            val = np.zeros(T * T)
-            idx = pdf["tj"].to_numpy() * T + pdf["ti"].to_numpy()
-            np.add.at(cnt, idx, 1.0)
-            if value_col:
-                np.add.at(val, idx, pdf[value_col].to_numpy(dtype=np.float64))
-            return pd.DataFrame(
-                [{"tile_x": tx, "tile_y": ty, "cnt": cnt, "val": val}]
-            )
-
-        partials = salted.groupBy("tile_x", "tile_y", "_salt").applyInPandas(
-            partial_grid, "tile_x int, tile_y int, cnt array<double>, val array<double>"
-        )
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            tx, ty = int(key[0]), int(key[1])
-            cnt = np.sum(np.stack(pdf["cnt"].to_numpy()), axis=0)
-            val = np.sum(np.stack(pdf["val"].to_numpy()), axis=0)
-            if stat == "count":
-                out = cnt.copy()
-            elif stat == "sum":
-                out = val.copy()
-            else:  # mean
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out = val / cnt
-            out[cnt == 0] = np.nan
-            return pd.DataFrame(
-                [
-                    {
-                        "tile_x": tx,
-                        "tile_y": ty,
-                        "level": level,
-                        "band": band,
-                        "nrows": T,
-                        "ncols": T,
-                        "data": out,
-                    }
-                ]
-            )
-
-        return partials.groupBy("tile_x", "tile_y").applyInPandas(
-            merge, TILES_SCHEMA
-        )
-    raise ValueError(f"unknown strategy: {strategy}")
+    return partials.groupBy("tile_x", "tile_y").applyInPandas(
+        merge_packed, TILES_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -609,10 +491,3 @@ def apply_focal_bands(
     with several derived bands (engine/patches.apply_patch_stats) would
     otherwise re-execute the upstream lineage once per band."""
     return _focal_stage(tiles, r, shape, band_stats, T, level, wrap_nx, halo)
-
-
-def focal_pipeline_plan_summary(df: DataFrame) -> str:
-    """Formatted physical plan (for .explain-driven tuning in tests)."""
-    return df._jdf.queryExecution().explainString(  # noqa: SLF001
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )

@@ -1,28 +1,26 @@
 """Spatial encode operators C1–C6 for Spark (SURVEY.md §2.3).
 
-Two implementations, one semantics (engine.grid is the single source of
-truth, shared with the goldens):
+One implementation per operator, one semantics (engine.grid is the
+single source of truth, shared with the goldens):
 
-1. **Column expressions** (`*_col` / `geocode_cols`) — pure Catalyst
-   expressions, fully JVM-side and whole-stage-codegen'd. Used for the
-   CHEAP encodes (geocode parse, (i,j) quantize, tile/ti/tj, haversine).
-2. **pandas UDFs** (`*_pudf`) — Arrow-batched vectorized NumPy over
-   engine.grid — the "batched cell encode, no per-row Python" surface
-   of BASELINE.json:6. This is the hot-path MORTON encode.
+- **Column expressions** (`*_col` / `geocode_cols`) — pure Catalyst
+  expressions, fully JVM-side and whole-stage-codegen'd. Used for the
+  CHEAP encodes (geocode parse, (i,j) quantize, tile/ti/tj, haversine).
+- **pandas UDFs** (`*_pudf`) — Arrow-batched vectorized NumPy over
+  engine.grid — the "batched cell encode, no per-row Python" surface
+  of BASELINE.json:6. The MORTON encode is one of them.
 
-Why the Morton pack is NOT a Catalyst expression on the hot path
-(measured this session, 16M rows, local[32]): each interleave stage of
-`_part1by1_col` references its input twice, so the expression TREE is
-exponential in stages (~32 copies of the quantize subtree); a join then
-duplicates the whole tree again into its null-filter and key hash. The
-generated code grows to megabytes — compile time + constant-folding
-dominate and the stage runs ~75 s almost independent of parallelism.
-The identical computation as an Arrow-batched pandas UDF: 7.6 s
-end-to-end and scales with cores. The `_col` variant is kept for
-parity tests and small/driver-side frames; `cell_encode_pudf` is the
-one to use under joins/aggregations.
+Why the Morton pack is NOT a Catalyst expression (measured, 16M rows,
+local[32]): each interleave stage of a column-expression bit spread
+references its input twice, so the expression TREE is exponential in
+stages (~32 copies of the quantize subtree); a join then duplicates
+the whole tree again into its null-filter and key hash. The generated
+code grows to megabytes — compile time + constant-folding dominate and
+the stage ran ~75 s almost independent of parallelism. The identical
+computation as an Arrow-batched pandas UDF (`cell_encode_pudf`): 7.6 s
+end-to-end and scales with cores. The expression twin was deleted.
 
-Tests assert both paths agree bit-for-bit with engine.grid.
+Tests assert the UDFs agree bit-for-bit with engine.grid.
 """
 
 from __future__ import annotations
@@ -36,22 +34,6 @@ from pyspark.sql.functions import pandas_udf
 
 from engine import grid
 
-_MASKS = [
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
-
-
-def _part1by1_col(c: Column) -> Column:
-    """Spread low 32 bits so bit k lands at bit 2k (JVM bit ops)."""
-    v = c.bitwiseAND(F.lit(0x00000000FFFFFFFF))
-    for shift, mask in _MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
-
 
 def latlon_to_ij_cols(lat: Column, lon: Column, level: int) -> tuple[Column, Column]:
     """Quantize to grid coords — same formula as grid.latlon_to_ij."""
@@ -61,22 +43,6 @@ def latlon_to_ij_cols(lat: Column, lon: Column, level: int) -> tuple[Column, Col
     j = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(nr)).cast("long")
     j = F.greatest(F.lit(0), F.least(F.lit(nr - 1), j))  # lat clamp
     return i, j
-
-
-def cell_id_from_ij_cols(i: Column, j: Column, level: int) -> Column:
-    """Pack (i, j, level) into the Morton cell id — pure JVM expression."""
-    low = level - 1
-    top = F.shiftleft(F.shiftright(i, low), 2 * level - 2)
-    body = _part1by1_col(i.bitwiseAND(F.lit((1 << low) - 1))).bitwiseOR(
-        F.shiftleft(_part1by1_col(j), 1)
-    )
-    morton = top.bitwiseOR(body)
-    return F.shiftleft(F.lit(int(level)).cast("long"), 58).bitwiseOR(morton)
-
-
-def cell_encode_col(lat: Column, lon: Column, level: int) -> Column:
-    i, j = latlon_to_ij_cols(lat, lon, level)
-    return cell_id_from_ij_cols(i, j, level)
 
 
 def geocode_cols(df: DataFrame, spans_col: str = "spans") -> DataFrame:
@@ -170,17 +136,6 @@ def k_ring_pudf(k: int):
         return pd.Series([r.tolist() for r in rings])
 
     return _k_ring
-
-
-@pandas_udf(T.DoubleType())
-def haversine_pudf(
-    lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        grid.haversine_km(
-            lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy()
-        )
-    )
 
 
 def haversine_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:

@@ -224,7 +224,7 @@ def test_range_pruning_plan(spark, tmp_path):
         shim.shim_lon_col(F.col("doc_id")).alias("lon"),
     )
     tbl = pts.withColumn(
-        "cell_id", udfs.cell_encode_col(F.col("lat"), F.col("lon"), level)
+        "cell_id", udfs.cell_encode_pudf(F.col("lat"), F.col("lon"), F.lit(level))
     ).select("doc_id", "cell_id")
     # sorted layout => contiguous ids cluster into row groups
     tbl.repartition(1).sortWithinPartitions("cell_id").write.mode(

@@ -13,10 +13,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from hypothesis import given, settings
-from hypothesis import strategies as st
+import pytest
 
 from engine import geometry, grid, kernels
+
+hypothesis = pytest.importorskip("hypothesis")
+given, settings, st = hypothesis.given, hypothesis.settings, hypothesis.strategies
 
 
 # ---------------------------------------------------------------------------

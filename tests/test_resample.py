@@ -358,6 +358,39 @@ def test_warp_affine_minification_routes_through_pyramid(spark):
     assert max(stats3["fanout_xy"]) / 2 ** stats3["overview_levels"] <= 16.0
 
 
+def test_warp_affine_legal_max_fanout_stays_under_gather_backstop(spark):
+    """max_fanout=256 is legal, yet an isotropic 16x bilinear
+    minification at that level would gather 17x17 = 289 source tiles
+    into one output tile, past the 256-tile backstop. The planner must
+    pre-reduce once more instead — golden: one block_reduce('mean')
+    then the brute bilinear warp with coeffs halved."""
+    import numpy as np
+
+    from engine import fixtures, resample
+    from engine.pyramid import block_reduce
+
+    arr = fixtures.dem_arith(size=288)
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(arr, 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    coeffs = (16, 0, 8, 0, 16, 8)
+    stats: dict = {}
+    got = _plane(
+        resample.warp_affine(
+            tiles, 16, coeffs, (16, 16), method="bilinear",
+            max_fanout=256, stats=stats,
+        ),
+        16, 16, 16,
+    )
+    assert stats["overview_levels"] == 1
+    want = brute_warp_bilinear(
+        block_reduce(arr, "mean"), tuple(v / 2 for v in coeffs), (16, 16)
+    )
+    assert np.isfinite(want).all()
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
+
+
 # ---------------------------------------------------------------------------
 # warp_transform (general non-affine reprojection, round 4)
 # ---------------------------------------------------------------------------

@@ -52,17 +52,16 @@ def test_tile_size_invariance(spark):
     np.testing.assert_allclose(ref, kernels.focal_shannon(arr, 3, "circle"), rtol=1e-12, atol=1e-12)
 
 
-def test_rasterize_rejects_unknown_stat_every_strategy(spark):
-    """Every strategy validates stat/value_col up front — the packed
-    and salted merge kernels used to fall through to 'mean' on a typo'd
-    stat and return silently-zero rasters."""
+def test_rasterize_rejects_unknown_stat(spark):
+    """stat/value_col are validated up front — the merge kernel used to
+    fall through to 'mean' on a typo'd stat and return a silently-zero
+    raster."""
     docs = fixtures.documents_geo(spark, 50, seed=2)
     pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), 7, 16)
-    for strategy in ("packed", "agg", "salted"):
-        with pytest.raises(ValueError, match="unknown stat"):
-            tiling.rasterize(pts, 16, 7, stat="max", strategy=strategy)
-        with pytest.raises(ValueError, match="needs value_col"):
-            tiling.rasterize(pts, 16, 7, stat="sum", strategy=strategy)
+    with pytest.raises(ValueError, match="unknown stat"):
+        tiling.rasterize(pts, 16, 7, stat="max")
+    with pytest.raises(ValueError, match="needs value_col"):
+        tiling.rasterize(pts, 16, 7, stat="sum")
 
 
 def test_interspersion_registry_requires_class_domain(spark):
@@ -203,86 +202,77 @@ def test_halo_assembles_raster_windows(spark, wrap_nx):
     assert centers == {(tx, ty) for ty in range(ny) for tx in range(nx)}
 
 
-def brute_rasterize_count(pdf, level, T):
+def brute_rasterize(pdf, level, T, stat):
+    """Golden: per-tile (T, T) count/sum/mean of the points in pdf
+    (lat, lon, w), NaN where a pixel has no point."""
     ids = grid.cell_encode(pdf.lat.to_numpy(), pdf.lon.to_numpy(), level)
     tx, ty, ti, tj = grid.cell_to_tile(ids, T)
+    cnt, tot = {}, {}
+    for a, b, c, d, w in zip(tx, ty, ti, tj, pdf.w.to_numpy()):
+        cnt.setdefault((a, b), np.zeros((T, T)))[d, c] += 1
+        tot.setdefault((a, b), np.zeros((T, T)))[d, c] += w
     out = {}
-    for a, b, c, d in zip(tx, ty, ti, tj):
-        key = (a, b)
-        g = out.setdefault(key, np.zeros((T, T)))
-        g[d, c] += 1
+    for k, n in cnt.items():
+        with np.errstate(invalid="ignore"):
+            v = {"count": n, "sum": tot[k], "mean": tot[k] / n}[stat].copy()
+        v[n == 0] = np.nan
+        out[k] = v
     return out
 
 
-@pytest.mark.parametrize("strategy", ["agg", "salted", "packed"])
-def test_rasterize_matches_brute(spark, strategy):
-    level, T = 8, 16
+def zipf_points(spark, level, T):
+    """The Zipf-hotspot document fixture, encoded, with a value column."""
     docs = fixtures.documents_geo(spark, 2000, seed=42)
     pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), level, T)
-    tiles = tiling.rasterize(pts, T, level, stat="count", strategy=strategy, n_salts=4)
+    return pts.withColumn(
+        "w", (F.abs(F.xxhash64("doc_id")) % 7).cast("double") + 0.5
+    )
+
+
+def hot_tile_points(spark, level, T):
+    """Skewed input: 75% of the points in one 5° box inside a single
+    level-8 T=16 tile, the rest uniform; round-robin over 4 partitions
+    so the hot tile is merged from several map-side partials."""
+    rng = np.random.default_rng(11)
+    n, n_hot = 2000, 1500
+    lat = np.concatenate([rng.uniform(10, 15, n_hot), rng.uniform(-89, 89, n - n_hot)])
+    lon = np.concatenate([rng.uniform(5, 10, n_hot), rng.uniform(-180, 180, n - n_hot)])
+    w = rng.integers(0, 7, n) + 0.5
+    pdf = pd.DataFrame({"lat": lat, "lon": lon, "w": w})
+    return udfs.with_cell_and_tile(spark.createDataFrame(pdf).repartition(4), level, T)
+
+
+@pytest.mark.parametrize("stat", ["count", "sum", "mean"])
+@pytest.mark.parametrize("source", ["zipf", "hot_tile"])
+def test_rasterize_matches_brute(spark, source, stat):
+    level, T = 8, 16
+    make = {"zipf": zipf_points, "hot_tile": hot_tile_points}[source]
+    pts = make(spark, level, T)
+    tiles = tiling.rasterize(pts, T, level, stat=stat, value_col="w")
     got = {
         (r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64).reshape(T, T)
         for r in tiles.collect()
     }
-    pts_pdf = pts.select("lat", "lon").toPandas()
-    want = brute_rasterize_count(pts_pdf, level, T)
+    pts_pdf = pts.select("lat", "lon", "w").toPandas()
+    want = brute_rasterize(pts_pdf, level, T, stat)
+    if source == "hot_tile":
+        counts = brute_rasterize(pts_pdf, level, T, "count")
+        assert max(np.nansum(c) for c in counts.values()) >= 0.7 * len(pts_pdf)
     assert set(got) == set(want)
     for k in want:
-        g = got[k]
-        w = want[k].copy()
-        w[w == 0] = np.nan
-        np.testing.assert_array_equal(np.isnan(g), np.isnan(w))
-        np.testing.assert_array_equal(g[~np.isnan(g)], w[~np.isnan(w)])
+        np.testing.assert_array_equal(np.isnan(got[k]), np.isnan(want[k]))
+        np.testing.assert_allclose(got[k], want[k], rtol=1e-12, atol=0)
 
 
-def test_rasterize_strategies_agree_and_spans_survive(spark):
-    """t4 salted == unsalted; and the points df still carries spans
-    untouched through encode (span invariant on the operator chain)."""
+def test_encode_keeps_spans(spark):
+    """The points df carries spans untouched through geocode + encode
+    (span invariant on the operator chain that feeds rasterize)."""
     level, T = 8, 16
     docs = fixtures.documents_geo(spark, 1000, seed=1)
     pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), level, T)
-    # span invariant: encode did not touch spans
     orig = {r.doc_id: r.spans for r in docs.collect()}
     after = {r.doc_id: r.spans for r in pts.collect()}
     assert orig == after
-    a = tiling.rasterize(pts, T, level, strategy="agg").collect()
-    b = tiling.rasterize(pts, T, level, strategy="salted", n_salts=3).collect()
-    c = tiling.rasterize(pts, T, level, strategy="packed").collect()
-    ka = {(r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64) for r in a}
-    kb = {(r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64) for r in b}
-    kc = {(r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64) for r in c}
-    assert set(ka) == set(kb) == set(kc)
-    for k in ka:
-        np.testing.assert_array_equal(
-            np.nan_to_num(ka[k], nan=-1), np.nan_to_num(kb[k], nan=-1)
-        )
-        np.testing.assert_array_equal(
-            np.nan_to_num(ka[k], nan=-1), np.nan_to_num(kc[k], nan=-1)
-        )
-
-
-def test_rasterize_packed_sum_mean_match_agg(spark):
-    """packed == agg for the value-carrying stats too (sum/mean; the
-    packed partials carry a second float64 plane for value sums)."""
-    level, T = 8, 16
-    docs = fixtures.documents_geo(spark, 1500, seed=3)
-    pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), level, T)
-    pts = pts.withColumn(
-        "w", (F.abs(F.xxhash64("doc_id")) % 7).cast("double") + 0.5
-    )
-    for stat in ("sum", "mean"):
-        a = tiling.rasterize(pts, T, level, stat=stat, value_col="w",
-                             strategy="agg").collect()
-        b = tiling.rasterize(pts, T, level, stat=stat, value_col="w",
-                             strategy="packed").collect()
-        ka = {(r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64) for r in a}
-        kb = {(r.tile_x, r.tile_y): np.asarray(r.data, dtype=np.float64) for r in b}
-        assert set(ka) == set(kb)
-        for k in ka:
-            np.testing.assert_allclose(
-                np.nan_to_num(ka[k], nan=-1), np.nan_to_num(kb[k], nan=-1),
-                rtol=1e-12, atol=1e-12,
-            )
 
 
 def test_flagship_end_to_end(spark):
@@ -300,15 +290,15 @@ def test_flagship_end_to_end(spark):
     assert total_pts == 5000
 
 
-def test_rasterize_packed_plan_one_exchange(spark):
-    """The packed strategy's physical plan: exactly ONE exchange (the
+def test_rasterize_plan_one_exchange(spark):
+    """rasterize's physical plan: exactly ONE exchange (the
     tile-key merge of packed partials) — the map-side partial pass is
     shuffle-free — and the pre-UDF projection keeps every non-essential
     column (spans!) out of the Arrow crossing."""
     level, T = 8, 16
     docs = fixtures.documents_geo(spark, 200, seed=2)
     pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), level, T)
-    df = tiling.rasterize(pts, T, level, strategy="packed")
+    df = tiling.rasterize(pts, T, level)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     # the mapInPandas input carries only the coordinate cols (no spans)

@@ -1,6 +1,6 @@
 """Spark-side tests: fixture generator determinism + C1/C2/C6 parity
-between the JVM Column-expression path, the pandas-UDF path, and the
-NumPy reference in engine.grid."""
+of the JVM quantize expressions and the pandas UDFs with the NumPy
+reference in engine.grid."""
 
 from __future__ import annotations
 
@@ -49,7 +49,8 @@ def test_geocode_and_encode_parity(spark):
         udfs.cell_encode_pudf(F.col("lat"), F.col("lon"), F.lit(level)),
     )
     pdf = enc.orderBy("doc_id").toPandas()
-    # JVM expression == pandas UDF == direct NumPy
+    # with_cell_and_tile's cell_id == a direct pandas-UDF call == NumPy;
+    # the tile columns come from the JVM quantize expressions
     np.testing.assert_array_equal(pdf.cell_id.to_numpy(), pdf.cell_id_pudf.to_numpy())
     want = grid.cell_encode(pdf.lat.to_numpy(), pdf.lon.to_numpy(), level)
     np.testing.assert_array_equal(pdf.cell_id.to_numpy(), want)
@@ -72,7 +73,7 @@ def test_cell_decode_parent_kring_udfs(spark):
     pts = fixtures.query_points(100)
     df = spark.createDataFrame(pts)
     df = df.withColumn(
-        "cell_id", udfs.cell_encode_col(F.col("lat"), F.col("lon"), level)
+        "cell_id", udfs.cell_encode_pudf(F.col("lat"), F.col("lon"), F.lit(level))
     )
     df = df.withColumn("dec", udfs.cell_decode_pudf(F.col("cell_id")))
     df = df.withColumn(
