@@ -53,7 +53,7 @@ def local_map(
     2-D array``."""
     sub = tiles.filter(F.col("band").isin(list(in_bands)))
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = {
             r.band: np.asarray(r.data, dtype=np.float64).reshape(r.nrows, r.ncols)
             for r in pdf.itertuples(index=False)

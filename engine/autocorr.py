@@ -111,7 +111,7 @@ def moran_i(
 
     exchanged = tiling.halo_exchange(sub, T, 1, wrap_nx)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = tiling.assemble_padded(pdf, T, 1)
         if got is None:
             return pd.DataFrame(

@@ -151,7 +151,7 @@ def cost_path(
         raise ValueError(f"cap ({cap}) must be <= tile size T ({T})")
     exchanged = tiling.halo_exchange(tiles, T, cap, wrap_nx)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["dest_i", "dest_j", "n_steps", "total_cost", "sum_i", "sum_j"]
         got = tiling.assemble_padded(pdf, T, cap)
         if got is None:

@@ -289,7 +289,7 @@ def flow_accumulation(
             return np.zeros((nr, nc)) if weighted else None
         return np.asarray(w, dtype=np.float64).reshape(nr, nc)
 
-    def stage1(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         row = pdf.iloc[0]
         nr, nc = int(row.nrows), int(row.ncols)
         d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
@@ -526,7 +526,7 @@ def watershed(
         "tile_x", "tile_y", "nrows", "ncols", "data"
     ).localCheckpoint(eager=True)
 
-    def stage1(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         row = pdf.iloc[0]
         nr, nc = int(row.nrows), int(row.ncols)
         d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
@@ -1005,7 +1005,7 @@ def flow_length(
         "tile_x", "tile_y", "nrows", "ncols", "data"
     ).localCheckpoint(eager=True)
 
-    def stage1(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         row = pdf.iloc[0]
         nr, nc = int(row.nrows), int(row.ncols)
         d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)

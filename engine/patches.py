@@ -41,10 +41,6 @@ from pyspark.sql import functions as F
 
 from engine import kernels, tiling
 
-PATCH_ROWS_SCHEMA = (
-    "label long, klass double, area long, perimeter long"
-)
-
 
 # ---------------------------------------------------------------------------
 # per-tile CCL (pure NumPy, scipy-free two-pass union-find)
@@ -243,7 +239,7 @@ def build_patches(
     """
     exchanged = tiling.halo_exchange(tiles, T, 1, wrap_nx)
 
-    def stage1(key, pdf: pd.DataFrame):
+    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = tiling.assemble_padded(pdf, T, 1)
         if got is None:
             return pd.DataFrame(
@@ -348,7 +344,7 @@ def build_patches(
     # equivalence edges: group the two strips of each border, pair up
     strips = stage1_df.filter(F.col("kind") == "strip")
 
-    def border_edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def border_edges(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) != 2:
             return pd.DataFrame(columns=["a", "b"])
         # pair by SIDE marker, not tile identity: at wrap_nx == 1 both

@@ -117,7 +117,7 @@ def build_overview(
 
     quads = tiles.mapInPandas(reduce_quads, _QUAD_SCHEMA)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty, band = int(key[0]), int(key[1]), str(key[2])
         h = T // 2
         # parent sized to the ACTUAL covered extent (ragged edge tiles

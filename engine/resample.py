@@ -154,7 +154,7 @@ def upsample_bilinear(
     g = 1
     exchanged = tiling.halo_exchange(tiles, T, g)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = tiling.assemble_padded(pdf, T, g)
         if got is None:
             return pd.DataFrame(
@@ -449,7 +449,7 @@ def warp_affine(
         ["tile_x", "tile_y"],
     )
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         otx, oty = int(key[0]), int(key[1])
         if len(pdf) > _WARP_GATHER_CAP:
             # belt-and-braces executor-memory backstop (the
@@ -627,7 +627,7 @@ def warp_transform(
         ["tile_x", "tile_y"],
     )
 
-    def gather(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         otx, oty = int(key[0]), int(key[1])
         if len(pdf) and int(pdf["_fan"].iloc[0]) > max_gather_tiles:
             # executor-side guard: fires even when stats wasn't requested

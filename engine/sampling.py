@@ -35,8 +35,6 @@ Pinned semantics:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -141,10 +139,6 @@ def stratified_exact(
         .drop("_rk", "_n")
     )
     return out
-
-
-def exact_quota(n: int, frac: float) -> int:
-    return math.ceil(frac * n)
 
 
 def balanced_downsample(

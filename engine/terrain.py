@@ -33,8 +33,6 @@ in engine/spatial_queries.py):
 
 from __future__ import annotations
 
-from functools import partial
-
 import numpy as np
 
 __all__ = [
@@ -228,14 +226,6 @@ TERRAIN_KERNELS = {
     "roughness": focal_roughness,
     "curvature": focal_curvature,
 }
-
-
-def terrain_kernels(cellsize: float = 1.0) -> dict:
-    """TERRAIN_KERNELS with a non-unit cellsize baked in."""
-    return {
-        name: partial(fn, cellsize=cellsize)
-        for name, fn in TERRAIN_KERNELS.items()
-    }
 
 
 def focal_openness(arr: np.ndarray, r: int, shape: str = "square") -> np.ndarray:

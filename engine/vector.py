@@ -44,7 +44,8 @@ RINGS_SCHEMA = (
 )
 
 
-def _emit_segments(T: int, key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _emit_segments(T, key, pdf):
+    # unannotated: pyspark cannot resolve type hints through functools.partial
     got = tiling.assemble_padded(pdf, T, 1)
     if got is None:
         return pd.DataFrame(columns=["patch_id", "x0", "y0", "x1", "y1"])
@@ -85,7 +86,7 @@ def _emit_segments(T: int, key, pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.concat(out, ignore_index=True)
 
 
-def _chain_rings(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _chain_rings(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     """Directed segments of ONE patch → closed rings (deterministic:
     start from the lexicographically smallest unused segment; at pinch
     vertices pop outgoing segments in sorted order)."""
@@ -260,7 +261,7 @@ def contour_segments(
         tiles.filter(F.col("band") == band), T, 1, wrap_nx=None
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = tiling.assemble_padded(pdf, T, 1)
         if got is None:
             return pd.DataFrame(
@@ -541,7 +542,7 @@ def convex_hull_agg(
         f"{c} {'string' if c == group_col else 'double'}" for c in cols
     )
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from engine.overlay import _round_half_away
 
         hull = _monotone_chain(pdf[[x_col, y_col]].to_numpy(dtype=np.float64))

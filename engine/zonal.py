@@ -54,7 +54,7 @@ def zonal_stats(
     to 4 decimals (the oracle convention for float-hash stability)."""
     both = tiles.filter(F.col("band").isin([zone_band, value_band]))
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         by_band = {r.band: r for r in pdf.itertuples(index=False)}
         zr = by_band.get(zone_band)
         vr = by_band.get(value_band)
@@ -107,7 +107,7 @@ def cross_tab(
     """
     both = tiles.filter(F.col("band").isin([band_a, band_b]))
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         by_band = {r.band: r for r in pdf.itertuples(index=False)}
         ar = by_band.get(band_a)
         br = by_band.get(band_b)
@@ -514,7 +514,7 @@ def zonal_geometry(
     sub = tiles.filter(F.col("band") == zone_band)
     exchanged = tiling.halo_exchange(sub, T, 1, wrap_nx)
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         got = tiling.assemble_padded(pdf, T, 1)
         if got is None:
             return pd.DataFrame(columns=["zone", "a", "p"])

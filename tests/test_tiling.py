@@ -307,3 +307,24 @@ def test_rasterize_plan_one_exchange(spark):
     m = re.search(r"MapInPandas.*?\[([^\]]*)\]", plan)
     assert m is not None
     assert "spans" not in m.group(0)
+
+
+def test_grouped_map_plans_infer_eval_type(spark):
+    """Grouped-map functions carry type hints pyspark can read: building
+    rasterize's merge and a warp gather raises no "Cannot infer the eval
+    type from type hints" UserWarning."""
+    import warnings
+
+    from engine import resample
+
+    level, T = 8, 16
+    docs = fixtures.documents_geo(spark, 200, seed=2)
+    pts = udfs.with_cell_and_tile(udfs.geocode_cols(docs), level, T)
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(fixtures.dem_arith(size=32), 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        tiling.rasterize(pts, T, level)
+        resample.warp_affine(tiles, 16, (0.7, -0.4, 6.0, 0.4, 0.7, -3.0), (40, 56))
