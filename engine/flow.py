@@ -44,7 +44,10 @@ shipped at most TWICE; the fixpoint runs over border-cell ROWS only):
    ``(p, t)`` with ``p = succ^(2^k)`` and ``t = Σ E0 over ancestors at
    distance 1..2^k``; each round one aggregation join + one pointer
    self-join over EXIT ROWS ONLY (∝ tile perimeter, never the raster),
-   O(log chain) rounds.
+   O(log chain) rounds. The rounds run through ``chains.iterate``, as
+   do the watershed, flow-length and Strahler fixpoints below: one
+   checkpoint job per round that also counts the pending rows, and a
+   ``RuntimeError`` naming the operator past ``chains.MAX_ROUNDS``.
 3. final paint: ``arrive(b) = Σ_{link(o)=b} S(o)`` per border-in cell,
    joined back to the direction planes (second and last plane
    movement), and ONE applyInPandas re-solve with the fully resolved
@@ -60,10 +63,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from engine import tiling
+from engine import chains, tiling
 
 __all__ = [
     "D8_OFFSETS",
@@ -224,37 +227,20 @@ def _alias_cellkeys(lj: int, li: int, nr: int, nc: int) -> list[int]:
     return [int((kj << 16) | ki) for kj in jkeys for ki in ikeys]
 
 
-def _remap_pending(want: np.ndarray, m_ok: np.ndarray, vals: list[np.ndarray],
-                   ctx: str) -> list[np.ndarray]:
-    """Sorted-okey searchsorted remap shared by the paint stages:
-    resolves each pending okey in ``want`` against the (unsorted) map
-    ``m_ok -> vals[k]``, raising loudly on any unresolved okey — a
-    silent clip mismatch would paint a wrong value (r3 VERDICT)."""
-    order = np.argsort(m_ok)
-    m_ok = m_ok[order]
-    pos = np.clip(np.searchsorted(m_ok, want), 0, len(m_ok) - 1)
-    if not (m_ok[pos] == want).all():
-        missing = np.unique(want[m_ok[pos] != want])[:5]
-        raise RuntimeError(f"{ctx}: unresolved okeys: {missing}")
-    return [v[order][pos] for v in vals]
-
-
 def flow_accumulation(
     dir_tiles: DataFrame,
     T: int,
     level: int = 0,
     wrap_nx: int | None = None,
-    max_rounds: int = 64,
     stats: dict | None = None,
     weight_tiles: DataFrame | None = None,
     band: str = "flowacc",
 ) -> DataFrame:
     """D8 flow accumulation over 'flowdir' tiles (tiles schema out,
     band 'flowacc'). Planes ship at most twice; the fixpoint is
-    pointer doubling over exit-cell rows — see the module docstring.
-    ``max_rounds`` bounds log2(longest border chain) (64 covers any
-    chain). ``stats`` (optional dict) records {'rounds': n} for
-    plan-shape tests.
+    pointer doubling over exit-cell rows (``chains.iterate``) — see
+    the module docstring. ``stats`` (optional dict) records
+    {'rounds': n} for plan-shape tests.
 
     ``weight_tiles`` switches to WEIGHTED accumulation (upstream sum of
     a weight raster — e.g. runoff/precipitation routing): each cell
@@ -377,33 +363,23 @@ def flow_accumulation(
             "no edge row — wrap_nx mismatch between flow_direction and "
             "flow_accumulation, or direction tiles pointing into nodata"
         )
-    state = (
-        links.join(edges, ["tile_x", "tile_y", "cellkey"])
-        .select(
-            "okey",
-            F.col("flow").alias("e"),
-            F.lit(0.0).alias("t"),
-            F.when(F.col("val") < 0, -(F.col("val") + 1)).alias("p"),
-        )
-        .localCheckpoint(eager=True)
+    state = links.join(edges, ["tile_x", "tile_y", "cellkey"]).select(
+        "okey",
+        F.col("flow").alias("e"),
+        F.lit(0.0).alias("t"),
+        F.when(F.col("val") < 0, -(F.col("val") + 1)).alias("p"),
     )
 
-    # Wyllie doubling: after k rounds t = Σ E0 over ancestors at
+    # Wyllie push doubling: after k rounds t = Σ E0 over ancestors at
     # distance 1..2^k and p = succ^(2^k) (null once past the chain end)
-    rounds = 0
-    for _ in range(max_rounds):
-        if state.filter(F.col("p").isNotNull()).isEmpty():
-            break
-        rounds += 1
+    def double(state: DataFrame) -> DataFrame:
         recv = (
             state.filter(F.col("p").isNotNull())
             .groupBy(F.col("p").alias("okey"))
             .agg(F.sum(F.col("e") + F.col("t")).alias("add"))
         )
-        nxt = state.select(
-            F.col("okey").alias("k2"), F.col("p").alias("p2")
-        )
-        state = (
+        nxt = state.select(F.col("okey").alias("k2"), F.col("p").alias("p2"))
+        return (
             state.join(recv, "okey", "left")
             .join(nxt, F.col("p") == F.col("k2"), "left")
             .select(
@@ -411,12 +387,11 @@ def flow_accumulation(
                 (F.col("t") + F.coalesce("add", F.lit(0.0))).alias("t"),
                 F.col("p2").alias("p"),
             )
-            .localCheckpoint(eager=True)
         )
-    else:
-        raise RuntimeError(
-            f"flow_accumulation doubling did not resolve in {max_rounds} rounds"
-        )
+
+    state, rounds = chains.iterate(
+        state, double, F.col("p").isNotNull(), "flow_accumulation"
+    )
     if stats is not None:
         stats["rounds"] = rounds
 
@@ -491,7 +466,6 @@ def watershed(
     T: int,
     level: int = 0,
     wrap_nx: int | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """Basin labeling: every valid cell gets the id of the PIT its D8
     path terminates at (pit id = the pit cell's global index
@@ -509,12 +483,12 @@ def watershed(
        classifications (incl. last-row/col sentinel aliases, so a
        ragged neighbor's link can join them without knowing our dims).
     2. links ⋈ edges gives the chain table okey → (gid | next okey);
-       pointer-jump the CHAIN TABLE (rows ∝ border-exit cells, not
-       cells) with one self-join per round, O(log chain) rounds,
-       localCheckpoint-bounded lineage.
+       ``chains.follow`` pointer-jumps the CHAIN TABLE (rows ∝
+       border-exit cells, not cells) with one self-join per round,
+       O(log chain) rounds, localCheckpoint-bounded lineage.
     3. ONE paint join maps each tile's pending okeys to final gids
-       (searchsorted remap next to the payload — the patches-relabel
-       pattern).
+       (``chains.remap`` next to the payload, as the patch relabel
+       does).
 
     Precision note: output planes are float64 TILES_SCHEMA, exact while
     gid < 2^53 (raster height < 2^21 rows); the internal pipeline is
@@ -597,35 +571,11 @@ def watershed(
     edges = s1.filter(F.col("kind") == "edge").select(
         "tile_x", "tile_y", "cellkey", "val"
     )
-    # chain table: okey -> val (>=0 final gid; <0 pending on -(val+1))
-    chain = links.join(edges, ["tile_x", "tile_y", "cellkey"]).select(
-        "okey", "val"
-    ).localCheckpoint(eager=True)
-
-    # pointer-jump the chain: follow pending rows one hop per round
-    # (each hop doubles resolved prefixes — O(log chain) rounds)
-    for _ in range(max_rounds):
-        pending = chain.filter(F.col("val") < 0)
-        if pending.isEmpty():
-            break
-        nxt = chain.select(
-            F.col("okey").alias("nokey"), F.col("val").alias("nval")
-        )
-        chain = (
-            chain.withColumn(
-                "ptr", F.when(F.col("val") < 0, -(F.col("val") + 1))
-            )
-            .join(nxt, F.col("ptr") == F.col("nokey"), "left")
-            .select(
-                "okey",
-                F.when(F.col("val") >= 0, F.col("val"))
-                .otherwise(F.coalesce("nval", "val"))
-                .alias("val"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        raise RuntimeError(f"watershed chain did not resolve in {max_rounds} rounds")
+    # chain table: okey -> val (>=0 final gid; <0 pending on -(val+1)),
+    # resolved by pull doubling — O(log chain) rounds over exit rows
+    chain, _ = chains.follow(
+        links.join(edges, ["tile_x", "tile_y", "cellkey"]), (), "watershed"
+    )
 
     # paint: per-tile pending okeys -> final gid, remapped next to the
     # payload. chain rows ARE exactly the link okeys (links ⋈ edges
@@ -656,23 +606,9 @@ def watershed(
                 data[resolved] = plane[resolved].astype(np.float64)
                 pend = (plane < 0) & (plane != -(2**62))
                 if pend.any():
-                    m = row.m if row.m is not None else []
-                    pairs = [
-                        (e["okey"], e["val"]) if isinstance(e, dict) else (e[0], e[1])
-                        for e in m
-                    ]
-                    if not pairs:
-                        raise RuntimeError(
-                            "watershed paint: tile "
-                            f"({row.tile_x},{row.tile_y}) has pending "
-                            "cells but an empty okey map"
-                        )
-                    m_ok = np.array([p[0] for p in pairs], dtype=np.int64)
-                    m_v = np.array([p[1] for p in pairs], dtype=np.int64)
-                    (vv,) = _remap_pending(
-                        -(plane[pend] + 1), m_ok, [m_v],
-                        "watershed paint: tile "
-                        f"({row.tile_x},{row.tile_y})",
+                    (vv,) = chains.remap(
+                        -(plane[pend] + 1), row.m,
+                        f"watershed paint: tile ({row.tile_x},{row.tile_y})",
                     )
                     data[pend] = vv.astype(np.float64)
                 out.append({
@@ -701,7 +637,6 @@ def strahler(
     threshold: float = 8.0,
     level: int = 0,
     wrap_nx: int | None = None,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """Strahler stream order over the extracted stream network (tiles
     schema out, band 'strahler').
@@ -804,7 +739,8 @@ def strahler(
         joined.mapInPandas(extract, "gid long, succ long")
         .localCheckpoint(eager=True)
     )
-    if edges.isEmpty():
+    n_net = edges.count()
+    if n_net == 0:
         # no network: all-zero plane over valid cells
         return dirs.mapInPandas(
             lambda it: (
@@ -825,46 +761,35 @@ def strahler(
     # jump tables P_r = succ^(2^r), built once by pointer doubling and
     # reused by every level's closure; chains are at most n cells, so
     # ceil(log2 n) tables always cover the longest path
-    n_net = edges.count()
     n_jumps = max(1, int(np.ceil(np.log2(max(n_net, 2)))))
-    jumps = [
-        edges.select("gid", F.col("succ").alias("p")).localCheckpoint(
-            eager=True
-        )
-    ]
+    jumps = [chains.checkpoint(edges.select("gid", F.col("succ").alias("p")))]
     for _ in range(n_jumps - 1):
         prev = jumps[-1]
         nxt = prev.select(F.col("gid").alias("k2"), F.col("p").alias("p2"))
-        jumps.append(
+        jumps.append(chains.checkpoint(
             prev.join(nxt, prev.p == F.col("k2"), "left")
             .select("gid", F.col("p2").alias("p"))
-            .localCheckpoint(eager=True)
-        )
+        ))
 
     preds = edges.filter(F.col("succ").isNotNull()).select(
         F.col("succ").alias("dst"), F.col("gid").alias("src")
     )
 
-    # level loop: S_1 = network (implicit); per level find the
-    # junctions fed by >= 2 S_k inflows, then mark their downstream
-    # closure (idempotent, so one join per jump table) -> S_{k+1}
-    level_sets: list[DataFrame] = []
-    tk: DataFrame | None = None  # None = all network cells
-    for _ in range(max_rounds):
-        pk = (
-            preds
-            if tk is None
-            else preds.join(tk, preds.src == tk.gid, "left_semi")
-        )
-        junc = (
+    def junctions(pk: DataFrame) -> DataFrame:
+        return (
             pk.groupBy("dst")
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") >= 2)
             .select(F.col("dst").alias("gid"))
-            .localCheckpoint(eager=True)
         )
-        if junc.isEmpty():
-            break
+
+    # level loop: S_1 = network; the state is the junction set fed by
+    # >= 2 S_k inflows, and a round marks its downstream closure
+    # (idempotent, so one join per jump table) -> S_{k+1}, then finds
+    # the next level's junctions. No junctions left = max order reached
+    level_sets: list[DataFrame] = []
+
+    def next_level(junc: DataFrame) -> DataFrame:
         m = junc
         for Pr in jumps:
             add = (
@@ -872,13 +797,11 @@ def strahler(
                 .filter(F.col("p").isNotNull())
                 .select(F.col("p").alias("gid"))
             )
-            m = m.unionByName(add).distinct().localCheckpoint(eager=True)
-        tk = m
+            m = chains.checkpoint(m.unionByName(add).distinct())
         level_sets.append(m)
-    else:
-        raise RuntimeError(
-            f"strahler exceeded {max_rounds} order levels"
-        )
+        return junctions(preds.join(m, preds.src == m.gid, "left_semi"))
+
+    chains.iterate(junctions(preds), next_level, F.lit(True), "strahler")
 
     # ord(c) = 1 + number of level sets containing c
     cell_ord = edges.select("gid")
@@ -960,7 +883,6 @@ def flow_length(
     T: int,
     level: int = 0,
     wrap_nx: int | None = None,
-    max_rounds: int = 64,
     stats: dict | None = None,
 ) -> DataFrame:
     """Downstream flow length: for every valid cell, the along-path
@@ -991,13 +913,13 @@ def flow_length(
        counts).
     2. links ⋈ edges condenses the raster to chain rows
        ``okey → (dc, dd, pit | next okey)`` with dc/dd = the exit step
-       plus the destination entry cell's in-tile counts; Wyllie
-       pointer doubling with carried sums resolves every chain in
-       O(log chain) rounds — one self-join per round over exit rows
-       only, localCheckpoint-bounded lineage.
+       plus the destination entry cell's in-tile counts;
+       ``chains.follow`` (Wyllie pointer doubling with carried sums)
+       resolves every chain in O(log chain) rounds — one self-join per
+       round over exit rows only, localCheckpoint-bounded lineage.
     3. ONE paint join maps pending okeys to final (dc, dd) next to the
-       payload (the watershed remap, incl. its loud unresolved-okey
-       guard) and emits both bands.
+       payload (``chains.remap``, loud on an unresolved okey) and emits
+       both bands.
     """
     if T >= 0xFFFF:
         raise ValueError("tile size must stay below the 0xFFFF sentinel")
@@ -1094,48 +1016,18 @@ def flow_length(
         "tile_x", "tile_y", "cellkey", "val", "dc", "dd"
     )
     # chain rows: okey -> (counts incl. the exit step + the entry
-    # cell's in-tile counts; val >= 0 resolved / -(next okey + 1))
-    chain = links.join(edges, ["tile_x", "tile_y", "cellkey"]).select(
-        "okey",
-        "val",
-        (F.col("ldc") + F.col("dc")).alias("dc"),
-        (F.col("ldd") + F.col("dd")).alias("dd"),
-    ).localCheckpoint(eager=True)
-
-    rounds = 0
-    for _ in range(max_rounds):
-        pending = chain.filter(F.col("val") < 0)
-        if pending.isEmpty():
-            break
-        rounds += 1
-        nxt = chain.select(
-            F.col("okey").alias("nokey"), F.col("val").alias("nval"),
-            F.col("dc").alias("ndc"), F.col("dd").alias("ndd"),
-        )
-        resolved = F.col("val") >= 0
-        chain = (
-            chain.withColumn(
-                "ptr", F.when(~resolved, -(F.col("val") + 1))
-            )
-            .join(nxt, F.col("ptr") == F.col("nokey"), "left")
-            .select(
-                "okey",
-                F.when(resolved, F.col("val"))
-                .otherwise(F.coalesce("nval", "val"))
-                .alias("val"),
-                F.when(resolved, F.col("dc"))
-                .otherwise(F.col("dc") + F.coalesce("ndc", F.lit(0)))
-                .alias("dc"),
-                F.when(resolved, F.col("dd"))
-                .otherwise(F.col("dd") + F.coalesce("ndd", F.lit(0)))
-                .alias("dd"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    else:
-        raise RuntimeError(
-            f"flow_length chain did not resolve in {max_rounds} rounds"
-        )
+    # cell's in-tile counts; val >= 0 resolved / -(next okey + 1)),
+    # resolved by pull doubling with the counts carried
+    chain, rounds = chains.follow(
+        links.join(edges, ["tile_x", "tile_y", "cellkey"]).select(
+            "okey",
+            "val",
+            (F.col("ldc") + F.col("dc")).alias("dc"),
+            (F.col("ldd") + F.col("dd")).alias("dd"),
+        ),
+        ("dc", "dd"),
+        "flow_length",
+    )
     if stats is not None:
         stats["rounds"] = rounds
 
@@ -1173,26 +1065,9 @@ def flow_length(
                 diagp = np.where(invalid, np.nan, pdiag)
                 pend = (plane < 0) & ~invalid
                 if pend.any():
-                    m = row.m if row.m is not None else []
-                    pairs = [
-                        (e["okey"], e["dc"], e["dd"])
-                        if isinstance(e, dict)
-                        else (e[0], e[1], e[2])
-                        for e in m
-                    ]
-                    if not pairs:
-                        raise RuntimeError(
-                            "flow_length paint: tile "
-                            f"({row.tile_x},{row.tile_y}) has pending "
-                            "cells but an empty okey map"
-                        )
-                    m_ok = np.array([p[0] for p in pairs], dtype=np.int64)
-                    m_dc = np.array([p[1] for p in pairs], dtype=np.int64)
-                    m_dd = np.array([p[2] for p in pairs], dtype=np.int64)
-                    vdc, vdd = _remap_pending(
-                        -(plane[pend] + 1), m_ok, [m_dc, m_dd],
-                        "flow_length paint: tile "
-                        f"({row.tile_x},{row.tile_y})",
+                    vdc, vdd = chains.remap(
+                        -(plane[pend] + 1), row.m,
+                        f"flow_length paint: tile ({row.tile_x},{row.tile_y})",
                     )
                     card[pend] = card[pend] + vdc
                     diagp[pend] = diagp[pend] + vdd

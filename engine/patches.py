@@ -15,10 +15,12 @@ Distributed W14 design:
 2. tiles exchange 1-deep halos so per-tile perimeter contributions are
    exact; each tile also emits its boundary label/class strips keyed by
    the shared border;
-3. equivalence edges from border strips → union-find. Small edge sets
-   resolve driver-side; past ``driver_edge_limit`` the engine switches
-   to the distributed fixpoint (iterative min-label propagation via
-   self-joins — O(log diameter) rounds);
+3. equivalence edges from border strips → connected components. The
+   seam-edge count is bounded by ``n_tiles · 2T``; under
+   ``_DRIVER_SEAM_CELLS`` the edges resolve driver-side with the
+   vectorized ``connected_components_numpy``, past it through the
+   distributed fixpoint ``chains.components`` (min-label propagation
+   with root hooking and pointer jumping);
 4. patch table = per-root aggregation of per-tile partials.
 
 Edge-corrected stats reduce to focal sums of per-cell planes (verified
@@ -39,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine import kernels, tiling
+from engine import chains, kernels, tiling
 
 
 # ---------------------------------------------------------------------------
@@ -111,82 +113,6 @@ def perimeter_contrib(padded: np.ndarray, g: int = 1) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# equivalence resolution: driver union-find or distributed fixpoint
-# ---------------------------------------------------------------------------
-
-def _driver_union_find(edges: pd.DataFrame, nodes: np.ndarray) -> pd.DataFrame:
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in zip(edges["a"].to_numpy(), edges["b"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return pd.DataFrame(
-        {"label": nodes, "root": [find(int(n)) for n in nodes]}
-    )
-
-
-def _distributed_min_label(
-    spark: SparkSession, edges_df: DataFrame, nodes_df: DataFrame, max_rounds: int = 30
-) -> DataFrame:
-    """Min-label propagation WITH pointer jumping: each round takes the
-    min over neighbors' roots AND composes the root map with itself
-    (root <- root[root]), so chains halve per round and convergence is
-    O(log diameter) — plain neighbor-min alone needs O(diameter) rounds
-    and a 30-round cap would silently split any patch spanning a longer
-    tile chain. Non-convergence raises. edges: (a, b); nodes: (label)."""
-    und = edges_df.union(edges_df.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    lab = nodes_df.select(F.col("label"), F.col("label").alias("root"))
-    for _ in range(max_rounds):
-        nb_min = (
-            und.join(lab, und.a == lab.label)
-            .groupBy(F.col("b").alias("label"))
-            .agg(F.min("root").alias("nb_root"))
-        )
-        new = (
-            lab.join(nb_min, "label", "left")
-            .select(
-                "label",
-                F.least(F.col("root"), F.coalesce("nb_root", "root")).alias("root"),
-            )
-        )
-        # pointer jump: roots are always node labels, so root's own
-        # current root is defined — one self-join halves every chain
-        jump = new.select(F.col("label").alias("_l"), F.col("root").alias("_r"))
-        new = (
-            new.join(jump, new.root == F.col("_l"), "left")
-            .select(
-                "label",
-                F.least(F.col("root"), F.coalesce("_r", "root")).alias("root"),
-            )
-        )
-        new = new.localCheckpoint()  # truncate lineage each round
-        changed = (
-            new.join(lab.withColumnRenamed("root", "old"), "label")
-            .filter(F.col("root") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        lab = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"_distributed_min_label did not converge in {max_rounds} "
-            "rounds — seam graph deeper than 2^rounds?"
-        )
-    return lab
-
-
-# ---------------------------------------------------------------------------
 # W14: the full distributed patch build
 # ---------------------------------------------------------------------------
 
@@ -207,15 +133,16 @@ _LABEL_STAGE_SCHEMA = (
 # is); exact in float64 for gy < 2^21 (far beyond any tile grid here)
 _GIDX_STRIDE = np.int64(1) << np.int64(32)
 
+# seam edges the driver path may collect: past this bound on
+# n_tiles · 2T the equivalence edges resolve distributed
+_DRIVER_SEAM_CELLS = 2_000_000
+
 
 def build_patches(
     tiles: DataFrame,
     T: int,
     spark: SparkSession,
     wrap_nx: int | None = None,
-    driver_edge_limit: int = 2_000_000,
-    force_distributed: bool = False,
-    driver_tile_limit: int = 2048,
 ):
     """tiles (band='class') → (label_tiles, patch_table).
 
@@ -224,18 +151,18 @@ def build_patches(
     tile-size-invariant, and SQL-replicable) float64-encoded with NaN
     at nodata. patch_table: DataFrame (patch_id, klass, area, perimeter).
 
-    No step materializes per-patch state on the driver: equivalence
-    edges resolve driver-side only under ``driver_edge_limit`` and the
-    label→canonical remap is a per-tile label-list equi-join (labels
-    per tile ≪ pixels per tile), never a broadcast of the full map.
+    No step materializes per-patch state on the driver: the driver
+    path holds only seam-edge endpoints, and the label→canonical remap
+    is a per-tile label-list equi-join (labels per tile ≪ pixels per
+    tile), never a broadcast of the full map.
 
-    Scale default (round 5, VERDICT r4): past ``driver_tile_limit``
-    tiles the distributed min-label path is chosen UP FRONT — seam-edge
-    volume grows with the tile-grid perimeter surface, so a big raster
-    would otherwise funnel ~``driver_edge_limit`` pandas rows through
-    one process by default; small rasters keep the driver union-find
-    (cheaper than O(log diameter) join rounds), and the edge-count job
-    is skipped entirely on the big path.
+    The stitching path is chosen up front from the bound ``n_tiles · 2T``
+    on the seam-edge count (each tile owns its right and bottom border):
+    under ``_DRIVER_SEAM_CELLS`` the edges are collected and resolved
+    by ``connected_components_numpy`` (cheaper than O(log diameter)
+    join rounds), past it by ``chains.components`` — so no edge-count
+    job runs and a big raster never funnels its seams through one
+    process.
     """
     exchanged = tiling.halo_exchange(tiles, T, 1, wrap_nx)
 
@@ -380,25 +307,32 @@ def build_patches(
     )
     attrs.persist()
 
-    use_dist = force_distributed
-    if not use_dist:
-        n_tiles = attrs.select("tile_x", "tile_y").distinct().count()
-        use_dist = n_tiles > driver_tile_limit
-    if not use_dist:
-        use_dist = edges_df.count() > driver_edge_limit
-    if use_dist:
-        nodes = attrs.select("label").distinct()
-        mapping = _distributed_min_label(spark, edges_df, nodes)
+    n_tiles = stage1_df.filter(F.col("kind") == "plane").count()
+    if n_tiles * 2 * T > _DRIVER_SEAM_CELLS:
+        mapping = chains.components(
+            edges_df.localCheckpoint(eager=True), attrs.select("label"),
+            "build_patches",
+        ).select(F.col("node").alias("label"), "root")
     else:
-        edges_pd = edges_df.toPandas()
-        nodes = attrs.select("label").distinct().toPandas()["label"].to_numpy()
+        # compact the seam endpoints to 0..k-1: the driver holds
+        # O(edges), and labels on no seam keep themselves as root below
+        e = edges_df.toPandas()
+        ends, idx = np.unique(
+            np.concatenate([e["a"], e["b"]]).astype(np.int64),
+            return_inverse=True,
+        )
+        m = len(e)
+        roots = ends[connected_components_numpy(idx[:m], idx[m:], len(ends))]
         mapping = spark.createDataFrame(
-            _driver_union_find(edges_pd, nodes), "label long, root long"
+            pd.DataFrame({"label": ends, "root": roots}), "label long, root long"
         )
 
+    # labels on no seam are absent from the driver mapping: own root
+    merged = attrs.join(mapping, "label", "left").withColumn(
+        "root", F.coalesce("root", "label")
+    )
     # canonical patch id = the component's minimum global cell index —
     # deterministic across tile sizes and replicable by the SQL oracle
-    merged = attrs.join(mapping, "label")
     canon = merged.groupBy("root").agg(F.min("min_gidx").alias("patch_id"))
     # eager checkpoint (per-patch rows, small): makes the returned
     # table self-contained so the stage caches can be released below
@@ -418,12 +352,9 @@ def build_patches(
     # labels (≪ its pixels) equi-join the label→canonical map, collect
     # into one small list per tile, and the dense remap runs in NumPy
     # next to the plane payload
-    lab2canon = mapping.join(canon, "root").select(
-        "label", F.col("patch_id").alias("canon")
-    )
     tile_map = (
-        attrs.select("tile_x", "tile_y", "label")
-        .join(lab2canon, "label")
+        merged.join(canon, "root")
+        .select("tile_x", "tile_y", "label", F.col("patch_id").alias("canon"))
         .groupBy("tile_x", "tile_y")
         .agg(F.collect_list(F.struct("label", "canon")).alias("m"))
     )
@@ -450,36 +381,13 @@ def build_patches(
                 data = np.full(len(lab), np.nan)
                 pos_mask = lab >= 0
                 if pos_mask.any():
-                    if row.m is None or not len(row.m):
-                        # attrs cover every provisional label, so a tile
-                        # with labels but no map is an internal bug —
-                        # NaN-ing it would silently erase patches
-                        raise RuntimeError(
-                            "build_patches relabel: tile "
-                            f"({row.tile_x},{row.tile_y}) has labels but "
-                            "no label→canonical map"
-                        )
-                    pairs = [
-                        (e["label"], e["canon"]) if isinstance(e, dict) else (e[0], e[1])
-                        for e in row.m
-                    ]
-                    m_lab = np.array([p[0] for p in pairs], dtype=np.int64)
-                    m_can = np.array([p[1] for p in pairs], dtype=np.int64)
-                    order = np.argsort(m_lab)
-                    m_lab, m_can = m_lab[order], m_can[order]
-                    want = lab[pos_mask]
-                    pos = np.clip(
-                        np.searchsorted(m_lab, want), 0, len(m_lab) - 1
+                    # attrs cover every provisional label, so a label
+                    # missing from the map is an internal bug
+                    (can,) = chains.remap(
+                        lab[pos_mask], row.m,
+                        f"build_patches relabel: tile ({row.tile_x},{row.tile_y})",
                     )
-                    if not (m_lab[pos] == want).all():
-                        # a clipped mismatch would paint a NEIGHBORING
-                        # patch's canonical id — fail loudly instead
-                        missing = np.unique(want[m_lab[pos] != want])[:5]
-                        raise RuntimeError(
-                            "build_patches relabel: unmapped labels in "
-                            f"tile ({row.tile_x},{row.tile_y}): {missing}"
-                        )
-                    data[pos_mask] = m_can[pos].astype(np.float64)
+                    data[pos_mask] = can.astype(np.float64)
                 out.append(
                     {
                         "tile_x": row.tile_x, "tile_y": row.tile_y,
@@ -614,13 +522,10 @@ def apply_patch_stats(
     spark: SparkSession,
     stats: list[str] | None = None,
     wrap_nx: int | None = None,
-    force_distributed: bool = False,
 ) -> DataFrame:
     """Full W11–W13 pipeline: W14 build → derived planes → focal."""
     stats = stats or list(PATCH_STAT_KERNELS)
-    label_tiles, patch_table = build_patches(
-        class_tiles, T, spark, wrap_nx, force_distributed=force_distributed
-    )
+    label_tiles, patch_table = build_patches(class_tiles, T, spark, wrap_nx)
     planes = derive_patch_planes(label_tiles, patch_table, spark)
     by_band: dict[str, dict] = {}
     for s in stats:

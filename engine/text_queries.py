@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine import shim
+from engine import chains, shim
 
 _T = lambda spark, sf_dir, name: spark.read.parquet(f"{sf_dir}/{name}.parquet")  # noqa: E731
 
@@ -645,10 +645,11 @@ def q37_neardup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     (unmatched) docs are not emitted (pinned).
 
     Scale design: distributed min-label propagation over MATCH-GRAPH
-    rows only (never the corpus) — per round, one groupBy over the
-    edge list moves labels one hop, then one label-of-label join
-    doubles the resolved distance (the watershed/flow pointer-jump
-    pattern), localCheckpoint-bounded lineage, O(log diameter) rounds.
+    rows only (never the corpus) through ``chains.components``, the
+    patch-stitching fixpoint — per round, one groupBy over the edge
+    list moves labels one hop, each node's old root adopts the new
+    minimum, and one label-of-label join jumps the pointers;
+    localCheckpoint-bounded lineage.
     The oracle replays plain min-label Jacobi sweeps in a recursive
     CTE (the fixture graph's diameter is small; sweeps are pinned with
     2x margin)."""
@@ -656,59 +657,19 @@ def q37_neardup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     return neardup_clusters(pairs)
 
 
-def neardup_clusters(pairs: DataFrame, max_rounds: int = 32) -> DataFrame:
+def neardup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components + canonical selection over an undirected
     match-pair DataFrame (doc_a, doc_b) — the reusable core of q37
-    (pinned semantics there). Tested on synthetic chain graphs
-    (multi-hop convergence) in tests/test_text_scale.py."""
-    edges = (
-        pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    (pinned semantics there), run by ``chains.components``. Tested on
+    synthetic chain graphs (multi-hop convergence) in
+    tests/test_text_scale.py."""
+    edges = pairs.select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    ).localCheckpoint(eager=True)
+    docs = edges.select(F.col("a").alias("doc")).union(edges.select("b")).distinct()
+    labels = chains.components(edges, docs, "neardup_clusters").select(
+        F.col("node").alias("doc"), F.col("root").alias("lab")
     )
-    labels = (
-        edges.select(F.col("doc_a").alias("doc"))
-        .distinct()
-        .withColumn("lab", F.col("doc"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nb = (
-            edges.join(
-                labels.select(
-                    F.col("doc").alias("_nb"), F.col("lab").alias("nlab")
-                ),
-                F.col("doc_b") == F.col("_nb"),
-            )
-            .groupBy(F.col("doc_a").alias("doc"))
-            .agg(F.min("nlab").alias("nlab"))
-        )
-        new = labels.join(nb, "doc", "left").select(
-            "doc",
-            F.least(F.col("lab"), F.coalesce("nlab", F.col("lab"))).alias("lab"),
-        )
-        jump = new.select(F.col("doc").alias("_k"), F.col("lab").alias("lab2"))
-        new = (
-            new.join(jump, new.lab == F.col("_k"), "left")
-            .select("doc", F.coalesce("lab2", "lab").alias("lab"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "doc")
-            .filter(F.col("n.lab") != F.col("o.lab"))
-        )
-        labels = new
-        if changed.isEmpty():
-            break
-    else:
-        raise RuntimeError(
-            f"neardup clustering did not converge in {max_rounds} rounds"
-        )
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "lab").select(
         F.col("doc").alias("doc_id"),

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from engine import fixtures, kernels, patches, tiling
+from engine import chains, fixtures, kernels, patches, tiling
 
 
 # --- independent global CCL via BFS -----------------------------------------
@@ -135,12 +135,14 @@ def test_label_tile_matches_bfs():
         assert mapping.setdefault(a, b) == b
 
 
-@pytest.mark.parametrize("force_distributed", [False, True])
-def test_build_patches_matches_global(spark, raster, brute, force_distributed):
+@pytest.mark.parametrize("distributed", [False, True])
+def test_build_patches_matches_global(spark, raster, brute, distributed, monkeypatch):
     lab, n, area, perim, klass = brute
     T = 16
+    if distributed:
+        monkeypatch.setattr(patches, "_DRIVER_SEAM_CELLS", 0)
     label_tiles, patch_table = patches.build_patches(
-        tiles_df(spark, raster, T), T, spark, force_distributed=force_distributed
+        tiles_df(spark, raster, T), T, spark
     )
     pt = patch_table.toPandas()
     assert len(pt) == n, f"patch count {len(pt)} != {n}"
@@ -214,7 +216,7 @@ def test_build_patches_wrap_single_tile_column(spark):
     assert len(pt2.toPandas()) == 2
 
 
-def test_build_patches_many_patches_distributed(spark):
+def test_build_patches_many_patches_distributed(spark, monkeypatch):
     """Scale guard: the fully-distributed W14 path (fixpoint equivalence
     + join-based relabel) on a raster with >10^5 patches — nothing on
     this path may materialize per-patch state on the driver."""
@@ -223,8 +225,9 @@ def test_build_patches_many_patches_distributed(spark):
     full_lab, n_full = patches.label_tile(arr)  # trusted via matches_bfs
     assert n_full > 100_000
     T = 64
+    monkeypatch.setattr(patches, "_DRIVER_SEAM_CELLS", 0)
     label_tiles, patch_table = patches.build_patches(
-        tiles_df(spark, arr, T), T, spark, force_distributed=True
+        tiles_df(spark, arr, T), T, spark
     )
     assert patch_table.count() == n_full
     # spot-check canonical labels on one tile against the full-array CCL
@@ -253,29 +256,28 @@ def test_patch_stats_tile_size_invariance(spark, raster):
             np.testing.assert_allclose(got, ref, rtol=1e-12, atol=1e-12)
 
 
-def test_tile_limit_defaults_to_distributed(spark, raster, monkeypatch):
-    """r5 scale default: past driver_tile_limit tiles, stitching picks
-    the distributed min-label path WITHOUT counting edges first — the
-    100x-scale default must never materialize the edge set on the
-    driver. Results stay identical to the driver union-find."""
+def test_seam_bound_picks_path(spark, raster, monkeypatch):
+    """The stitching path is chosen up front from the seam-edge bound
+    n_tiles · 2T: one cell past ``_DRIVER_SEAM_CELLS`` runs the
+    distributed fixpoint (without counting edges first), at the bound
+    the driver path runs and never calls it. Both give equal tables."""
     T = 16
+    bound = math.ceil(raster.shape[0] / T) * math.ceil(raster.shape[1] / T) * 2 * T
     calls = {"dist": 0}
-    orig = patches._distributed_min_label
+    orig = chains.components
 
-    def spy(spark_, edges_df, nodes):
+    def spy(*args):
         calls["dist"] += 1
-        return orig(spark_, edges_df, nodes)
+        return orig(*args)
 
-    monkeypatch.setattr(patches, "_distributed_min_label", spy)
-    _, pt_dist = patches.build_patches(
-        tiles_df(spark, raster, T), T, spark, driver_tile_limit=0
-    )
+    monkeypatch.setattr(chains, "components", spy)
+    monkeypatch.setattr(patches, "_DRIVER_SEAM_CELLS", bound - 1)
+    _, pt_dist = patches.build_patches(tiles_df(spark, raster, T), T, spark)
     dist_pd = pt_dist.toPandas().sort_values("patch_id").reset_index(drop=True)
     assert calls["dist"] == 1
 
-    _, pt_drv = patches.build_patches(
-        tiles_df(spark, raster, T), T, spark, driver_tile_limit=10_000
-    )
+    monkeypatch.setattr(patches, "_DRIVER_SEAM_CELLS", bound)
+    _, pt_drv = patches.build_patches(tiles_df(spark, raster, T), T, spark)
     drv_pd = pt_drv.toPandas().sort_values("patch_id").reset_index(drop=True)
-    assert calls["dist"] == 1  # small grid stays on the driver path
+    assert calls["dist"] == 1
     assert dist_pd.equals(drv_pd)
