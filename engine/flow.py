@@ -27,13 +27,14 @@ shipped at most TWICE; the fixpoint runs over border-cell ROWS only):
 
 1. stage 1 (ONE applyInPandas over the planes): per tile, Kahn
    topological waves (vectorized ``np.add.at`` scatter-adds) solve the
-   in-tile accumulation with ZERO external inflow, and pointer jumping
-   resolves every cell's in-tile terminal. Emitted per tile: one LINK
-   row per border-exit cell (exit gid ``okey``, its base outflow
-   ``E0 = acc0[exit]``, and the destination tile/cell it crosses into)
-   plus one EDGE row per valid border cell classifying its in-tile
-   terminal (pit gid, or pending on an exit okey) — the same
-   sentinel-aliased encoding as watershed below.
+   in-tile accumulation with ZERO external inflow, and ``_seams`` —
+   the one vectorized seam emitter, shared with watershed and flow
+   length — resolves every cell's in-tile terminal by pointer
+   jumping. Emitted per tile: one LINK row per border-exit cell (exit
+   gid ``okey``, its base outflow ``E0 = acc0[exit]``, and the
+   destination tile/cell it crosses into) plus one EDGE row per valid
+   border cell and sentinel alias classifying its in-tile terminal
+   (pit gid, or pending on an exit okey).
 2. ``links ⋈ edges`` condenses the raster to the EXIT-CELL functional
    graph ``succ: okey → okey|∅`` (∅ = the crossing is absorbed at a
    pit in the destination tile). Accumulation is LINEAR in its
@@ -45,7 +46,7 @@ shipped at most TWICE; the fixpoint runs over border-cell ROWS only):
    distance 1..2^k``; each round one aggregation join + one pointer
    self-join over EXIT ROWS ONLY (∝ tile perimeter, never the raster),
    O(log chain) rounds. The rounds run through ``chains.iterate``, as
-   do the watershed, flow-length and Strahler fixpoints below: one
+   do the watershed / flow-length and Strahler fixpoints below: one
    checkpoint job per round that also counts the pending rows, and a
    ``RuntimeError`` naming the operator past ``chains.MAX_ROUNDS``.
 3. final paint: ``arrive(b) = Σ_{link(o)=b} S(o)`` per border-in cell,
@@ -57,6 +58,11 @@ Round-3 note: the previous implementation re-shipped every plane and
 re-solved every tile each fixpoint round — O(rounds × raster) shuffle,
 the one plan that died at 100×. This design is the watershed
 chain-table treatment applied to sums.
+
+Watershed and downstream flow length are two views of ONE resolve
+(``_downstream``): the same ``_seams`` rows, chain table, pull-doubling
+fixpoint (``chains.follow`` carrying the step counts) and paint, which
+emits the pit id, the count bands, or both.
 """
 
 from __future__ import annotations
@@ -125,27 +131,25 @@ def flow_direction(
     )
 
 
-_CODE2OFF = {c: (dj, di) for c, dj, di, _ in D8_OFFSETS}
+# (dj, di) of each D8 code's step, indexed by the code
+_CODES = np.array([c for c, *_ in D8_OFFSETS])
+_STEP = np.zeros((_CODES.max() + 1, 2), dtype=np.int64)
+_STEP[_CODES] = [(dj, di) for _, dj, di, _ in D8_OFFSETS]
 
 
 def _receivers(dirs: np.ndarray):
-    """(recv linear index or -1, exits-the-tile mask, jj, ii) for a
-    tile of D8 codes."""
+    """(recv linear index or -1, exits-the-tile mask, jj, ii, per-cell
+    (dj, di) step) for a tile of D8 codes."""
     nr, nc = dirs.shape
-    n = nr * nc
     d = dirs.ravel()
-    valid = np.isfinite(d)
-    recv = np.full(n, -1, dtype=np.int64)
-    out_mask = np.zeros(n, dtype=bool)
-    jj, ii = np.divmod(np.arange(n), nc)
-    for c, (dj, di) in _CODE2OFF.items():
-        sel = valid & (d == c)
-        tj, ti = jj[sel] + dj, ii[sel] + di
-        inside = (tj >= 0) & (tj < nr) & (ti >= 0) & (ti < nc)
-        idx = np.flatnonzero(sel)
-        recv[idx[inside]] = tj[inside] * nc + ti[inside]
-        out_mask[idx[~inside]] = True
-    return recv, out_mask, jj, ii
+    # NaN, 0 and any value that is no D8 code take no step (a pit)
+    step = _STEP[np.where(np.isin(d, _CODES), d, 0).astype(np.int64)]
+    jj, ii = np.divmod(np.arange(nr * nc), nc)
+    tj, ti = jj + step[:, 0], ii + step[:, 1]
+    moves = step.any(axis=1)
+    inside = (tj >= 0) & (tj < nr) & (ti >= 0) & (ti < nc)
+    recv = np.where(moves & inside, tj * nc + ti, -1)
+    return recv, moves & ~inside, jj, ii, step
 
 
 def _solve_tile(
@@ -189,42 +193,98 @@ def _solve_tile(
     return acc
 
 
-_ACC_BORDER_SCHEMA = (
-    "tile_x int, tile_y int, kind string, cellkey long, okey long, "
-    "val long, flow double"
+# packed-plane value of a nodata cell
+_INVALID = np.int64(-(2**62))
+
+# stage-1 seam rows (see _seams); each operator appends its own columns
+_SEAM_SCHEMA = (
+    "tile_x int, tile_y int, link boolean, cellkey long, okey long, val long"
 )
 
 
-def _border_dst(tx, ty, nr, nc, jj, ii, cell, code, wrap_nx):
-    """Destination addressing for a border-exit ``cell``: the neighbor
-    tile and the packed local cell index in the NEIGHBOR's frame
-    (0xFFFF sentinel = its last row/col — the emitter cannot know a
-    ragged neighbor's size)."""
-    dj, di = _CODE2OFF[code]
-    tj, ti = jj[cell] + dj, ii[cell] + di
-    dty, dtx = 0, 0
-    if tj < 0:
-        dty, tj = -1, 0xFFFF
-    elif tj >= nr:
-        dty, tj = 1, tj - nr  # always 0 for a 1-step D8 move
-    if ti < 0:
-        dtx, ti = -1, 0xFFFF
-    elif ti >= nc:
-        dtx, ti = 1, ti - nc
-    ntx = tx + dtx
+def _seams(d: np.ndarray, tx: int, ty: int, T: int, wrap_nx: int | None):
+    """The one per-tile D8 seam emitter (flow accumulation, watershed,
+    flow length). ``d`` is tile (tx, ty)'s plane of D8 codes.
+
+    Wyllie doubling (``t = t[t]``, step counts carried) takes every
+    cell to its in-tile terminal: a pit, or an exit cell whose step
+    leaves the tile. Returns ``(rcv, plane, dc, dd, seam)``:
+
+    - ``rcv``: the ``_receivers`` tuple;
+    - ``plane``: per cell, the terminal pit's global id
+      ``(gy << 32) | gx``, ``-(okey + 1)`` when pending on the exit
+      cell with gid ``okey``, or ``_INVALID`` on nodata;
+    - ``dc`` / ``dd``: cardinal / diagonal steps from the cell to its
+      terminal, the terminal exit's own crossing step included;
+    - ``seam``: columns of one LINK row per exit cell, addressed to the
+      cell it crosses into, then one EDGE row per valid border cell and
+      alias, addressed to itself. The address is a tile plus
+      ``cellkey = (lj << 16) | li`` in that tile's frame; 0xFFFF stands
+      for the last row/col, whose index an emitter cannot know for a
+      ragged neighbor, so a border cell on its tile's last row/col also
+      answers to the 0xFFFF aliases (``_cell_of`` decodes them). Every
+      row carries ``okey`` / ``val`` (gid / ``plane`` of its cell here)
+      and ``cell``, the cell's index in this tile.
+    """
+    nr, nc = d.shape
+    rcv = recv, out, jj, ii, step = _receivers(d)
+    has = recv >= 0
+    diag = step.all(axis=1)
+    card = step.any(axis=1) & ~diag
+    dc = (has & card).astype(np.int64)
+    dd = (has & diag).astype(np.int64)
+    t = np.where(has, recv, np.arange(nr * nc))
+    while True:
+        dc, dd = dc + dc[t], dd + dd[t]
+        t2 = t[t]
+        if np.array_equal(t2, t):
+            break
+        t = t2
+    dc += card[t]
+    dd += diag[t]
+    gid = ((np.int64(ty) * T + jj) << 32) | (np.int64(tx) * T + ii)
+    valid = np.isfinite(d.ravel())
+    plane = np.where(valid, np.where(out[t], -(gid[t] + 1), gid[t]), _INVALID)
+
+    # links: a 1-step move lands on the neighbor's first row/col or,
+    # leaving by -1, on its last (the sentinel)
+    ex = np.flatnonzero(out)
+    lj, li = jj[ex] + step[ex, 0], ii[ex] + step[ex, 1]
+    ntx = tx + li // nc
     if wrap_nx is not None:
         ntx %= wrap_nx
-    return ntx, ty + dty, int((int(tj) << 16) | int(ti))
+    cells, keys = [ex], [(np.where(lj < 0, 0xFFFF, lj % nr) << 16)
+                         | np.where(li < 0, 0xFFFF, li % nc)]
+    # edges: the literal key, then the last-row / last-col / corner aliases
+    b = np.flatnonzero(
+        valid & ((jj == 0) | (jj == nr - 1) | (ii == 0) | (ii == nc - 1))
+    )
+    last_j, last_i = jj[b] == nr - 1, ii[b] == nc - 1
+    for aj, ai in ((False, False), (True, False), (False, True), (True, True)):
+        c = b[(last_j | (not aj)) & (last_i | (not ai))]
+        cells.append(c)
+        keys.append((np.where(aj, 0xFFFF, jj[c]) << 16)
+                    | np.where(ai, 0xFFFF, ii[c]))
+    cell = np.concatenate(cells)
+    n_edge = len(cell) - len(ex)
+    seam = {
+        "tile_x": np.concatenate([ntx, np.full(n_edge, tx)]),
+        "tile_y": np.concatenate([ty + lj // nr, np.full(n_edge, ty)]),
+        "link": np.arange(len(cell)) < len(ex),
+        "cellkey": np.concatenate(keys),
+        "okey": gid[cell],
+        "val": plane[cell],
+        "cell": cell,
+    }
+    return rcv, plane, dc, dd, seam
 
 
-def _alias_cellkeys(lj: int, li: int, nr: int, nc: int) -> list[int]:
-    """Every packed cellkey a neighbor's link may address this border
-    cell by: the literal (lj, li) plus the 0xFFFF "last row/col"
-    sentinel aliases (the emitter cannot know a ragged neighbor's
-    dims — _border_dst's counterpart on the receiving side)."""
-    jkeys = {lj} | ({0xFFFF} if lj == nr - 1 else set())
-    ikeys = {li} | ({0xFFFF} if li == nc - 1 else set())
-    return [int((kj << 16) | ki) for kj in jkeys for ki in ikeys]
+def _cell_of(cellkey: np.ndarray, nr: int, nc: int) -> np.ndarray:
+    """Cell index of a ``_seams`` address in the (nr, nc) tile it names
+    (the receiver resolves the 0xFFFF last row/col sentinels)."""
+    lj, li = cellkey >> 16, cellkey & 0xFFFF
+    lj = np.where(lj == 0xFFFF, nr - 1, lj)
+    return lj * nc + np.where(li == 0xFFFF, nc - 1, li)
 
 
 def flow_accumulation(
@@ -279,70 +339,19 @@ def flow_accumulation(
         row = pdf.iloc[0]
         nr, nc = int(row.nrows), int(row.ncols)
         d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
-        tx, ty = int(key[0]), int(key[1])
-        rcv = _receivers(d)
-        recv, out_mask, jj, ii = rcv
+        rcv, _, _, _, seam = _seams(d, key[0], key[1], T, wrap_nx)
         acc0 = _solve_tile(d, np.zeros((nr, nc)), _wplane(row, nr, nc), rcv=rcv)
-        n = nr * nc
-        valid = np.isfinite(d.ravel())
-        # in-tile terminal of every cell (pointer jumping)
-        t = np.where(recv >= 0, recv, np.arange(n))
-        while True:
-            t2 = t[t]
-            if np.array_equal(t2, t):
-                break
-            t = t2
-        gy = np.int64(ty) * T + jj
-        gx = np.int64(tx) * T + ii
-        gid = (gy.astype(np.int64) << 32) | gx.astype(np.int64)
-        term_is_exit = out_mask[t]
-        rows = []
-        dflat = d.ravel()
-        # LINK rows: one per exit cell — okey, base outflow, destination
-        for cell in np.flatnonzero(out_mask):
-            ntx, nty, cellkey = _border_dst(
-                tx, ty, nr, nc, jj, ii, cell, int(dflat[cell]), wrap_nx
-            )
-            rows.append({
-                "tile_x": ntx, "tile_y": nty, "kind": "link",
-                "cellkey": cellkey, "okey": int(gid[cell]),
-                "val": None, "flow": float(acc0[cell]),
-            })
-        # EDGE rows: terminal classification of every valid border cell
-        # (sentinel aliases for last row/col, as in watershed)
-        edge_cells = np.flatnonzero(
-            valid
-            & ((jj == 0) | (jj == nr - 1) | (ii == 0) | (ii == nc - 1))
-        )
-        for cell in edge_cells:
-            v = (
-                -(int(gid[t[cell]]) + 1)
-                if term_is_exit[cell]
-                else int(gid[t[cell]])
-            )
-            for ck in _alias_cellkeys(int(jj[cell]), int(ii[cell]), nr, nc):
-                rows.append({
-                    "tile_x": tx, "tile_y": ty, "kind": "edge",
-                    "cellkey": ck,
-                    "okey": None, "val": v, "flow": None,
-                })
-        return pd.DataFrame(
-            rows,
-            columns=["tile_x", "tile_y", "kind", "cellkey", "okey",
-                     "val", "flow"],
-        )
+        # a link's base outflow; ignored on edge rows
+        seam["flow"] = acc0[seam.pop("cell")]
+        return pd.DataFrame(seam)
 
     s1 = (
         dirs.groupBy("tile_x", "tile_y")
-        .applyInPandas(stage1, _ACC_BORDER_SCHEMA)
+        .applyInPandas(stage1, _SEAM_SCHEMA + ", flow double")
         .localCheckpoint(eager=True)
     )
-    links = s1.filter(F.col("kind") == "link").select(
-        "tile_x", "tile_y", "cellkey", "okey", "flow"
-    )
-    edges = s1.filter(F.col("kind") == "edge").select(
-        "tile_x", "tile_y", "cellkey", "val"
-    )
+    links = s1.filter("link").select("tile_x", "tile_y", "cellkey", "okey", "flow")
+    edges = s1.filter(~F.col("link")).select("tile_x", "tile_y", "cellkey", "val")
 
     # exit-cell functional graph: okey -> succ exit (null = absorbed at
     # a pit in the destination tile). Inner join: a crossing always
@@ -428,11 +437,7 @@ def flow_accumulation(
                     ]
                     packed = np.array([p_[0] for p_ in pairs], dtype=np.int64)
                     fl = np.array([p_[1] for p_ in pairs], dtype=np.float64)
-                    tj = packed >> 16
-                    ti = packed & 0xFFFF
-                    tj = np.where(tj == 0xFFFF, nr - 1, tj)
-                    ti = np.where(ti == 0xFFFF, nc - 1, ti)
-                    np.add.at(inflow, tj * nc + ti, fl)
+                    np.add.at(inflow, _cell_of(packed, nr, nc), fl)
                 acc = _solve_tile(
                     d, inflow.reshape(nr, nc), _wplane(row, nr, nc)
                 )
@@ -452,13 +457,110 @@ def flow_accumulation(
 
 
 # ---------------------------------------------------------------------------
-# Watershed delineation (basin labeling)
+# Downstream resolve: watershed (W22) and flow length (W32)
 # ---------------------------------------------------------------------------
 
-_WS_STAGE1_SCHEMA = (
-    "tile_x int, tile_y int, kind string, nrows int, ncols int, "
-    "plane binary, cellkey long, okey long, val long"
-)
+
+def _downstream(
+    dir_tiles: DataFrame,
+    T: int,
+    level: int,
+    wrap_nx: int | None,
+    bands: tuple[str, ...],
+    op: str,
+) -> tuple[DataFrame, int]:
+    """Resolve every valid cell to its terminal pit and its cardinal /
+    diagonal step counts to it; paint the requested ``bands`` among
+    'watershed', 'flowlen_card' and 'flowlen_diag'. Returns (tiles,
+    fixpoint rounds).
+
+    The direction planes move exactly TWICE and the fixpoint runs over
+    border-exit ROWS only:
+    1. ONE applyInPandas over the planes emits each tile's ``_seams``
+       rows, edge rows carrying their cell's terminal and counts;
+    2. ``links ⋈ edges`` is the chain table ``okey → (pit | next okey,
+       dc, dd)``, the counts being the destination entry cell's (its
+       terminal exit's crossing step included); ``chains.follow``
+       resolves it by Wyllie pull doubling with the counts carried,
+       O(log chain) rounds of one self-join each;
+    3. ONE paint join re-runs ``_seams`` per tile and maps its pending
+       okeys to (pit, dc, dd) through ``chains.remap``, loud on an
+       okey the chain did not resolve (a crossing that landed on no
+       edge row drops out of the inner join and surfaces there)."""
+    if T >= 0xFFFF:
+        raise ValueError("tile size must stay below the 0xFFFF sentinel")
+    dirs = dir_tiles.select(
+        "tile_x", "tile_y", "nrows", "ncols", "data"
+    ).localCheckpoint(eager=True)
+
+    def codes(row) -> np.ndarray:
+        nr, nc = int(row.nrows), int(row.ncols)
+        return np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
+
+    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        _, _, dc, dd, seam = _seams(codes(pdf.iloc[0]), key[0], key[1], T, wrap_nx)
+        cell = seam.pop("cell")
+        return pd.DataFrame({**seam, "dc": dc[cell], "dd": dd[cell]})
+
+    s1 = (
+        dirs.groupBy("tile_x", "tile_y")
+        .applyInPandas(stage1, _SEAM_SCHEMA + ", dc long, dd long")
+        .localCheckpoint(eager=True)
+    )
+    links = s1.filter("link").select("tile_x", "tile_y", "cellkey", "okey")
+    edges = s1.filter(~F.col("link")).select(
+        "tile_x", "tile_y", "cellkey", "val", "dc", "dd"
+    )
+    chain, rounds = chains.follow(
+        links.join(edges, ["tile_x", "tile_y", "cellkey"]), ("dc", "dd"), op
+    )
+
+    # the chain rows are the link okeys, and an okey encodes its exit
+    # cell's global coords, hence its tile
+    src = chain.select(
+        (F.shiftrightunsigned("okey", 32) / T).cast("int").alias("tile_y"),
+        (F.col("okey").bitwiseAND(F.lit(0xFFFFFFFF)) / T)
+        .cast("int").alias("tile_x"),
+        "okey", "val", "dc", "dd",
+    ).groupBy("tile_x", "tile_y").agg(
+        F.collect_list(F.struct("okey", "val", "dc", "dd")).alias("m")
+    )
+    planes = dirs.join(src, ["tile_x", "tile_y"], "left")
+
+    def paint(pdf_iter):
+        for pdf in pdf_iter:
+            out = []
+            for row in pdf.itertuples(index=False):
+                _, term, dc, dd, _ = _seams(
+                    codes(row), row.tile_x, row.tile_y, T, wrap_nx
+                )
+                pend = (term < 0) & (term != _INVALID)
+                if pend.any():
+                    pit, vdc, vdd = chains.remap(
+                        -(term[pend] + 1), row.m,
+                        f"{op} paint: tile ({row.tile_x},{row.tile_y})",
+                    )
+                    term[pend] = pit
+                    dc[pend] += vdc
+                    dd[pend] += vdd
+                nodata = term == _INVALID
+                for band, v in (
+                    ("watershed", term), ("flowlen_card", dc), ("flowlen_diag", dd)
+                ):
+                    if band in bands:
+                        out.append({
+                            "tile_x": row.tile_x, "tile_y": row.tile_y,
+                            "level": level, "band": band,
+                            "nrows": row.nrows, "ncols": row.ncols,
+                            "data": np.where(nodata, np.nan, v.astype(np.float64)),
+                        })
+            yield pd.DataFrame(
+                out,
+                columns=["tile_x", "tile_y", "level", "band",
+                         "nrows", "ncols", "data"],
+            )
+
+    return planes.mapInPandas(paint, tiling.TILES_SCHEMA), rounds
 
 
 def watershed(
@@ -472,157 +574,49 @@ def watershed(
     ``(gy<<32)|gx`` — deterministic and SQL-replicable; flow never
     leaves the raster, so every path ends at an in-raster pit).
 
-    Scale design — the planes are touched exactly TWICE and never
-    re-shipped per round:
-    1. ONE applyInPandas over the direction tiles: in-tile pointer
-       jumping (``t = t[t]``, O(log path) vectorized gathers) resolves
-       each cell to its in-tile terminal — a pit (resolved gid) or a
-       border-exit cell (pending). Emits the packed int64 terminal
-       plane (pending encoded as ``-(okey+1)``), one LINK row per exit
-       cell (okey → destination tile/cell), and this tile's EDGE-cell
-       classifications (incl. last-row/col sentinel aliases, so a
-       ragged neighbor's link can join them without knowing our dims).
-    2. links ⋈ edges gives the chain table okey → (gid | next okey);
-       ``chains.follow`` pointer-jumps the CHAIN TABLE (rows ∝
-       border-exit cells, not cells) with one self-join per round,
-       O(log chain) rounds, localCheckpoint-bounded lineage.
-    3. ONE paint join maps each tile's pending okeys to final gids
-       (``chains.remap`` next to the payload, as the patch relabel
-       does).
+    The 'watershed' band of ``_downstream``: the planes move exactly
+    twice, the fixpoint runs over border-exit rows only, and the
+    Spark plan is flow_length's.
 
     Precision note: output planes are float64 TILES_SCHEMA, exact while
     gid < 2^53 (raster height < 2^21 rows); the internal pipeline is
     int64 throughout.
     """
-    if T >= 0xFFFF:
-        raise ValueError("tile size must stay below the 0xFFFF sentinel")
-    dirs = dir_tiles.select(
-        "tile_x", "tile_y", "nrows", "ncols", "data"
-    ).localCheckpoint(eager=True)
+    return _downstream(dir_tiles, T, level, wrap_nx, ("watershed",), "watershed")[0]
 
-    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        nr, nc = int(row.nrows), int(row.ncols)
-        d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
-        tx, ty = int(key[0]), int(key[1])
-        recv, out_mask, jj, ii = _receivers(d)
-        n = nr * nc
-        valid = np.isfinite(d.ravel())
-        # pointer jumping to the in-tile terminal (recv<0 cells fix themselves)
-        t = np.where(recv >= 0, recv, np.arange(n))
-        while True:
-            t2 = t[t]
-            if np.array_equal(t2, t):
-                break
-            t = t2
-        gy = np.int64(ty) * T + jj
-        gx = np.int64(tx) * T + ii
-        gid = (gy.astype(np.int64) << 32) | gx.astype(np.int64)
-        term = t  # terminal cell index per cell
-        term_is_exit = out_mask[term]
-        # plane value: pit gid, or -(okey+1) with okey = exit cell's gid
-        plane = np.where(term_is_exit, -(gid[term] + 1), gid[term])
-        plane = np.where(valid, plane, np.int64(-(2**62)))  # invalid marker
-        rows = [{
-            "tile_x": tx, "tile_y": ty, "kind": "plane",
-            "nrows": nr, "ncols": nc,
-            "plane": plane.astype("<i8").tobytes(),
-            "cellkey": None, "okey": None, "val": None,
-        }]
-        # links: one row per exit cell
-        for cell in np.flatnonzero(out_mask):
-            ntx, nty, cellkey = _border_dst(
-                tx, ty, nr, nc, jj, ii, cell, int(d.ravel()[cell]), wrap_nx
-            )
-            rows.append({
-                "tile_x": ntx, "tile_y": nty, "kind": "link",
-                "nrows": None, "ncols": None, "plane": None,
-                "cellkey": cellkey,
-                "okey": int(gid[cell]), "val": None,
-            })
-        # edge classifications (with sentinel aliases for last row/col)
-        edge_cells = np.flatnonzero(
-            valid
-            & ((jj == 0) | (jj == nr - 1) | (ii == 0) | (ii == nc - 1))
-        )
-        for cell in edge_cells:
-            v = int(gid[term[cell]]) if not term_is_exit[cell] else -(int(gid[term[cell]]) + 1)
-            for ck in _alias_cellkeys(int(jj[cell]), int(ii[cell]), nr, nc):
-                rows.append({
-                    "tile_x": tx, "tile_y": ty, "kind": "edge",
-                    "nrows": None, "ncols": None, "plane": None,
-                    "cellkey": ck,
-                    "okey": None, "val": v,
-                })
-        return pd.DataFrame(
-            rows,
-            columns=["tile_x", "tile_y", "kind", "nrows", "ncols",
-                     "plane", "cellkey", "okey", "val"],
-        )
 
-    s1 = (
-        dirs.groupBy("tile_x", "tile_y")
-        .applyInPandas(stage1, _WS_STAGE1_SCHEMA)
-        .localCheckpoint(eager=True)
+def flow_length(
+    dir_tiles: DataFrame,
+    T: int,
+    level: int = 0,
+    wrap_nx: int | None = None,
+    stats: dict | None = None,
+) -> DataFrame:
+    """Downstream flow length: for every valid cell, the along-path
+    distance to its terminal pit on the D8 graph (ESRI FlowLength,
+    downstream flavor). Pinned semantics, mirrored by the oracle:
+
+    - a cardinal step counts 1, a diagonal step sqrt(2); the result is
+      reported as TWO exact-integer bands — ``flowlen_card`` (cardinal
+      step count) and ``flowlen_diag`` (diagonal step count), so the
+      length ``n_card + sqrt(2) * n_diag`` carries no float-sum-order
+      exposure anywhere in the distributed pipeline or the value hash;
+    - pits/flats (code 0) have length 0; invalid cells are NaN; flow
+      never leaves the raster (flow_direction only ever picks in-raster
+      neighbors), so every path terminates at an in-raster pit.
+
+    The two count bands of ``_downstream`` (watershed's plan: planes
+    ship exactly twice, the fixpoint runs over border-exit rows only).
+    ``stats`` (optional dict) records {'rounds': n} for plan-shape
+    tests.
+    """
+    out, rounds = _downstream(
+        dir_tiles, T, level, wrap_nx, ("flowlen_card", "flowlen_diag"),
+        "flow_length",
     )
-    links = s1.filter(F.col("kind") == "link").select(
-        "tile_x", "tile_y", "cellkey", "okey"
-    )
-    edges = s1.filter(F.col("kind") == "edge").select(
-        "tile_x", "tile_y", "cellkey", "val"
-    )
-    # chain table: okey -> val (>=0 final gid; <0 pending on -(val+1)),
-    # resolved by pull doubling — O(log chain) rounds over exit rows
-    chain, _ = chains.follow(
-        links.join(edges, ["tile_x", "tile_y", "cellkey"]), (), "watershed"
-    )
-
-    # paint: per-tile pending okeys -> final gid, remapped next to the
-    # payload. chain rows ARE exactly the link okeys (links ⋈ edges
-    # preserves them one-to-one; a missing edge row is caught loudly by
-    # the paint guard), so the resolved chain is already the map.
-    tile_map = chain.select("okey", "val")
-    # okey encodes the source cell's global coords -> source tile
-    src = tile_map.select(
-        (F.shiftrightunsigned("okey", 32) / T).cast("int").alias("tile_y"),
-        (F.col("okey").bitwiseAND(F.lit(0xFFFFFFFF)) / T).cast("int").alias("tile_x"),
-        "okey", "val",
-    ).groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("okey", "val")).alias("m")
-    )
-
-    planes = s1.filter(F.col("kind") == "plane").select(
-        "tile_x", "tile_y", "nrows", "ncols", "plane"
-    ).join(src, ["tile_x", "tile_y"], "left")
-
-    def paint(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for row in pdf.itertuples(index=False):
-                nr, nc = int(row.nrows), int(row.ncols)
-                plane = np.frombuffer(row.plane, dtype="<i8")
-                data = np.full(len(plane), np.nan)
-                resolved = plane >= 0
-                data[resolved] = plane[resolved].astype(np.float64)
-                pend = (plane < 0) & (plane != -(2**62))
-                if pend.any():
-                    (vv,) = chains.remap(
-                        -(plane[pend] + 1), row.m,
-                        f"watershed paint: tile ({row.tile_x},{row.tile_y})",
-                    )
-                    data[pend] = vv.astype(np.float64)
-                out.append({
-                    "tile_x": row.tile_x, "tile_y": row.tile_y,
-                    "level": level, "band": "watershed",
-                    "nrows": nr, "ncols": nc, "data": data,
-                })
-            yield pd.DataFrame(
-                out,
-                columns=["tile_x", "tile_y", "level", "band",
-                         "nrows", "ncols", "data"],
-            )
-
-    return planes.mapInPandas(paint, tiling.TILES_SCHEMA)
+    if stats is not None:
+        stats["rounds"] = rounds
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -715,19 +709,15 @@ def strahler(
                 gy = np.int64(row.tile_y) * T + jj.astype(np.int64)
                 gx = np.int64(row.tile_x) * T + ii.astype(np.int64)
                 gid = (gy << 32) | gx
-                code = d.ravel()[idx].astype(np.int64)
-                sgy = gy.copy()
-                sgx = gx.copy()
-                for c, (dj, di) in _CODE2OFF.items():
-                    sel = code == c
-                    sgy[sel] += dj
-                    sgx[sel] += di
+                step = _receivers(d)[4][idx]
+                sgy = gy + step[:, 0]
+                sgx = gx + step[:, 1]
                 if wrap_gw is not None:
                     sgx %= wrap_gw
                 succ = (sgy << 32) | sgx
                 outs.append(pd.DataFrame({
                     "gid": gid,
-                    "succ": np.where(code == 0, None, succ),
+                    "succ": np.where(step.any(axis=1), succ, None),
                 }))
             yield (
                 pd.concat(outs)
@@ -864,225 +854,3 @@ def strahler(
 
     return planes.mapInPandas(paint, tiling.TILES_SCHEMA)
 
-
-# ---------------------------------------------------------------------------
-# Downstream flow length (W32, round 4)
-# ---------------------------------------------------------------------------
-
-_FL_STAGE1_SCHEMA = (
-    "tile_x int, tile_y int, kind string, nrows int, ncols int, "
-    "plane binary, pcard binary, pdiag binary, cellkey long, okey long, "
-    "val long, dc long, dd long"
-)
-
-_DIAG_CODES = (2, 8, 32, 128)
-
-
-def flow_length(
-    dir_tiles: DataFrame,
-    T: int,
-    level: int = 0,
-    wrap_nx: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Downstream flow length: for every valid cell, the along-path
-    distance to its terminal pit on the D8 graph (ESRI FlowLength,
-    downstream flavor). Pinned semantics, mirrored by the oracle:
-
-    - a cardinal step counts 1, a diagonal step sqrt(2); the result is
-      reported as TWO exact-integer bands — ``flowlen_card`` (cardinal
-      step count) and ``flowlen_diag`` (diagonal step count), so the
-      length ``n_card + sqrt(2) * n_diag`` carries no float-sum-order
-      exposure anywhere in the distributed pipeline or the value hash;
-    - pits/flats (code 0) have length 0; invalid cells are NaN; flow
-      never leaves the raster (flow_direction only ever picks in-raster
-      neighbors), so every path terminates at an in-raster pit.
-
-    Scale design — the watershed chain-table treatment applied to the
-    (count, count) sum: planes ship exactly TWICE, the fixpoint runs
-    over border-exit ROWS only.
-
-    1. ONE applyInPandas over the direction planes: in-tile Wyllie
-       pointer doubling WITH CARRIED COUNTS (``d += d[t]; t = t[t]``)
-       resolves every cell's step counts to its in-tile terminal — a
-       pit (resolved) or a border-exit cell (pending). Emits the packed
-       terminal plane (watershed's encoding) + two int64 count planes,
-       one LINK row per exit cell (okey → destination tile/cell, the
-       exit step's own class), and sentinel-aliased EDGE rows
-       classifying each border cell (terminal encode + its in-tile
-       counts).
-    2. links ⋈ edges condenses the raster to chain rows
-       ``okey → (dc, dd, pit | next okey)`` with dc/dd = the exit step
-       plus the destination entry cell's in-tile counts;
-       ``chains.follow`` (Wyllie pointer doubling with carried sums)
-       resolves every chain in O(log chain) rounds — one self-join per
-       round over exit rows only, localCheckpoint-bounded lineage.
-    3. ONE paint join maps pending okeys to final (dc, dd) next to the
-       payload (``chains.remap``, loud on an unresolved okey) and emits
-       both bands.
-    """
-    if T >= 0xFFFF:
-        raise ValueError("tile size must stay below the 0xFFFF sentinel")
-    dirs = dir_tiles.select(
-        "tile_x", "tile_y", "nrows", "ncols", "data"
-    ).localCheckpoint(eager=True)
-
-    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        nr, nc = int(row.nrows), int(row.ncols)
-        d = np.asarray(row.data, dtype=np.float64).reshape(nr, nc)
-        tx, ty = int(key[0]), int(key[1])
-        recv, out_mask, jj, ii = _receivers(d)
-        n = nr * nc
-        codes = d.ravel()
-        valid = np.isfinite(codes)
-        has_recv = recv >= 0
-        diag = np.isin(codes, _DIAG_CODES) & has_recv
-        dc = np.where(has_recv & ~diag, np.int64(1), np.int64(0))
-        dd = np.where(diag, np.int64(1), np.int64(0))
-        t = np.where(has_recv, recv, np.arange(n))
-        while True:
-            dc = dc + dc[t]
-            dd = dd + dd[t]
-            t2 = t[t]
-            if np.array_equal(t2, t):
-                break
-            t = t2
-        gy = np.int64(ty) * T + jj
-        gx = np.int64(tx) * T + ii
-        gid = (gy.astype(np.int64) << 32) | gx.astype(np.int64)
-        term = t
-        term_is_exit = out_mask[term]
-        plane = np.where(term_is_exit, -(gid[term] + 1), gid[term])
-        plane = np.where(valid, plane, np.int64(-(2**62)))
-        rows = [{
-            "tile_x": tx, "tile_y": ty, "kind": "plane",
-            "nrows": nr, "ncols": nc,
-            "plane": plane.astype("<i8").tobytes(),
-            "pcard": dc.astype("<i8").tobytes(),
-            "pdiag": dd.astype("<i8").tobytes(),
-            "cellkey": None, "okey": None, "val": None,
-            "dc": None, "dd": None,
-        }]
-        for cell in np.flatnonzero(out_mask):
-            code = int(codes[cell])
-            ntx, nty, cellkey = _border_dst(
-                tx, ty, nr, nc, jj, ii, cell, code, wrap_nx
-            )
-            step_diag = code in _DIAG_CODES
-            rows.append({
-                "tile_x": ntx, "tile_y": nty, "kind": "link",
-                "nrows": None, "ncols": None, "plane": None,
-                "pcard": None, "pdiag": None,
-                "cellkey": cellkey, "okey": int(gid[cell]), "val": None,
-                "dc": 0 if step_diag else 1, "dd": 1 if step_diag else 0,
-            })
-        edge_cells = np.flatnonzero(
-            valid
-            & ((jj == 0) | (jj == nr - 1) | (ii == 0) | (ii == nc - 1))
-        )
-        for cell in edge_cells:
-            v = (
-                -(int(gid[term[cell]]) + 1)
-                if term_is_exit[cell]
-                else int(gid[term[cell]])
-            )
-            for ck in _alias_cellkeys(int(jj[cell]), int(ii[cell]), nr, nc):
-                rows.append({
-                    "tile_x": tx, "tile_y": ty, "kind": "edge",
-                    "nrows": None, "ncols": None, "plane": None,
-                    "pcard": None, "pdiag": None,
-                    "cellkey": ck,
-                    "okey": None, "val": v,
-                    "dc": int(dc[cell]), "dd": int(dd[cell]),
-                })
-        return pd.DataFrame(
-            rows,
-            columns=["tile_x", "tile_y", "kind", "nrows", "ncols",
-                     "plane", "pcard", "pdiag", "cellkey", "okey",
-                     "val", "dc", "dd"],
-        )
-
-    s1 = (
-        dirs.groupBy("tile_x", "tile_y")
-        .applyInPandas(stage1, _FL_STAGE1_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
-    links = s1.filter(F.col("kind") == "link").select(
-        "tile_x", "tile_y", "cellkey", "okey",
-        F.col("dc").alias("ldc"), F.col("dd").alias("ldd"),
-    )
-    edges = s1.filter(F.col("kind") == "edge").select(
-        "tile_x", "tile_y", "cellkey", "val", "dc", "dd"
-    )
-    # chain rows: okey -> (counts incl. the exit step + the entry
-    # cell's in-tile counts; val >= 0 resolved / -(next okey + 1)),
-    # resolved by pull doubling with the counts carried
-    chain, rounds = chains.follow(
-        links.join(edges, ["tile_x", "tile_y", "cellkey"]).select(
-            "okey",
-            "val",
-            (F.col("ldc") + F.col("dc")).alias("dc"),
-            (F.col("ldd") + F.col("dd")).alias("dd"),
-        ),
-        ("dc", "dd"),
-        "flow_length",
-    )
-    if stats is not None:
-        stats["rounds"] = rounds
-
-    # chain rows ARE exactly the link okeys (links ⋈ edges preserves
-    # them one-to-one; a missing edge row is caught loudly by the paint
-    # guard), so the resolved chain is already the okey → counts map
-    tile_map = chain.select("okey", "dc", "dd")
-    src = tile_map.select(
-        (F.shiftrightunsigned("okey", 32) / T).cast("int").alias("tile_y"),
-        (F.col("okey").bitwiseAND(F.lit(0xFFFFFFFF)) / T)
-        .cast("int").alias("tile_x"),
-        "okey", "dc", "dd",
-    ).groupBy("tile_x", "tile_y").agg(
-        F.collect_list(F.struct("okey", "dc", "dd")).alias("m")
-    )
-
-    planes = s1.filter(F.col("kind") == "plane").select(
-        "tile_x", "tile_y", "nrows", "ncols", "plane", "pcard", "pdiag"
-    ).join(src, ["tile_x", "tile_y"], "left")
-
-    def paint(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for row in pdf.itertuples(index=False):
-                nr, nc = int(row.nrows), int(row.ncols)
-                plane = np.frombuffer(row.plane, dtype="<i8")
-                pcard = np.frombuffer(row.pcard, dtype="<i8").astype(
-                    np.float64
-                )
-                pdiag = np.frombuffer(row.pdiag, dtype="<i8").astype(
-                    np.float64
-                )
-                invalid = plane == -(2**62)
-                card = np.where(invalid, np.nan, pcard)
-                diagp = np.where(invalid, np.nan, pdiag)
-                pend = (plane < 0) & ~invalid
-                if pend.any():
-                    vdc, vdd = chains.remap(
-                        -(plane[pend] + 1), row.m,
-                        f"flow_length paint: tile ({row.tile_x},{row.tile_y})",
-                    )
-                    card[pend] = card[pend] + vdc
-                    diagp[pend] = diagp[pend] + vdd
-                for band, data in (
-                    ("flowlen_card", card), ("flowlen_diag", diagp)
-                ):
-                    out.append({
-                        "tile_x": row.tile_x, "tile_y": row.tile_y,
-                        "level": level, "band": band,
-                        "nrows": nr, "ncols": nc, "data": data,
-                    })
-            yield pd.DataFrame(
-                out,
-                columns=["tile_x", "tile_y", "level", "band",
-                         "nrows", "ncols", "data"],
-            )
-
-    return planes.mapInPandas(paint, tiling.TILES_SCHEMA)

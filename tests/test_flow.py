@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.errors import PythonException
 
 from engine import fixtures, flow
 
@@ -261,25 +262,36 @@ def test_flow_accumulation_sparse_weights(spark):
     np.testing.assert_allclose(got, acc_ref.reshape(64, 64), equal_nan=True)
 
 
-def test_flow_accumulation_ragged_tiles(spark):
-    """Ragged edge tiles (40×20 raster at T=16 → 8-wide and 4-tall edge
-    tiles): border crossings into a ragged neighbor must resolve the
-    'last row/col' against the RECEIVER's dims, not the emitter's."""
-    arr = fixtures.dem_arith(size=64)[:20, :40].copy()
+# ragged rasters at T=16: 8-wide and 4-tall edge tiles, then a 1-row
+# last tile row, a 1-col last tile column and a 1x1 corner tile, whose
+# one cell is its tile's first and last row and col at once
+RAGGED = ((20, 40), (17, 33))
+
+
+def _ragged_dirs(spark, H, W):
+    arr = fixtures.dem_arith(size=64)[:H, :W].copy()
     tiles = spark.createDataFrame(
         fixtures.tiles_rows_from_array(arr, 16, band="z"),
         fixtures.TILES_SCHEMA_DDL,
     )
-    dir_tiles = flow.flow_direction(tiles, 16)
-    got = _acc_from_tiles(
-        flow.flow_accumulation(dir_tiles, 16), 16, 20, 40
-    )
-    want = brute_acc(flow.flow_direction_kernel(arr))
-    np.testing.assert_allclose(got, want, equal_nan=True)
+    return flow.flow_direction(tiles, 16), flow.flow_direction_kernel(arr)
 
 
-def brute_watershed(dirs: np.ndarray, stride: int = 2**32) -> np.ndarray:
-    """wid(c) = global id (gy<<32|gx) of the pit c's path terminates at."""
+def test_flow_accumulation_ragged_tiles(spark):
+    """Border crossings into a ragged neighbor must resolve the 'last
+    row/col' against the RECEIVER's dims, not the emitter's; an edge row
+    emitted twice would double a chain row and over-count."""
+    for H, W in RAGGED:
+        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
+        got = _acc_from_tiles(flow.flow_accumulation(dir_tiles, 16), 16, H, W)
+        np.testing.assert_allclose(got, brute_acc(dirs_whole), equal_nan=True)
+
+
+def brute_watershed(
+    dirs: np.ndarray, stride: int = 2**32, wrap: bool = False
+) -> np.ndarray:
+    """wid(c) = global id (gy<<32|gx) of the pit c's path terminates at
+    (x modular with ``wrap``)."""
     H, W = dirs.shape
     off = {c: (dj, di) for c, dj, di, _ in flow.D8_OFFSETS}
     out = np.full((H, W), np.nan)
@@ -290,7 +302,7 @@ def brute_watershed(dirs: np.ndarray, stride: int = 2**32) -> np.ndarray:
             cj, ci = j, i
             while int(dirs[cj, ci]) != 0:
                 dj, di = off[int(dirs[cj, ci])]
-                cj, ci = cj + dj, ci + di
+                cj, ci = cj + dj, (ci + di) % W if wrap else ci + di
             out[j, i] = float(cj * stride + ci)
     return out
 
@@ -320,15 +332,12 @@ def test_watershed_distributed(spark):
 
 
 def test_watershed_ragged(spark):
-    arr = fixtures.dem_arith(size=64)[:20, :40].copy()
-    tiles = spark.createDataFrame(
-        fixtures.tiles_rows_from_array(arr, 16, band="z"),
-        fixtures.TILES_SCHEMA_DDL,
-    )
-    dir_tiles = flow.flow_direction(tiles, 16)
-    got = _acc_from_tiles(flow.watershed(dir_tiles, 16), 16, 20, 40)
-    want = brute_watershed(flow.flow_direction_kernel(arr))
-    np.testing.assert_allclose(got, want, equal_nan=True)
+    for H, W in RAGGED:
+        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
+        got = _acc_from_tiles(flow.watershed(dir_tiles, 16), 16, H, W)
+        np.testing.assert_allclose(
+            got, brute_watershed(dirs_whole), equal_nan=True
+        )
 
 
 def test_flow_and_watershed_scale_256(spark):
@@ -558,27 +567,18 @@ def test_flow_length_distributed(spark):
 
 
 def test_flow_length_ragged(spark):
-    """Ragged tiling (20x40): sentinel-aliased edges resolve and pits
-    keep length 0."""
-    arr = fixtures.dem_arith(size=64)[:20, :40].copy()
-    tiles = spark.createDataFrame(
-        fixtures.tiles_rows_from_array(arr, 16, band="z"),
-        fixtures.TILES_SCHEMA_DDL,
-    )
-    dir_tiles = flow.flow_direction(tiles, 16)
-    out = flow.flow_length(dir_tiles, 16)
-    got_c = _acc_from_tiles(
-        out.filter(out.band == "flowlen_card"), 16, 20, 40
-    )
-    got_d = _acc_from_tiles(
-        out.filter(out.band == "flowlen_diag"), 16, 20, 40
-    )
-    dirs_whole = flow.flow_direction_kernel(arr)
-    want_c, want_d = brute_flow_length(dirs_whole)
-    np.testing.assert_allclose(got_c, want_c, equal_nan=True)
-    np.testing.assert_allclose(got_d, want_d, equal_nan=True)
-    pits = np.nan_to_num(dirs_whole, nan=-1) == 0
-    assert (got_c[pits] == 0).all() and (got_d[pits] == 0).all()
+    """Ragged tiling: sentinel-aliased edges resolve and pits keep
+    length 0."""
+    for H, W in RAGGED:
+        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
+        out = flow.flow_length(dir_tiles, 16)
+        got_c = _acc_from_tiles(out.filter(out.band == "flowlen_card"), 16, H, W)
+        got_d = _acc_from_tiles(out.filter(out.band == "flowlen_diag"), 16, H, W)
+        want_c, want_d = brute_flow_length(dirs_whole)
+        np.testing.assert_allclose(got_c, want_c, equal_nan=True)
+        np.testing.assert_allclose(got_d, want_d, equal_nan=True)
+        pits = np.nan_to_num(dirs_whole, nan=-1) == 0
+        assert (got_c[pits] == 0).all() and (got_d[pits] == 0).all()
 
 
 def test_flow_length_long_chain_plan_shape(spark):
@@ -637,7 +637,8 @@ def brute_flow_length_wrap(dirs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def test_flow_length_wrap(spark):
     """wrap_nx: paths crossing the antimeridian seam accumulate their
     step counts across it — lengths match the wrap-aware brute and
-    genuinely differ from the unwrapped world."""
+    genuinely differ from the unwrapped world; watershed, the other
+    band of the same resolve, labels the wrapped basins."""
     arr = np.tile(np.arange(32, 0, -1, dtype=np.float64), (8, 1))
     tiles = spark.createDataFrame(
         fixtures.tiles_rows_from_array(arr, 8, band="z"),
@@ -653,3 +654,70 @@ def test_flow_length_wrap(spark):
     np.testing.assert_allclose(got_d, want_d, equal_nan=True)
     nowrap_c, _ = brute_flow_length(flow.flow_direction_kernel(arr))
     assert not np.allclose(want_c, nowrap_c, equal_nan=True)
+    got_ws = _acc_from_tiles(flow.watershed(dir_tiles, 8, wrap_nx=4), 8, 8, 32)
+    want_ws = brute_watershed(dirs_w, wrap=True)
+    np.testing.assert_allclose(got_ws, want_ws, equal_nan=True)
+    # column 0 drains west: its label arrives through the seam link
+    assert (dirs_w[:, 0] == 16).all()
+
+
+def test_watershed_and_flow_length_share_one_plan(spark):
+    """Watershed is a band of flow_length's resolve, not a copy of it:
+    on the same checkpointed directions both issue the same number of
+    Spark jobs (second call each, so no first-use setup is counted)."""
+    arr = fixtures.dem_arith(size=64)
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(arr, 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    dirs = flow.flow_direction(tiles, 16).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, op in (("watershed", flow.watershed), ("flow_length", flow.flow_length)):
+        for rep in range(2):
+            group = f"test_share_one_plan_{name}_{rep}"
+            sc.setJobGroup(group, group)
+            try:
+                op(dirs, 16).collect()
+                jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["watershed"] == jobs["flow_length"], jobs
+
+
+def test_strahler_wrap_requires_x_regular_tiles(spark):
+    """Wrapped global x is modular in wrap_nx * T, so a ragged last
+    tile column would corrupt successor ids: the extract raises."""
+    arr = np.tile(np.arange(28, 0, -1, dtype=np.float64), (8, 1))
+    dirs_w = brute_d8_wrap(arr)
+    dir_tiles, acc_tiles = (
+        spark.createDataFrame(
+            fixtures.tiles_rows_from_array(a, 8, band=band),
+            fixtures.TILES_SCHEMA_DDL,
+        )
+        for a, band in ((dirs_w, "flowdir"), (brute_acc_wrap(dirs_w), "flowacc"))
+    )
+    with pytest.raises(
+        PythonException, match="ValueError: strahler: wrap_nx requires x-regular"
+    ):
+        flow.strahler(dir_tiles, acc_tiles, 8, threshold=2.0, wrap_nx=4)
+
+
+def test_strahler_no_network(spark):
+    """A threshold above every accumulation extracts no network: the
+    plane is 0 on valid cells and NaN on nodata."""
+    arr = fixtures.dem_arith(size=32)
+    arr[np.random.default_rng(3).random(arr.shape) < 0.05] = np.nan
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(arr, 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    dir_tiles = flow.flow_direction(tiles, 16)
+    acc_tiles = flow.flow_accumulation(dir_tiles, 16)
+    got = _acc_from_tiles(
+        flow.strahler(dir_tiles, acc_tiles, 16, threshold=2.0 * arr.size),
+        16, 32, 32,
+    )
+    want = np.where(np.isfinite(arr), 0.0, np.nan)
+    assert np.isnan(want).any()
+    np.testing.assert_array_equal(got, want)
