@@ -11,9 +11,9 @@ Scale design — two passes, both map-side-partial shaped:
 1. the global mean: per-tile (n, sum) partials via mapInPandas, one
    single-row agg, one scalar collect (constant driver traffic at any
    raster size);
-2. ONE 1-pixel halo exchange (the same JVM-strip machinery as every
-   focal op, engine/tiling.halo_exchange) then ONE applyInPandas that
-   reduces each tile to FOUR scalars (num, den, W, n partials) — the
+2. ONE 1-pixel halo group (``tiling.halo_map``, the exchange and Arrow
+   group runner of every focal op) that reduces each tile to six
+   scalars (num, den, W, n, Geary and Getis partials) — the
    shuffle ships tile payloads once, the final agg sees one tiny row
    per tile. No cell-level shuffle anywhere.
 
@@ -109,15 +109,7 @@ def moran_i(
     # denominator): (sum x)^2 - sum x^2 — global scalars, no pair scan.
     g_den = s_glob**2 - s2_glob
 
-    exchanged = tiling.halo_exchange(sub, T, 1, wrap_nx)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = tiling.assemble_padded(pdf, T, 1)
-        if got is None:
-            return pd.DataFrame(
-                columns=["num", "den", "w", "n", "cnum", "gnum"]
-            )
-        bands, nr, nc = got
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         (_, z), = bands.items()
         c = z[1 : 1 + nr, 1 : 1 + nc]
         valid = np.isfinite(c)
@@ -146,8 +138,9 @@ def moran_i(
             }
         )
 
-    part = exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        run, "num double, den double, w long, n long, cnum double, gnum double"
+    part = tiling.halo_map(
+        sub, T, 1, wrap_nx, run,
+        "num double, den double, w long, n long, cnum double, gnum double",
     )
     n, w = F.sum("n"), F.sum("w")
     return part.agg(

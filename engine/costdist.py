@@ -23,7 +23,8 @@ Pinned semantics (normative, mirrored by the sq_reclass_algebra
   never under-reports cost.
 
 Physical plan (the 100-TB shape): ONE halo exchange (g=cap) + ONE
-applyInPandas running Dijkstra per window. No iteration, no driver
+``applyInArrow`` group running Dijkstra per window (``apply_focal`` for
+the raster, ``tiling.halo_map`` for the paths). No iteration, no driver
 traffic — identical to distance_transform/fill_depressions.
 """
 
@@ -144,21 +145,16 @@ def cost_path(
     sum_i, sum_j) with sum_i/sum_j the path-cell coordinate sums (a
     geometry checksum the SQL oracle replays step by step).
 
-    Plan: the SAME single halo exchange as cost_distance + ONE
-    applyInPandas running Dijkstra-then-backtrack per window; paths
-    never shuffle (each is resolved where its destination lives)."""
+    Plan: the SAME single halo exchange as cost_distance, in ONE
+    ``tiling.halo_map`` group running Dijkstra-then-backtrack per
+    window; paths never shuffle (each is resolved where its destination
+    lives)."""
     if cap > T:
         raise ValueError(f"cap ({cap}) must be <= tile size T ({T})")
-    exchanged = tiling.halo_exchange(tiles, T, cap, wrap_nx)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         cols = ["dest_i", "dest_j", "n_steps", "total_cost", "sum_i", "sum_j"]
-        got = tiling.assemble_padded(pdf, T, cap)
-        if got is None:
-            return pd.DataFrame(columns=cols)
-        bands, nr, nc = got
         (_, cost), = bands.items()
-        tx, ty = int(key[0]), int(key[1])
         D = cost_distance_kernel(cost, source_pred)
         jj, ii = np.mgrid[0:nr, 0:nc]
         gj = ty * T + jj
@@ -190,8 +186,8 @@ def cost_path(
             })
         return pd.DataFrame(rows, columns=cols)
 
-    return exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        run,
+    return tiling.halo_map(
+        tiles, T, cap, wrap_nx, run,
         "dest_i long, dest_j long, n_steps long, total_cost double, "
         "sum_i long, sum_j long",
     )

@@ -10,9 +10,10 @@ gdal_proximity -maxdist): it is what makes the operator single-shuffle
 distributable, because a feature within Euclidean distance d ≤ cap of a
 cell is within Chebyshev distance cap, i.e. inside the cap-deep halo.
 
-Physical plan (the 100-TB shape): ONE halo exchange with g=cap (the same
-strip-sliced JVM emit as every focal stat — shuffle volume ≈
-(1+4g/T)× tile bytes) + ONE applyInPandas running the kernel per tile.
+Physical plan (the 100-TB shape): ``tiling.apply_focal`` — ONE halo
+exchange with g=cap (the NumPy ``mapInArrow`` strip emitter of every
+focal stat; shuffle volume ≈ (1+4g/T)× tile bytes) + ONE
+``applyInArrow`` group running the kernel per tile.
 No iteration, no driver traffic, exact within the cap by construction.
 
 Kernel: vectorized offset sweep over the r-disc — one shifted-slice

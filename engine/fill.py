@@ -27,9 +27,10 @@ window covers it entirely (fixture case) is exact everywhere. Larger
 basins are coarse-level questions — fill at a pyramid level, or raise
 ``cap``.
 
-Physical plan (the 100-TB shape): ONE halo exchange with g=cap (the
-strip-sliced JVM emit every focal op uses) + ONE applyInPandas running
-the flood kernel per tile. No iteration, no driver traffic — the same
+Physical plan (the 100-TB shape): ``tiling.apply_focal`` — ONE halo
+exchange with g=cap (the NumPy ``mapInArrow`` strip emitter every focal
+op uses) + ONE ``applyInArrow`` group running the flood kernel per
+tile. No iteration, no driver traffic — the same
 single-shuffle plan as EDT/terrain, exact within the cap by
 construction.
 

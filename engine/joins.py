@@ -167,13 +167,16 @@ def _ring_margin_col(lat, lon, r: int, level: int):
     return F.least(lat_km, lon_km)
 
 
+# k-ring rounds (radius 1, 2, 4, ...) before the exhaustive fallback
+_KNN_MAX_ROUNDS = 8
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
     k: int,
     level: int,
     spark: SparkSession,
-    max_rounds: int = 8,
     point_id: str = "doc_id",
 ) -> DataFrame:
     """For each query row (q_id, lat, lon): the k nearest point rows by
@@ -187,7 +190,9 @@ def knn_join(
     whose kth distance is ≤ the out-of-ring lower bound. Resolved rows
     accumulate via union + eager localCheckpoint (bounded lineage); the
     driver only ever sees an isEmpty flag per round. Ring radius
-    doubles per round. Returns (q_id, rank, <point_id>, dist_km).
+    doubles per round; queries still unresolved after
+    ``_KNN_MAX_ROUNDS`` rounds take an exhaustive broadcast fallback.
+    Returns (q_id, rank, <point_id>, dist_km).
     """
     pts = points.select(
         point_id,
@@ -203,7 +208,7 @@ def knn_join(
     cached: list[DataFrame] = []
     w = Window.partitionBy("q_id").orderBy(F.col("dist_km"), F.col(point_id))
     r = 1
-    for _ in range(max_rounds):
+    for _ in range(_KNN_MAX_ROUNDS):
         qc = unresolved.withColumn(
             "_c0", udfs.cell_encode_pudf(F.col("lat"), F.col("lon"), F.lit(level))
         ).withColumn("cell_id", F.explode(udfs.k_ring_pudf(r)(F.col("_c0"))))
@@ -239,7 +244,7 @@ def knn_join(
         if unresolved.isEmpty():
             break
         r *= 2
-    if not unresolved.isEmpty():
+    else:
         # exhaustive fallback for stragglers (sparse regions / tiny
         # point sets) — still a distributed join, no driver detour
         cand = pts.crossJoin(F.broadcast(unresolved)).withColumn(

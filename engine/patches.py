@@ -12,7 +12,8 @@ raster boundary.
 Distributed W14 design:
 1. per-tile two-pass CCL (NumPy union-find) with globally-unique
    provisional labels ``tile_seq * T*T + local``;
-2. tiles exchange 1-deep halos so per-tile perimeter contributions are
+2. tiles exchange 1-deep halos and steps 1–2 run in one
+   ``tiling.halo_map`` group, so per-tile perimeter contributions are
    exact; each tile also emits its boundary label/class strips keyed by
    the shared border;
 3. equivalence edges from border strips → connected components. The
@@ -164,17 +165,7 @@ def build_patches(
     job runs and a big raster never funnels its seams through one
     process.
     """
-    exchanged = tiling.halo_exchange(tiles, T, 1, wrap_nx)
-
-    def stage1(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = tiling.assemble_padded(pdf, T, 1)
-        if got is None:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "kind", "labels", "klass",
-                         "area", "perim", "min_gidx", "plane",
-                         "strip_labels", "strip_klass", "border", "side"]
-            )
-        bands, nr, nc = got
+    def stage1(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         if len(bands) != 1:
             # loud single-band contract (matches zonal/autocorr): a
             # multi-band frame would otherwise die in an opaque
@@ -185,7 +176,6 @@ def build_patches(
             )
         (_, padded), = bands.items()
         core = padded[1 : 1 + nr, 1 : 1 + nc]
-        tx, ty = int(key[0]), int(key[1])
         local, n = label_tile(core)
         # globally-unique provisional labels: tile linear index * T*T + local
         base = (np.int64(ty) * np.int64(1 << 20) + np.int64(tx)) * (T * T)
@@ -263,9 +253,7 @@ def build_patches(
             strip(glab[0, :], core[0, :], f"h:{tx}:{ty-1}", "nbr")
         return pd.DataFrame(rows)
 
-    stage1_df = exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        stage1, _LABEL_STAGE_SCHEMA
-    )
+    stage1_df = tiling.halo_map(tiles, T, 1, wrap_nx, stage1, _LABEL_STAGE_SCHEMA)
     stage1_df.persist()
 
     # equivalence edges: group the two strips of each border, pair up

@@ -2,13 +2,13 @@
 overview pyramid (engine/pyramid.py, downsample) doesn't cover; the
 engine analogue of a gdalwarp/zoom-in resample.
 
-Scale design: ONE 1-pixel halo exchange (the same JVM-side strip
-machinery as every focal op — engine/tiling.halo_exchange) then one
-applyInPandas per parent tile that emits its <=4 child tiles. No other
-shuffle: output volume is 4x input, produced map-side after the halo
-groupBy. Fusing interpolation into the halo-assembly stage is the plan
-that survives scale-up — the alternative (explode per-pixel, join 4
-corners) would shuffle 4 rows per OUTPUT pixel.
+Scale design: ONE 1-pixel halo group (``tiling.halo_map``, the same
+exchange and Arrow group runner as every focal op) per parent tile,
+which emits its <=4 child tiles. No other shuffle: output volume is 4x
+input, produced map-side after the halo groupBy. Fusing interpolation
+into the halo-assembly stage is the plan that survives scale-up — the
+alternative (explode per-pixel, join 4 corners) would shuffle 4 rows
+per OUTPUT pixel.
 
 Pinned semantics (SQL-replicable; oracle = 4-corner arithmetic join):
 - child pixel (ci, cj) at level L+1 interpolates parent coordinate
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -152,15 +153,8 @@ def upsample_bilinear(
     if band is not None:
         tiles = tiles.filter(tiles.band == band)
     g = 1
-    exchanged = tiling.halo_exchange(tiles, T, g)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = tiling.assemble_padded(pdf, T, g)
-        if got is None:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "level", "band", "nrows", "ncols", "data"]
-            )
-        bands, nr, nc = got
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         (band_name, padded), = bands.items()
         child = bilinear_2x(padded, nr, nc, g)
         rows = []
@@ -173,8 +167,8 @@ def upsample_bilinear(
                 sub = child[y0:y1, x0:x1]
                 rows.append(
                     {
-                        "tile_x": 2 * int(key[0]) + qx,
-                        "tile_y": 2 * int(key[1]) + qy,
+                        "tile_x": 2 * tx + qx,
+                        "tile_y": 2 * ty + qy,
                         "level": level + 1,
                         "band": band_name,
                         "nrows": sub.shape[0],
@@ -187,9 +181,7 @@ def upsample_bilinear(
             columns=["tile_x", "tile_y", "level", "band", "nrows", "ncols", "data"],
         )
 
-    return exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        run, tiling.TILES_SCHEMA
-    )
+    return tiling.halo_map(tiles, T, g, None, run, tiling.TILES_SCHEMA)
 
 
 def sample_bilinear(
@@ -212,8 +204,9 @@ def sample_bilinear(
     (non-NaN, in-raster) corners; NO valid corner → no output row.
 
     Scale design: ONE 1-pixel halo exchange ships each tile payload
-    once with its neighbor rim, then ONE cogrouped applyInPandas
-    joins the points of a tile against its padded array — corners that
+    once with its neighbor rim, then ONE cogrouped applyInArrow
+    joins the points of a tile against its padded array (painted by
+    ``tiling.paint_halo``, as in ``halo_map``) — corners that
     cross a tile boundary read the halo, never a second tile row, and
     the payload is never copied per point (the same
     join-would-duplicate-512KB argument as L3). Points shuffle once on
@@ -233,38 +226,27 @@ def sample_bilinear(
         (F.greatest(i0, F.lit(0)) / T).cast("int").alias("s_tx"),
         (F.greatest(j0, F.lit(0)) / T).cast("int").alias("s_ty"),
     )
+    dtypes = dict(p.dtypes)
+    out_schema = ", ".join([*(f"{c} {dtypes[c]}" for c in cols), "value double"])
+    out_arrow = tiling.arrow_schema(out_schema)
 
-    def run(key, pts_pdf: pd.DataFrame, tiles_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(columns=[*cols, "value"])
-        if len(pts_pdf) == 0 or len(tiles_pdf) == 0:
-            return empty
-        got = tiling.assemble_padded(tiles_pdf, T, 1)
-        if got is None:
-            # anchor tile ABSENT in a sparse raster: the halo exchange
-            # still addressed the present neighbors' 1-pixel strips
-            # here, so points whose corners reach into a present
-            # neighbor get the documented valid-corner renormalization
-            # instead of silently dropping (r3 ADVICE fix); the absent
-            # center region stays NaN.
-            padded = np.full((T + 2, T + 2), np.nan)
-            for row in tiles_pdf.itertuples(index=False):
-                block = np.asarray(row.data, dtype=np.float64).reshape(
-                    row.nrows, row.ncols
-                )
-                padded[
-                    row.oy : row.oy + row.nrows, row.ox : row.ox + row.ncols
-                ] = block
-        else:
-            bands, nr, nc = got
-            (_, padded), = bands.items()
-        tx, ty = int(key[0]), int(key[1])
-        px = pts_pdf["gx"].to_numpy(dtype=np.float64) - 0.5 - tx * T
-        py = pts_pdf["gy"].to_numpy(dtype=np.float64) - 0.5 - ty * T
+    def run(key, pts, halo):  # unannotated: Arrow UDFs take no eval type from hints
+        if pts.num_rows == 0 or halo.num_rows == 0:
+            return out_arrow.empty_table()
+        # an ABSENT anchor tile (sparse raster) still received its
+        # present neighbors' strips: its full canvas keeps them, so
+        # points whose corners reach into a present neighbor get the
+        # documented valid-corner renormalization instead of silently
+        # dropping; the absent center stays NaN
+        (padded,) = tiling.paint_halo(halo, T, 1)[0].values()
+        tx, ty = key[0].as_py(), key[1].as_py()
+        px = pts.column("gx").to_numpy().astype(np.float64) - 0.5 - tx * T
+        py = pts.column("gy").to_numpy().astype(np.float64) - 0.5 - ty * T
         ix0 = np.floor(px).astype(np.int64)
         iy0 = np.floor(py).astype(np.int64)
         fx, fy = px - ix0, py - iy0
-        num = np.zeros(len(pts_pdf))
-        den = np.zeros(len(pts_pdf))
+        num = np.zeros(pts.num_rows)
+        den = np.zeros(pts.num_rows)
         for dy, dx, wy, wx in _bilinear_corners(fx, fy):
             yy = np.clip(iy0 + dy + 1, 0, padded.shape[0] - 1)
             xx = np.clip(ix0 + dx + 1, 0, padded.shape[1] - 1)
@@ -275,21 +257,16 @@ def sample_bilinear(
             w = wy * wx
             num += np.where(ok, w * v, 0.0)
             den += np.where(ok, w, 0.0)
-        out = pts_pdf[cols].copy()
-        with np.errstate(invalid="ignore", divide="ignore"):
-            out["value"] = num / den
-        return out[den > 0.0]
-
-    out_schema = ", ".join(
-        f"{c} {t_}" for c, t_ in zip(
-            [*cols, "value"],
-            [*[dict(p.dtypes)[c] for c in cols], "double"],
+        keep = den > 0.0
+        return pa.Table.from_arrays(
+            [*(pts.column(c).filter(keep) for c in cols), pa.array(num[keep] / den[keep])],
+            schema=out_arrow,
         )
-    )
+
     return (
         p.groupBy("s_tx", "s_ty")
         .cogroup(exchanged.groupBy("dst_tx", "dst_ty"))
-        .applyInPandas(run, out_schema)
+        .applyInArrow(run, out_schema)
     )
 
 

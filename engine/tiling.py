@@ -33,12 +33,13 @@ Scale design notes (the part the 100 TB grade hangs on):
   any stage per focal op, 0.22 s now. The price is a second crossing:
   bytes sent to Python per op went from 37.9 to 71.9 MB.
 
-- **One Arrow-native focal stage**: halo assembly and every requested
-  kernel run inside the SAME ``applyInArrow`` group, so padded arrays
-  are never materialized between stages. The canvas is painted from
-  the list array's offsets and the result leaves as one Arrow list
-  array — no pandas frame on either side. Python worker time per
-  focal op fell from 3.2 to 2.0 s on the same run. Of what was left,
+- **One halo group runner** (``halo_map``): window assembly and the
+  per-window work run in the SAME ``applyInArrow`` group for every halo
+  consumer (focal kernels, autocorrelation, cost paths, patches,
+  upsampling, polygonize, contours, zonal geometry). The canvas is
+  painted from the list array's offsets and the focal result leaves as
+  one Arrow list array — no pandas frame on either side. Python worker
+  time per focal op fell from 3.2 to 2.0 s on the same run. Of what was left,
   about a third was fixed per-task worker boot, not this stage: each
   task re-read ``pyspark.zip``'s directory until ``engine/__init__.py``
   guarded zipimporter's cache. The traced focal_dense round's
@@ -52,14 +53,16 @@ incremental accumulator slide (SURVEY.md §3.1); same pinned results
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from functools import partial
+from collections.abc import Callable, Iterator
+from functools import lru_cache, partial
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from engine import kernels
 
@@ -67,13 +70,6 @@ TILES_SCHEMA = (
     "tile_x int, tile_y int, level int, band string, "
     "nrows int, ncols int, data array<double>"
 )
-
-# TILES_SCHEMA as the Arrow types applyInArrow checks a result against
-_TILES_ARROW = pa.schema([
-    ("tile_x", pa.int32()), ("tile_y", pa.int32()), ("level", pa.int32()),
-    ("band", pa.string()), ("nrows", pa.int32()), ("ncols", pa.int32()),
-    ("data", pa.list_(pa.float64())),
-])
 
 _HALO_SCHEMA = (
     "dst_tx int, dst_ty int, band string, is_center boolean, "
@@ -318,7 +314,7 @@ def halo_exchange(
     wrap_nx: int | None = None,
 ) -> DataFrame:
     """Shuffle each tile's payload + neighbor strips to the receiving
-    tile key. Downstream: groupBy(dst) + assemble (see apply_focal).
+    tile key. Downstream: groupBy(dst) + ``paint_halo`` (see halo_map).
 
     The emitter is a ``mapInArrow`` NumPy slicer over the projected tile
     columns; only those six columns cross into Python."""
@@ -327,49 +323,74 @@ def halo_exchange(
     ).mapInArrow(partial(_emit_halo, T, g, wrap_nx), _HALO_SCHEMA)
 
 
-def _paint(rows, T: int, g: int) -> tuple[dict[str, np.ndarray], int, int] | None:
-    """Halo rows ``(band, is_center, oy, ox, nrows, ncols, flat data)`` →
-    ({band: padded (nr+2g, nc+2g) array}, nr, nc); None if no row is a
-    center payload (halo addressed to a nonexistent tile)."""
+def paint_halo(
+    table: pa.Table, T: int, g: int
+) -> tuple[dict[str, np.ndarray], int | None, int | None]:
+    """One exchanged group → ({band: padded (nr+2g, nc+2g) array}, nr,
+    nc), payloads sliced from the list array's offsets. A group with no
+    center payload (strips addressed to a nonexistent tile) returns its
+    full (T+2g)² canvases, NaN where no strip arrived, and nr = nc =
+    None."""
     canvases: dict[str, np.ndarray] = {}
     nr = nc = None
-    for band, is_center, oy, ox, h, w, flat in rows:
-        canvas = canvases.get(band)
-        if canvas is None:
-            canvas = canvases[band] = np.full((T + 2 * g, T + 2 * g), np.nan)
-        canvas[oy : oy + h, ox : ox + w] = flat.reshape(h, w)
-        if is_center and nr is None:
-            nr, nc = int(h), int(w)
-    if nr is None:
-        return None
-    return {b: c[: nr + 2 * g, : nc + 2 * g] for b, c in canvases.items()}, nr, nc
-
-
-def assemble_padded(
-    pdf: pd.DataFrame, T: int, g: int
-) -> tuple[dict[str, np.ndarray], int, int] | None:
-    """Group rows → {band: padded (nr+2g, nc+2g) array}. None if the
-    group has no center payload (halo addressed to a nonexistent tile)."""
-    return _paint(
-        (
-            (r.band, r.is_center, r.oy, r.ox, r.nrows, r.ncols,
-             np.asarray(r.data, dtype=np.float64))
-            for r in pdf.itertuples(index=False)
-        ),
-        T, g,
-    )
-
-
-def _arrow_rows(table: pa.Table):
-    """``_paint`` rows of one exchanged group, payloads sliced from the
-    list array's offsets."""
     for b in table.to_batches():
         off, vals = _list_values(b.column("data"))
         bands = b.column("band").to_pylist()
         center = b.column("is_center").to_pylist()
         oy, ox, h, w = (b.column(c).to_numpy() for c in ("oy", "ox", "nrows", "ncols"))
         for i in range(b.num_rows):
-            yield bands[i], center[i], oy[i], ox[i], h[i], w[i], vals[off[i] : off[i + 1]]
+            canvas = canvases.get(bands[i])
+            if canvas is None:
+                canvas = canvases[bands[i]] = np.full((T + 2 * g, T + 2 * g), np.nan)
+            canvas[oy[i] : oy[i] + h[i], ox[i] : ox[i] + w[i]] = (
+                vals[off[i] : off[i + 1]].reshape(h[i], w[i])
+            )
+            if center[i] and nr is None:
+                nr, nc = int(h[i]), int(w[i])
+    if nr is None:
+        return canvases, None, None
+    return {b: c[: nr + 2 * g, : nc + 2 * g] for b, c in canvases.items()}, nr, nc
+
+
+@lru_cache(maxsize=64)
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema an Arrow UDF's result is checked against, parsed
+    from its DDL once per driver process (the parse runs in the JVM)."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def halo_map(
+    tiles: DataFrame,
+    T: int,
+    g: int,
+    wrap_nx: int | None,
+    fn: Callable[..., pa.Table | pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The one halo group runner: ``halo_exchange`` + ONE
+    ``groupBy(dst).applyInArrow``. Each receiving tile's window is
+    painted by ``paint_halo`` and handed to ``fn(tx, ty, bands, nr,
+    nc)`` (Python ints; ``bands`` maps band → padded (nr+2g, nc+2g)
+    array), which returns rows of the DDL ``schema`` as a ``pa.Table``
+    or a ``pd.DataFrame``. A DataFrame converts against the schema, so
+    NaN list cells cross as nulls, as from a pandas UDF. A group with no
+    center payload emits no rows."""
+    arrow = arrow_schema(schema)
+
+    def run(key, table):  # unannotated: Arrow UDFs take no eval type from hints
+        bands, nr, nc = paint_halo(table, T, g)
+        if nr is None:
+            return arrow.empty_table()
+        out = fn(key[0].as_py(), key[1].as_py(), bands, nr, nc)
+        if isinstance(out, pd.DataFrame):
+            out = pa.Table.from_pandas(out, schema=arrow, preserve_index=False)
+        return out
+
+    return (
+        halo_exchange(tiles, T, g, wrap_nx)
+        .groupBy("dst_tx", "dst_ty")
+        .applyInArrow(run, schema)
+    )
 
 
 def _resolve_stat(name: str, class_domain=None):
@@ -410,7 +431,7 @@ def _focal_stage(
     wrap_nx: int | None,
     halo: int | None,
 ) -> DataFrame:
-    """ONE halo exchange + ONE ``applyInArrow`` computing
+    """ONE ``halo_map`` group computing
     ``band_stats[in_band][out_band] = fn(padded, r, shape)`` per tile; the
     in_band ``None`` names the sole band of a single-band input. Output
     payloads are built as one list array whose NaN cells cross as Spark
@@ -418,13 +439,9 @@ def _focal_stage(
     g = halo if halo is not None else r
     if g < r:
         raise ValueError("halo must cover the kernel radius")
-    exchanged = halo_exchange(tiles, T, g, wrap_nx)
+    arrow = arrow_schema(TILES_SCHEMA)
 
-    def run(key, table):
-        got = _paint(_arrow_rows(table), T, g)
-        if got is None:
-            return _TILES_ARROW.empty_table()
-        bands, nr, nc = got
+    def run(tx, ty, bands, nr, nc):
         names, planes = [], []
         for in_band, fns in band_stats.items():
             if in_band is None:
@@ -441,14 +458,12 @@ def _focal_stage(
             pa.array(np.arange(n + 1, dtype=np.int32) * (nr * nc)),
             pa.array(np.asarray(planes, dtype=np.float64).ravel(), from_pandas=True),
         )
-        ints = [key[0].as_py(), key[1].as_py(), level, nr, nc]
-        tx, ty, lv, nrs, ncs = (pa.array([v] * n, pa.int32()) for v in ints)
+        tx, ty, lv, nrs, ncs = ([v] * n for v in (tx, ty, level, nr, nc))
         return pa.Table.from_arrays(
-            [tx, ty, lv, pa.array(names, pa.string()), nrs, ncs, data],
-            schema=_TILES_ARROW,
+            [tx, ty, lv, pa.array(names), nrs, ncs, data], schema=arrow
         )
 
-    return exchanged.groupBy("dst_tx", "dst_ty").applyInArrow(run, TILES_SCHEMA)
+    return halo_map(tiles, T, g, wrap_nx, run, TILES_SCHEMA)
 
 
 def apply_focal(
@@ -467,8 +482,8 @@ def apply_focal(
 
     stats: list of KERNELS names, or {out_band: callable(arr, r, shape)}.
     Input must be single-band; for multi-band input use
-    apply_focal_bands, or halo_exchange + your own assembler (see
-    engine/patches.py).
+    apply_focal_bands, or ``halo_map`` with your own per-window
+    function (see engine/patches.py).
     class_domain: raster-wide class set — required by (and only used
     for) the 'interspersion' string stat, whose normalization is not
     absent-class-invariant per tile block.

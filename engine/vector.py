@@ -5,12 +5,13 @@ raster transfers" — the inverse of A2 rasterize).
 Algorithm (distributed, two shuffles):
 1. 1-deep halo exchange of the label tiles (reuses J4), so every tile
    sees its neighbors' border labels;
-2. per tile, VECTORIZED boundary-segment extraction: each cell side
-   whose neighbor carries a different label / nodata / out-of-raster
-   emits one unit segment in global grid coordinates, directed so the
-   patch interior is on a consistent side (cell boundary traversed
-   clockwise in y-down coords) — shared walls between same-patch cells
-   cancel by construction;
+2. per tile, in the same ``tiling.halo_map`` group, VECTORIZED
+   boundary-segment extraction: each cell side whose neighbor carries
+   a different label / nodata / out-of-raster emits one unit segment
+   in global grid coordinates, directed so the patch interior is on a
+   consistent side (cell boundary traversed clockwise in y-down
+   coords) — shared walls between same-patch cells cancel by
+   construction;
 3. ``groupBy(patch_id)`` ring assembly: directed segments chain
    start→end into closed rings (a patch's segment count ~ its
    perimeter, so groups stay small even when the patch spans many
@@ -44,15 +45,11 @@ RINGS_SCHEMA = (
 )
 
 
-def _emit_segments(T, key, pdf):
-    # unannotated: pyspark cannot resolve type hints through functools.partial
-    got = tiling.assemble_padded(pdf, T, 1)
-    if got is None:
-        return pd.DataFrame(columns=["patch_id", "x0", "y0", "x1", "y1"])
-    bands, nr, nc = got
+def _emit_segments(
+    T: int, tx: int, ty: int, bands: dict, nr: int, nc: int
+) -> pd.DataFrame:
     (_, padded), = bands.items()
     core = padded[1 : 1 + nr, 1 : 1 + nc]
-    tx, ty = int(key[0]), int(key[1])
     gx0, gy0 = tx * T, ty * T
     finite = np.isfinite(core)
     jj, ii = np.mgrid[0:nr, 0:nc]
@@ -161,9 +158,8 @@ def _chain_rings(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
 def polygonize(label_tiles: DataFrame, T: int) -> DataFrame:
     """Patch-label tiles (band='patch', data = patch root ids, NaN =
     nodata) → one row per boundary ring per patch."""
-    exchanged = tiling.halo_exchange(label_tiles, T, 1, wrap_nx=None)
-    segments = exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        partial(_emit_segments, T), SEGMENTS_SCHEMA
+    segments = tiling.halo_map(
+        label_tiles, T, 1, None, partial(_emit_segments, T), SEGMENTS_SCHEMA
     )
     return segments.groupBy("patch_id").applyInPandas(_chain_rings, RINGS_SCHEMA)
 
@@ -253,23 +249,12 @@ def contour_segments(
     level): marching squares over 2×2 cell blocks, each tile owning
     the blocks whose TOP-LEFT cell lies in its core — blocks spanning
     tile seams read the 1-deep halo, so every raster block is emitted
-    exactly once. ONE halo exchange + ONE applyInPandas; segments
-    never shuffle. (Chaining segments into polylines is the polygonize
+    exactly once. ONE ``tiling.halo_map`` group; segments never
+    shuffle. (Chaining segments into polylines is the polygonize
     ring-assembly pattern — segments are the verifiable core and the
     driver-visible unit.)"""
-    exchanged = tiling.halo_exchange(
-        tiles.filter(F.col("band") == band), T, 1, wrap_nx=None
-    )
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = tiling.assemble_padded(pdf, T, 1)
-        if got is None:
-            return pd.DataFrame(
-                columns=["bi", "bj", "x0", "y0", "x1", "y1"]
-            )
-        bands, nr, nc = got
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         (_, padded), = bands.items()
-        tx, ty = int(key[0]), int(key[1])
         # own blocks with top-left in the core: rows/cols [1, 1+nr) of
         # the padded window, plus the right/bottom halo for the 2nd
         # corner row — i.e. slice [1 : 2+nr), [1 : 2+nc)
@@ -278,8 +263,8 @@ def contour_segments(
             win, level_value, gx0=tx * T, gy0=ty * T
         )
 
-    return exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        run, CONTOUR_SCHEMA
+    return tiling.halo_map(
+        tiles.filter(F.col("band") == band), T, 1, None, run, CONTOUR_SCHEMA
     )
 
 

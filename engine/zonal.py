@@ -506,19 +506,15 @@ def zonal_geometry(
 
     Scale design: ONE 1-deep halo exchange (cross-tile neighbors read
     from the rim, each side counted once by the cell that owns it),
-    per-(tile, zone) integer partials in one applyInPandas, then the
-    tiny per-zone final sum — the zonal_stats partial+final shape with
-    a halo, shuffle rows ∝ zones per tile, never T²."""
+    per-(tile, zone) integer partials in one ``tiling.halo_map``
+    group, then the tiny per-zone final sum — the zonal_stats
+    partial+final shape with a halo, shuffle rows ∝ zones per tile,
+    never T²."""
     from engine import tiling
 
     sub = tiles.filter(F.col("band") == zone_band)
-    exchanged = tiling.halo_exchange(sub, T, 1, wrap_nx)
 
-    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = tiling.assemble_padded(pdf, T, 1)
-        if got is None:
-            return pd.DataFrame(columns=["zone", "a", "p"])
-        bands, nr, nc = got
+    def partials(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
         (_, z), = bands.items()
         c = z[1 : 1 + nr, 1 : 1 + nc]
         valid = np.isfinite(c)
@@ -537,9 +533,7 @@ def zonal_geometry(
             "p": np.bincount(inv, weights=per).astype(np.int64),
         })
 
-    part = exchanged.groupBy("dst_tx", "dst_ty").applyInPandas(
-        partials, "zone long, a long, p long"
-    )
+    part = tiling.halo_map(sub, T, 1, wrap_nx, partials, "zone long, a long, p long")
     area = F.sum("a").cast("long")
     perim = F.sum("p").cast("long")
     # square in DOUBLE: perim*perim in long overflows int64 for

@@ -268,23 +268,44 @@ def test_flow_accumulation_sparse_weights(spark):
 RAGGED = ((20, 40), (17, 33))
 
 
-def _ragged_dirs(spark, H, W):
-    arr = fixtures.dem_arith(size=64)[:H, :W].copy()
-    tiles = spark.createDataFrame(
-        fixtures.tiles_rows_from_array(arr, 16, band="z"),
-        fixtures.TILES_SCHEMA_DDL,
-    )
-    return flow.flow_direction(tiles, 16), flow.flow_direction_kernel(arr)
+def _ragged_cases(spark):
+    """(direction tiles, whole direction plane, wrap_nx) per ragged
+    case: the ``RAGGED`` cuts of the saddle DEM, then two
+    north-west-draining 17x33 planes (z = i + j plus speckle below 0.3,
+    so cells drain N, W or mostly NW and a tile's first cell steps into
+    its north-west neighbor's (0xFFFF, 0xFFFF) corner alias). The
+    wrapped one has its lowest column at 5, so columns 0-4 drain west
+    across the seam into the 1-col last tile column; its directions come
+    from the wrap-aware brute, because the halo exchange assumes
+    x-regular tiles under wrap."""
+    def tiles(arr, band):
+        return spark.createDataFrame(
+            fixtures.tiles_rows_from_array(arr, 16, band=band),
+            fixtures.TILES_SCHEMA_DDL,
+        )
+
+    for H, W in RAGGED:
+        arr = fixtures.dem_arith(size=64)[:H, :W].copy()
+        yield flow.flow_direction(tiles(arr, "z"), 16), flow.flow_direction_kernel(arr), None
+    jj, ii = np.mgrid[0:17, 0:33]
+    speckle = 0.3 * np.random.default_rng(7).random((17, 33))
+    nw = ii + jj + speckle
+    yield flow.flow_direction(tiles(nw, "z"), 16), flow.flow_direction_kernel(nw), None
+    dirs = brute_d8_wrap((ii - 5) % 33 + jj + speckle)
+    assert dirs[16, 0] == 32 and dirs[16, 16] == 32  # NW out of a first cell
+    yield tiles(dirs, "flowdir"), dirs, 3
 
 
 def test_flow_accumulation_ragged_tiles(spark):
     """Border crossings into a ragged neighbor must resolve the 'last
     row/col' against the RECEIVER's dims, not the emitter's; an edge row
     emitted twice would double a chain row and over-count."""
-    for H, W in RAGGED:
-        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
-        got = _acc_from_tiles(flow.flow_accumulation(dir_tiles, 16), 16, H, W)
-        np.testing.assert_allclose(got, brute_acc(dirs_whole), equal_nan=True)
+    for dir_tiles, dirs, wrap_nx in _ragged_cases(spark):
+        got = _acc_from_tiles(
+            flow.flow_accumulation(dir_tiles, 16, wrap_nx=wrap_nx), 16, *dirs.shape
+        )
+        want = brute_acc_wrap(dirs) if wrap_nx else brute_acc(dirs)
+        np.testing.assert_allclose(got, want, equal_nan=True)
 
 
 def brute_watershed(
@@ -332,11 +353,12 @@ def test_watershed_distributed(spark):
 
 
 def test_watershed_ragged(spark):
-    for H, W in RAGGED:
-        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
-        got = _acc_from_tiles(flow.watershed(dir_tiles, 16), 16, H, W)
+    for dir_tiles, dirs, wrap_nx in _ragged_cases(spark):
+        got = _acc_from_tiles(
+            flow.watershed(dir_tiles, 16, wrap_nx=wrap_nx), 16, *dirs.shape
+        )
         np.testing.assert_allclose(
-            got, brute_watershed(dirs_whole), equal_nan=True
+            got, brute_watershed(dirs, wrap=wrap_nx is not None), equal_nan=True
         )
 
 
@@ -569,15 +591,15 @@ def test_flow_length_distributed(spark):
 def test_flow_length_ragged(spark):
     """Ragged tiling: sentinel-aliased edges resolve and pits keep
     length 0."""
-    for H, W in RAGGED:
-        dir_tiles, dirs_whole = _ragged_dirs(spark, H, W)
-        out = flow.flow_length(dir_tiles, 16)
-        got_c = _acc_from_tiles(out.filter(out.band == "flowlen_card"), 16, H, W)
-        got_d = _acc_from_tiles(out.filter(out.band == "flowlen_diag"), 16, H, W)
-        want_c, want_d = brute_flow_length(dirs_whole)
+    for dir_tiles, dirs, wrap_nx in _ragged_cases(spark):
+        out = flow.flow_length(dir_tiles, 16, wrap_nx=wrap_nx)
+        got_c = _acc_from_tiles(out.filter(out.band == "flowlen_card"), 16, *dirs.shape)
+        got_d = _acc_from_tiles(out.filter(out.band == "flowlen_diag"), 16, *dirs.shape)
+        brute = brute_flow_length_wrap if wrap_nx else brute_flow_length
+        want_c, want_d = brute(dirs)
         np.testing.assert_allclose(got_c, want_c, equal_nan=True)
         np.testing.assert_allclose(got_d, want_d, equal_nan=True)
-        pits = np.nan_to_num(dirs_whole, nan=-1) == 0
+        pits = np.nan_to_num(dirs, nan=-1) == 0
         assert (got_c[pits] == 0).all() and (got_d[pits] == 0).all()
 
 

@@ -153,19 +153,26 @@ def test_halo_wrap_lon_seam(spark):
 
 @pytest.mark.parametrize("wrap_nx", [None, 4])
 def test_halo_assembles_raster_windows(spark, wrap_nx):
-    """Golden: every tile's assembled padded array — from both the
-    pandas and the Arrow painter — is the (T+2g)-window cut straight out
-    of the whole raster (NaN beyond it, x wrapped when wrap_nx is set).
-    Covers ragged bottom tiles (nrows < T) and one oversized payload
-    (ncols > T+g) whose extra columns repeat its right neighbor's."""
+    """Golden: every group's painted canvas is the window cut straight
+    out of the whole raster (NaN beyond it, x wrapped when wrap_nx is
+    set): (nr+2g, nc+2g) for a present tile, the full (T+2g)² canvas
+    for a group with no center payload — the absent tile (3, 0), whose
+    own cells read NaN in every window, and without wrap the column
+    past the raster's east edge. Covers ragged bottom tiles (nrows < T)
+    and one oversized payload (ncols > T+g) whose extra columns repeat
+    its right neighbor's."""
     T, g, nx, ny = 16, 5, 4, 3
     rng = np.random.default_rng(1)
     H, W = 2 * T + 11, nx * T
     raster = rng.random((H, W))
     raster[rng.random((H, W)) < 0.1] = np.nan
+    absent = (3, 0)
+    raster[: T, 3 * T :] = np.nan
     rows = []
     for ty in range(ny):
         for tx in range(nx):
+            if (tx, ty) == absent:
+                continue
             nr = min(T, H - ty * T)
             nc = T + g + 3 if (tx, ty) == (1, 1) else T
             block = raster[ty * T : ty * T + nr, tx * T : tx * T + nc]
@@ -173,23 +180,22 @@ def test_halo_assembles_raster_windows(spark, wrap_nx):
                 {"tile_x": tx, "tile_y": ty, "level": 8, "band": "b",
                  "nrows": nr, "ncols": nc, "data": block.ravel()}
             )
+    ncols = {(r["tile_x"], r["tile_y"]): r["ncols"] for r in rows}
     tiles = spark.createDataFrame(pd.DataFrame(rows), schema=tiling.TILES_SCHEMA)
     halo = tiling.halo_exchange(tiles, T, g, wrap_nx=wrap_nx).toArrow()
-    centers = set()
+    centers, empty = set(), set()
     for tx, ty in set(zip(halo["dst_tx"].to_pylist(), halo["dst_ty"].to_pylist())):
         group = halo.filter(
             pc.and_(pc.equal(halo["dst_tx"], tx), pc.equal(halo["dst_ty"], ty))
         )
-        got = tiling.assemble_padded(group.to_pandas(), T, g)
-        arrow = tiling._paint(tiling._arrow_rows(group), T, g)
-        if got is None:
-            assert arrow is None
-            continue
-        centers.add((tx, ty))
-        (padded,) = got[0].values()
-        (arrow_padded,) = arrow[0].values()
-        nr = min(T, H - ty * T)
-        assert got[1:] == arrow[1:] == (nr, min(T + g, rows[ty * nx + tx]["ncols"]))
+        bands, nr, nc = tiling.paint_halo(group, T, g)
+        if nr is None:
+            empty.add((tx, ty))
+            nr = T
+        else:
+            centers.add((tx, ty))
+            assert (nr, nc) == (min(T, H - ty * T), min(T + g, ncols[tx, ty]))
+        (padded,) = bands.values()
         ys = np.arange(ty * T - g, ty * T + nr + g)
         xs = np.arange(tx * T - g, tx * T + T + g)
         want = np.full((len(ys), len(xs)), np.nan)
@@ -198,8 +204,9 @@ def test_halo_assembles_raster_windows(spark, wrap_nx):
         ok_y, ok_x = (ys >= 0) & (ys < H), (xs >= 0) & (xs < W)
         want[np.ix_(ok_y, ok_x)] = raster[np.ix_(ys[ok_y], xs[ok_x])]
         np.testing.assert_array_equal(padded, want)
-        np.testing.assert_array_equal(arrow_padded, want)
-    assert centers == {(tx, ty) for ty in range(ny) for tx in range(nx)}
+    assert centers == set(ncols)
+    east = set() if wrap_nx else {(nx, ty) for ty in range(ny)}
+    assert empty == {absent} | east
 
 
 def brute_rasterize(pdf, level, T, stat):
@@ -328,3 +335,81 @@ def test_grouped_map_plans_infer_eval_type(spark):
         warnings.simplefilter("error", UserWarning)
         tiling.rasterize(pts, T, level)
         resample.warp_affine(tiles, 16, (0.7, -0.4, 6.0, 0.4, 0.7, -3.0), (40, 56))
+
+
+_PY_NODES = (
+    "FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow", "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas", "MapInArrow", "MapInPandas",
+)
+
+
+def _halo_readers(plan: str) -> list[str]:
+    """Name of the first Python node above each halo ``MapInArrow``
+    (the one whose output carries ``dst_tx``) of a physical plan tree."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-|")) for ln in lines]
+    readers = []
+    for i, ln in enumerate(lines):
+        if not (ln[depth[i]:].startswith("MapInArrow ") and "[dst_tx#" in ln):
+            continue
+        d, j = depth[i], i - 1
+        while j >= 0:
+            if depth[j] < d:
+                d = depth[j]
+                node = lines[j][d:].split(" ", 1)[0]
+                if node in _PY_NODES:
+                    readers.append(node)
+                    break
+            j -= 1
+    return readers
+
+
+@pytest.mark.parametrize(
+    "consumer",
+    ["moran_i", "cost_path", "build_patches", "upsample_bilinear",
+     "polygonize", "contour_segments", "zonal_geometry", "sample_bilinear"],
+)
+def test_halo_consumers_read_groups_in_arrow(spark, monkeypatch, consumer):
+    """Every halo consumer reads its exchanged group in an Arrow UDF fed
+    by the halo ``MapInArrow`` — no pandas group sits on the exchange.
+    Frames a consumer persists or checkpoints on the way (build_patches'
+    stage 1) are inspected too."""
+    from engine import autocorr, costdist, patches, resample, vector, zonal
+
+    T = 16
+    arr = fixtures.dem_arith(size=32)
+    z = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(arr, T, band="z"), fixtures.TILES_SCHEMA_DDL
+    )
+    kept: list = []
+    cls = type(z)
+    for name in ("persist", "localCheckpoint"):
+        real = getattr(cls, name)
+        monkeypatch.setattr(
+            cls, name, lambda self, *a, _f=real, **k: kept.append(self) or _f(self, *a, **k)
+        )
+    classes = spark.createDataFrame(
+        fixtures.tiles_rows_from_array((arr > arr.mean()).astype(float), T, band="zone"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    pts = spark.createDataFrame([(1, 3.3, 17.2)], "pt_id long, gx double, gy double")
+    run = {
+        "moran_i": lambda: autocorr.moran_i(z, T, "z"),
+        "cost_path": lambda: costdist.cost_path(
+            z, T, 4, lambda a: a < 1.0, lambda gj, gi, v: gi == gj
+        ),
+        "build_patches": lambda: patches.build_patches(classes, T, spark)[0],
+        "upsample_bilinear": lambda: resample.upsample_bilinear(z, T, level=0),
+        "polygonize": lambda: vector.polygonize(classes, T),
+        "contour_segments": lambda: vector.contour_segments(z, T, 10.0),
+        "zonal_geometry": lambda: zonal.zonal_geometry(classes, T),
+        "sample_bilinear": lambda: resample.sample_bilinear(pts, z, T, "z"),
+    }[consumer]
+    frames = [run()]
+    readers = [
+        r
+        for df in frames + kept
+        for r in _halo_readers(df._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
+    ]
+    want = "FlatMapCoGroupsInArrow" if consumer == "sample_bilinear" else "FlatMapGroupsInArrow"
+    assert readers and set(readers) == {want}, readers
