@@ -1,16 +1,24 @@
-"""Bilinear 2x upsampling of a tiled raster — the warp direction the
-overview pyramid (engine/pyramid.py, downsample) doesn't cover; the
-engine analogue of a gdalwarp/zoom-in resample.
+"""Resampling of a tiled raster: bilinear 2x upsampling, the bilinear
+point drill and the warp — the directions the overview pyramid
+(engine/pyramid.py, downsample) doesn't cover; the engine analogue of
+a gdalwarp resample.
 
-Scale design: ONE 1-pixel halo group (``tiling.halo_map``, the same
-exchange and Arrow group runner as every focal op) per parent tile,
-which emits its <=4 child tiles. No other shuffle: output volume is 4x
-input, produced map-side after the halo groupBy. Fusing interpolation
-into the halo-assembly stage is the plan that survives scale-up — the
-alternative (explode per-pixel, join 4 corners) would shuffle 4 rows
-per OUTPUT pixel.
+Upsample scale design: ONE 1-pixel halo group (``tiling.halo_map``,
+the same exchange and Arrow group runner as every focal op) per parent
+tile, which emits its <=4 child tiles. No other shuffle: output volume
+is 4x input, produced map-side after the halo groupBy. Fusing
+interpolation into the halo-assembly stage is the plan that survives
+scale-up — the alternative (explode per-pixel, join 4 corners) would
+shuffle 4 rows per OUTPUT pixel.
 
-Pinned semantics (SQL-replicable; oracle = 4-corner arithmetic join):
+Warp scale design: ONE warp path. ``warp_transform`` plans each output
+tile's source bbox from metadata only, ships each source tile to the
+output tiles whose bbox covers it, and gathers once per output tile
+in an ``applyInArrow`` group; ``warp_affine`` is a minification guard
+(overview pre-reduction) in front of it.
+
+Pinned upsample semantics (SQL-replicable; oracle = 4-corner
+arithmetic join):
 - child pixel (ci, cj) at level L+1 interpolates parent coordinate
   p = (c + 0.5)/2 - 0.5 per axis: corners floor(p), floor(p)+1 with
   weights (1-frac, frac);
@@ -50,10 +58,10 @@ __all__ = [
 def _bilinear_corners(fx, fy):
     """THE pinned bilinear corner rule, in one place: corner order
     (0,0),(0,1),(1,0),(1,1) with per-axis weights (1-f, f). Every
-    bilinear implementation in this module (_sample_from_rows,
-    bilinear_2x, sample_bilinear) iterates this generator — the DuckDB
-    oracles mirror the same rule bit-for-bit, so a weight/order change
-    must happen here and nowhere else. The anchor convention
+    bilinear implementation in this module (_sample_from_rows for both
+    warps, bilinear_2x, sample_bilinear) iterates this generator — the
+    DuckDB oracles mirror the same rule bit-for-bit, so a weight/order
+    change must happen here and nowhere else. The anchor convention
     (floor(p - 0.5), NaN-renormalize, den==0 -> NaN) is shared by the
     three call sites per their docstrings."""
     for dy in (0, 1):
@@ -64,55 +72,58 @@ def _bilinear_corners(fx, fy):
 
 
 def _sample_from_rows(
-    pdf: pd.DataFrame, p_i: np.ndarray, p_j: np.ndarray, method: str, T: int
+    table: pa.Table, p_i: np.ndarray, p_j: np.ndarray, method: str, T: int
 ) -> np.ndarray:
-    """Sample source-pixel coordinates (p_i, p_j) from the gathered
-    source-tile rows of one output group — the shared kernel of
-    warp_affine and warp_transform. NaN coordinates (out of the
-    transform's domain) and uncovered coordinates yield NaN.
+    """Sample source-pixel coordinates (p_i, p_j) from the source tiles
+    one output tile's warp gather received (an Arrow table with
+    ``tile_x``, ``tile_y``, ``nrows``, ``ncols`` and ``data`` columns,
+    payloads read through ``tiling._list_values``, null cells as NaN).
+    NaN coordinates (out of the transform's domain) and coordinates no
+    gathered tile covers yield NaN.
 
     nearest: value of the containing cell floor(p). bilinear: 4 corners
     at floor(p−.5)(+1), fractional weights, NaN-renormalizing
-    valid-corner rule (the engine's pinned corner convention)."""
-    n = len(p_i)
+    valid-corner rule (the engine's pinned corner convention). Each
+    corner is looked up over all the tiles before it is accumulated, so
+    a point's sums run in corner order whichever tile serves it."""
     ok = np.isfinite(p_i) & np.isfinite(p_j)
     pi = np.where(ok, p_i, -(2.0**40))  # sentinel far outside any tile
     pj = np.where(ok, p_j, -(2.0**40))
-    if method == "nearest":
-        si = np.floor(pi).astype(np.int64)
-        sj = np.floor(pj).astype(np.int64)
-        out = np.full(n, np.nan)
-        for row in pdf.itertuples(index=False):
-            snr, snc = int(row.nrows), int(row.ncols)
-            arr = np.asarray(row.data, dtype=np.float64)
-            li = si - row.tile_x * T
-            lj = sj - row.tile_y * T
+    src = []
+    for b in table.to_batches():
+        off, vals = tiling._list_values(b.column("data"))
+        tx, ty, nr, nc = (
+            b.column(c).to_numpy() for c in ("tile_x", "tile_y", "nrows", "ncols")
+        )
+        src += [
+            (int(tx[k]) * T, int(ty[k]) * T, int(nr[k]), int(nc[k]),
+             vals[off[k] : off[k + 1]])
+            for k in range(b.num_rows)
+        ]
+
+    def lookup(ci: np.ndarray, cj: np.ndarray) -> np.ndarray:
+        v = np.full(len(ci), np.nan)
+        for x0, y0, snr, snc, flat in src:
+            li, lj = ci - x0, cj - y0
             sel = (li >= 0) & (li < snc) & (lj >= 0) & (lj < snr)
             if sel.any():
-                out[sel] = arr[lj[sel] * snc + li[sel]]
-        return out
-    # bilinear, pinned corner order (0,0),(0,1),(1,0),(1,1)
+                v[sel] = flat[lj[sel] * snc + li[sel]]
+        return v
+
+    if method == "nearest":
+        return lookup(np.floor(pi).astype(np.int64), np.floor(pj).astype(np.int64))
     i0 = np.floor(pi - 0.5).astype(np.int64)
     j0 = np.floor(pj - 0.5).astype(np.int64)
     fx = (pi - 0.5) - i0
     fy = (pj - 0.5) - j0
-    num = np.zeros(n)
-    den = np.zeros(n)
+    num = np.zeros(len(pi))
+    den = np.zeros(len(pi))
     for dy, dx, wy, wx in _bilinear_corners(fx, fy):
-        ci, cj = i0 + dx, j0 + dy
-        for row in pdf.itertuples(index=False):
-            snr, snc = int(row.nrows), int(row.ncols)
-            arr = np.asarray(row.data, dtype=np.float64)
-            li = ci - row.tile_x * T
-            lj = cj - row.tile_y * T
-            sel = (li >= 0) & (li < snc) & (lj >= 0) & (lj < snr)
-            if not sel.any():
-                continue
-            v = arr[lj[sel] * snc + li[sel]]
-            okc = ~np.isnan(v)
-            w = (wy * wx)[sel]
-            num[sel] += np.where(okc, w * v, 0.0)
-            den[sel] += np.where(okc, w, 0.0)
+        v = lookup(i0 + dx, j0 + dy)
+        okc = ~np.isnan(v)
+        w = wy * wx
+        num += np.where(okc, w * v, 0.0)
+        den += np.where(okc, w, 0.0)
     with np.errstate(invalid="ignore", divide="ignore"):
         out = num / den
     out[den == 0.0] = np.nan
@@ -273,6 +284,9 @@ def sample_bilinear(
 # warp_affine's per-output-tile gather backstop (source tiles)
 _WARP_GATHER_CAP = 256
 
+# boundary samples per output-tile edge in warp_transform's planner
+_EDGE_SAMPLES = 9
+
 
 def warp_affine(
     tiles: DataFrame,
@@ -299,15 +313,11 @@ def warp_affine(
     bilinear_2x / sample_bilinear); no valid corner → NaN. The general
     gdalwarp shape: scale, rotate, translate, flip are all affine.
 
-    Scale design: a PLANNING join on tile METADATA only — each output
-    tile's pixel-center bbox maps through the affine to a source bbox
-    (exact for an affine: extrema at corners), JVM `sequence`-exploded
-    to the covered source-tile ids; the DATA join ships each source
-    tile to exactly the output tiles that need it (fan-out ≈ the area
-    ratio), then ONE applyInPandas per output tile gathers vectorized
-    per present source tile. No per-pixel rows ever shuffle;
-    absent/out-of-extent output tiles are simply absent (sparse-raster
-    convention).
+    Scale design: the minification guard below, then ONE call to
+    ``warp_transform`` with the affine as its inverse map, which plans
+    and gathers. Its planner needs no extra ``margin`` here: an
+    affine's extrema over an output tile lie at the tile's corner pixel
+    centers, which are among the boundary samples.
 
     Minification guard (round 4, pinned semantics; r5 fix): a strongly
     minifying affine would gather O(extent-ratio) source tiles into one
@@ -327,11 +337,11 @@ def warp_affine(
     that level with the coeffs rescaled by 2^levels. It also
     pre-reduces while ``(fx' + 2)·(fy' + 2)`` (the per-axis extents at
     that level, plus the alignment/bilinear-margin tiles) exceeds the
-    loud 256-tile backstop in the gather kernel (warp_transform's
-    contract), so no legal ``max_fanout`` plans a gather past it; the
-    backstop guards whatever the planner did not foresee. ``stats``
-    records {'det', 'fanout_xy', 'overview_levels', 'residual_det'}
-    for plan tests.
+    256-tile gather backstop (warp_transform's ``max_gather_tiles``,
+    which counts the planned bbox tiles), so no legal ``max_fanout``
+    plans a gather past it; the backstop raises on whatever the planner
+    did not foresee. ``stats`` records {'det', 'fanout_xy',
+    'overview_levels', 'residual_det'} for plan tests.
     """
     if method not in ("nearest", "bilinear"):
         raise ValueError(f"unknown warp method: {method}")
@@ -360,99 +370,21 @@ def warp_affine(
 
         # band-filter FIRST: the overview reduction is Python-side
         # work per tile and must not run over the other bands
-        reduced = tiles.filter(F.col("band") == band)
+        tiles = tiles.filter(F.col("band") == band)
         agg = "mode" if method == "nearest" else "mean"
         for k in range(n_over):
-            reduced = pyramid.build_overview(reduced, T, level - k, agg)
+            tiles = pyramid.build_overview(tiles, T, level - k, agg)
         s = float(2 ** n_over)
-        return warp_affine(
-            reduced, T,
-            (a / s, b / s, c / s, d / s, e / s, f / s),
-            out_shape, band=band, out_band=out_band, level=level,
-            method=method, max_fanout=float("inf"),
-        )
+        a, b, c, d, e, f = a / s, b / s, c / s, d / s, e / s, f / s
 
-    H, W = out_shape
-    nx_out = (W + T - 1) // T
-    ny_out = (H + T - 1) // T
-    # bilinear corners reach one pixel beyond the containing cell
-    margin = 0 if method == "nearest" else 1
+    def inverse(gx: np.ndarray, gy: np.ndarray):
+        return a * gx + b * gy + c, d * gx + e * gy + f
 
-    out_tiles = tiles.sparkSession.range(nx_out * ny_out).select(
-        (F.col("id") % nx_out).cast("int").alias("otx"),
-        (F.col("id") / nx_out).cast("int").alias("oty"),
+    return warp_transform(
+        tiles, T, inverse, out_shape, band=band, out_band=out_band,
+        level=level, method=method, margin=0.0,
+        max_gather_tiles=_WARP_GATHER_CAP,
     )
-    # ragged edge: actual pixel extent of each output tile
-    ow = F.least(F.lit(W) - F.col("otx") * T, F.lit(T))
-    oh = F.least(F.lit(H) - F.col("oty") * T, F.lit(T))
-    x0 = F.col("otx") * T + F.lit(0.5)
-    y0 = F.col("oty") * T + F.lit(0.5)
-    x1 = F.col("otx") * T + ow - F.lit(0.5)
-    y1 = F.col("oty") * T + oh - F.lit(0.5)
-    corners_i = [
-        F.lit(a) * xx + F.lit(b) * yy + F.lit(c)
-        for xx in (x0, x1) for yy in (y0, y1)
-    ]
-    corners_j = [
-        F.lit(d) * xx + F.lit(e) * yy + F.lit(f)
-        for xx in (x0, x1) for yy in (y0, y1)
-    ]
-    si_min = F.floor(F.least(*corners_i)).cast("long") - margin
-    si_max = F.floor(F.greatest(*corners_i)).cast("long") + margin
-    sj_min = F.floor(F.least(*corners_j)).cast("long") - margin
-    sj_max = F.floor(F.greatest(*corners_j)).cast("long") + margin
-    plan = (
-        out_tiles.select(
-            "otx", "oty",
-            F.explode(
-                F.sequence(
-                    F.floor(si_min / T).cast("int"), F.floor(si_max / T).cast("int")
-                )
-            ).alias("tile_x"),
-            # F.floor on BOTH axes: a bare int cast truncates toward
-            # zero and would under-cover negative tile rows (r3 ADVICE)
-            F.floor(sj_min / T).cast("int").alias("_sty0"),
-            F.floor(sj_max / T).cast("int").alias("_sty1"),
-        )
-        .select(
-            "otx", "oty", "tile_x",
-            F.explode(F.sequence("_sty0", "_sty1")).alias("tile_y"),
-        )
-    )
-    joined = plan.join(
-        tiles.filter(F.col("band") == band).select(
-            "tile_x", "tile_y", "nrows", "ncols", "data"
-        ),
-        ["tile_x", "tile_y"],
-    )
-
-    def gather(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        otx, oty = int(key[0]), int(key[1])
-        if len(pdf) > _WARP_GATHER_CAP:
-            # belt-and-braces executor-memory backstop (the
-            # warp_transform contract): the fanout guard should keep
-            # groups small; anything past it must fail loudly, not OOM
-            raise RuntimeError(
-                f"warp_affine: output tile ({otx},{oty}) gathers "
-                f"{len(pdf)} source tiles (> {_WARP_GATHER_CAP}) — lower "
-                "max_fanout or pre-reduce the source"
-            )
-        onr = min(H - oty * T, T)
-        onc = min(W - otx * T, T)
-        oj, oi = np.divmod(np.arange(onr * onc), onc)
-        gx = otx * T + oi + 0.5
-        gy = oty * T + oj + 0.5
-        p_i = a * gx + b * gy + c
-        p_j = d * gx + e * gy + f
-        out = _sample_from_rows(pdf, p_i, p_j, method, T)
-        return pd.DataFrame(
-            [{
-                "tile_x": otx, "tile_y": oty, "level": level,
-                "band": out_band, "nrows": onr, "ncols": onc, "data": out,
-            }]
-        )
-
-    return joined.groupBy("otx", "oty").applyInPandas(gather, tiling.TILES_SCHEMA)
 
 
 def inverse_mercator_to_platecarree(
@@ -489,46 +421,46 @@ def warp_transform(
     out_band: str = "warp",
     level: int = 0,
     method: str = "nearest",
-    edge_samples: int = 9,
     margin: float = 2.0,
     max_gather_tiles: int = 64,
     stats: dict | None = None,
 ) -> DataFrame:
-    """General (non-affine) warp / reprojection: output cell (oi, oj)
+    """General warp / reprojection, and the one warp path (warp_affine
+    calls it with the affine as ``inverse``): output cell (oi, oj)
     samples the source at ``(p_i, p_j) = inverse(oi+.5, oj+.5)`` —
     ``inverse`` is any vectorized NumPy callable mapping output pixel
     coordinates to source pixel coordinates (plate-carrée → Mercator,
     sinusoidal, lens distortion, ...). NaN/inf from ``inverse`` =
     outside the transform's domain → NaN output. Sampling (nearest /
-    bilinear NaN-renormalizing corners) is pinned identically to
-    warp_affine (shared kernel ``_sample_from_rows``).
+    bilinear NaN-renormalizing corners) is ``_sample_from_rows``.
 
-    Scale design — the warp_affine planning-join shape generalized:
-    the source bbox of an output tile is no longer corner-exact, so a
-    METADATA-ONLY mapInPandas over the output-tile list (ny·nx rows,
-    never pixels) pushes ``edge_samples`` points per tile boundary edge
-    through ``inverse`` and takes the sample bbox ± ``margin`` source
-    pixels. Contract (standard gdalwarp sampling assumption): the
+    Scale design: a METADATA-ONLY mapInPandas over the output-tile list
+    (ny·nx rows, never pixels) pushes ``_EDGE_SAMPLES`` points per tile
+    boundary edge (corners included) through ``inverse`` and takes the
+    sample bbox ± ``margin`` source pixels (+1 for the bilinear
+    corners). Contract (standard gdalwarp sampling assumption): the
     transform is smooth enough that its coordinate extrema over a tile
     rectangle occur on (within ``margin`` px of) the boundary samples —
-    true for every map projection at practical tile sizes. The bbox
-    explodes JVM-side to covered source-tile ids, the DATA join ships
-    each source tile only where needed, and ONE applyInPandas per
-    output tile gathers. Per-pixel rows never shuffle.
+    true for every map projection at practical tile sizes, and exact
+    with ``margin=0`` for an affine. The bbox explodes JVM-side to
+    covered source-tile ids, a broadcast join ships each source tile
+    only where needed, and ONE ``groupBy(otx, oty).applyInArrow`` per
+    output tile gathers, reading the payloads zero-copy. Per-pixel
+    rows never shuffle; an output tile whose bbox covers no present
+    source tile is absent (sparse-raster convention).
 
     Guard: a tile whose bbox covers more than ``max_gather_tiles``
     source tiles raises (executor-memory cliff — strongly minifying
     transforms should pre-reduce through the overview pyramid, as
-    warp_affine does automatically for the uniform-|det| affine case,
-    or warp at a parent level). ``stats`` records
-    {'max_fanout_tiles': n} for plan tests."""
+    warp_affine does automatically, or warp at a parent level).
+    ``stats`` records {'max_fanout_tiles': n} for plan tests."""
     if method not in ("nearest", "bilinear"):
         raise ValueError(f"unknown warp method: {method}")
     H, W = out_shape
     nx_out = (W + T - 1) // T
     ny_out = (H + T - 1) // T
     marg = float(margin) + (0.0 if method == "nearest" else 1.0)
-    S = int(edge_samples)
+    S = _EDGE_SAMPLES
 
     out_tiles = tiles.sparkSession.range(nx_out * ny_out).select(
         (F.col("id") % nx_out).cast("int").alias("otx"),
@@ -604,28 +536,32 @@ def warp_transform(
         ["tile_x", "tile_y"],
     )
 
-    def gather(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        otx, oty = int(key[0]), int(key[1])
-        if len(pdf) and int(pdf["_fan"].iloc[0]) > max_gather_tiles:
+    arrow = tiling.arrow_schema(tiling.TILES_SCHEMA)
+
+    def gather(key, table):  # unannotated: Arrow UDFs take no eval type from hints
+        otx, oty = key[0].as_py(), key[1].as_py()
+        fan = table.column("_fan")[0].as_py()
+        if fan > max_gather_tiles:
             # executor-side guard: fires even when stats wasn't requested
             raise ValueError(
-                f"warp_transform: output tile ({otx},{oty}) gathers "
-                f"{int(pdf['_fan'].iloc[0])} source tiles "
-                f"(> max_gather_tiles={max_gather_tiles})"
+                f"warp_transform: output tile ({otx},{oty}) gathers {fan} "
+                f"source tiles (> max_gather_tiles={max_gather_tiles}) — "
+                "pre-reduce via the overview pyramid or warp at a parent level"
             )
         onr = min(H - oty * T, T)
         onc = min(W - otx * T, T)
         oj, oi = np.divmod(np.arange(onr * onc), onc)
         p_i, p_j = inverse(otx * T + oi + 0.5, oty * T + oj + 0.5)
         out = _sample_from_rows(
-            pdf, np.asarray(p_i, dtype=np.float64),
+            table, np.asarray(p_i, dtype=np.float64),
             np.asarray(p_j, dtype=np.float64), method, T
         )
-        return pd.DataFrame(
-            [{
-                "tile_x": otx, "tile_y": oty, "level": level,
-                "band": out_band, "nrows": onr, "ncols": onc, "data": out,
-            }]
+        # NaN cells cross as Spark nulls, as tile payloads do elsewhere
+        data = pa.ListArray.from_arrays(
+            pa.array([0, onr * onc], pa.int32()), pa.array(out, from_pandas=True)
+        )
+        return pa.Table.from_arrays(
+            [[otx], [oty], [level], [out_band], [onr], [onc], data], schema=arrow
         )
 
-    return joined.groupBy("otx", "oty").applyInPandas(gather, tiling.TILES_SCHEMA)
+    return joined.groupBy("otx", "oty").applyInArrow(gather, tiling.TILES_SCHEMA)

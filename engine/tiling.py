@@ -257,7 +257,10 @@ def _emit_halo(
     """Per source tile: emit the center payload + 8 boundary strips
     addressed to the neighbors that need them (narrow op, pre-shuffle).
     Strips are NumPy slices of the zero-copy payload; one output batch
-    per input batch, its payloads concatenated into one list array."""
+    per input batch, its payloads concatenated into one list array.
+    Under ``wrap_nx`` every tile must be at least T wide: a strip
+    crossing the x seam is addressed as if both sides were full tiles,
+    so a ragged tile would read NaN halos silently."""
     for b in batches:
         off, vals = _list_values(b.column("data"))
         tx, ty, nrows, ncols = (
@@ -267,6 +270,11 @@ def _emit_halo(
         parts: list[np.ndarray] = []
         for i in range(b.num_rows):
             nr, nc = int(nrows[i]), int(ncols[i])
+            if wrap_nx is not None and nc < T:
+                raise ValueError(
+                    f"halo_exchange: wrap_nx requires x-regular tiles (ncols >= T "
+                    f"== {T}); tile ({tx[i]},{ty[i]}) has ncols={nc}"
+                )
             arr = vals[off[i] : off[i + 1]].reshape(nr, nc)
             for dy in (-1, 0, 1):
                 y0 = max(0, dy * T - g)

@@ -725,6 +725,18 @@ def test_strahler_wrap_requires_x_regular_tiles(spark):
         flow.strahler(dir_tiles, acc_tiles, 8, threshold=2.0, wrap_nx=4)
 
 
+def test_flow_direction_wrap_requires_x_regular_tiles(spark):
+    """The halo exchange under wrap_nx addresses seam strips as if every
+    tile were T wide, so a ragged last tile column (17x33 at T=16)
+    raises, naming the tile, instead of reading NaN seam halos."""
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(fixtures.dem_arith(size=64)[:17, :33], 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    with pytest.raises(PythonException, match=r"wrap_nx requires x-regular.*tile \(2,"):
+        flow.flow_direction(tiles, 16, wrap_nx=3).collect()
+
+
 def test_strahler_no_network(spark):
     """A threshold above every accumulation extracts no network: the
     plane is 0 on valid cells and NaN on nodata."""

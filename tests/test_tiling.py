@@ -413,3 +413,25 @@ def test_halo_consumers_read_groups_in_arrow(spark, monkeypatch, consumer):
     ]
     want = "FlatMapCoGroupsInArrow" if consumer == "sample_bilinear" else "FlatMapGroupsInArrow"
     assert readers and set(readers) == {want}, readers
+
+
+@pytest.mark.parametrize("warp", ["warp_affine", "warp_transform"])
+def test_warp_gathers_read_groups_in_arrow(spark, warp):
+    """Both warps gather their output tiles in one Arrow group: the
+    plan's grouped Python nodes are FlatMapGroupsInArrow only."""
+    from engine import resample
+
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(fixtures.dem_arith(size=32), 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    a, b, c, d, e, f = coeffs = (0.7, -0.4, 6.0, 0.4, 0.7, -3.0)
+    df = {
+        "warp_affine": lambda: resample.warp_affine(tiles, 16, coeffs, (40, 56)),
+        "warp_transform": lambda: resample.warp_transform(
+            tiles, 16, lambda gx, gy: (a * gx + b * gy + c, d * gx + e * gy + f), (40, 56)
+        ),
+    }[warp]()
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    nodes = {ln.lstrip(" :+-|").split(" ", 1)[0] for ln in plan.splitlines()}
+    assert {n for n in nodes & set(_PY_NODES) if "Groups" in n} == {"FlatMapGroupsInArrow"}, plan
