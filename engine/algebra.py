@@ -6,17 +6,18 @@ zonal = engine/zonal.py, global = engine/patches.py): each output cell
 depends only on the same cell of the input bands.
 
 Scale design:
-- ``local_map`` gathers a tile's bands with ONE groupBy and computes
-  the NumPy expression per tile — a single shuffle keyed by tile, no
-  halo (local ops need none), payloads stay packed arrays;
+- ``local_map`` gathers a tile's bands in the co-located band group
+  (``tiling.halo_map`` with ``g=0``: a JVM projection, ONE shuffle
+  keyed by tile, no halo since local ops need none) and computes the
+  NumPy expression per tile on Arrow payloads;
 - ``reclassify`` is a special-cased single-band local_map with a
   vectorized sorted-key lookup (np.searchsorted), the pattern that
   stays O(log k) per cell for k-entry class maps;
 - ``sample_raster`` (point drill): points already carrying tile/ti/tj
-  encode (udfs.with_cell_and_tile) equi-join the tile table on the
-  tile key and read their pixel — one co-partitionable shuffle on
-  (tile_x, tile_y); the tile side ships each tile payload once per
-  tile, never per point.
+  encode (udfs.with_cell_and_tile) cogroup with the tile table on the
+  tile key in ONE ``applyInArrow`` and read their pixel — one
+  co-partitionable shuffle on (tile_x, tile_y); the tile side ships
+  each tile payload once per tile, never per point.
 
 Pinned semantics:
 - reclassify: unmapped classes -> ``default`` (NaN unless given);
@@ -31,7 +32,7 @@ Pinned semantics:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,28 +54,13 @@ def local_map(
     2-D array``."""
     sub = tiles.filter(F.col("band").isin(list(in_bands)))
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        got = {
-            r.band: np.asarray(r.data, dtype=np.float64).reshape(r.nrows, r.ncols)
-            for r in pdf.itertuples(index=False)
-        }
-        if not all(b in got for b in in_bands):
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "level", "band", "nrows", "ncols", "data"]
-            )
-        out = np.asarray(fn(got), dtype=np.float64)
-        return pd.DataFrame(
-            [
-                {
-                    "tile_x": int(key[0]), "tile_y": int(key[1]),
-                    "level": level, "band": out_band,
-                    "nrows": out.shape[0], "ncols": out.shape[1],
-                    "data": out.ravel(),
-                }
-            ]
-        )
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int):
+        if not all(b in bands for b in in_bands):
+            return None
+        out = np.asarray(fn(bands), dtype=np.float64)
+        return tiling.tile_table(tx, ty, level, [out_band], [out])
 
-    return sub.groupBy("tile_x", "tile_y").applyInPandas(run, tiling.TILES_SCHEMA)
+    return tiling.halo_map(sub, T, 0, None, run, tiling.TILES_SCHEMA)
 
 
 def reclassify(
@@ -131,30 +117,34 @@ def sample_raster(
     )
     cols = list(point_cols)
 
-    def extract(key, pts_pdf: pd.DataFrame, tiles_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pts_pdf) == 0 or len(tiles_pdf) == 0:
-            return pd.DataFrame(columns=[*cols, "value"])
-        r = tiles_pdf.iloc[0]
-        arr = np.asarray(r.data, dtype=np.float64)
-        ti = pts_pdf["ti"].to_numpy(dtype=np.int64)
-        tj = pts_pdf["tj"].to_numpy(dtype=np.int64)
-        # bounds guard for ragged tiles: ti >= ncols would silently
-        # wrap into the next row, tj >= nrows would IndexError in the
-        # executor — out-of-extent points sample NaN instead
-        ok = (ti >= 0) & (ti < int(r.ncols)) & (tj >= 0) & (tj < int(r.nrows))
-        idx = np.where(ok, tj * int(r.ncols) + ti, 0)
-        out = pts_pdf[cols].copy()
-        out["value"] = np.where(ok, arr[idx], np.nan)
-        return out
-
     out_schema = ", ".join(
         f"{c} {t}" for c, t in zip(
             [*cols, "value"],
             [*[dict(p.dtypes)[c] for c in cols], "double"],
         )
     )
+    out_arrow = tiling.arrow_schema(out_schema)
+
+    def extract(key, pts, tile):  # unannotated: Arrow UDFs take no eval type from hints
+        if pts.num_rows == 0 or tile.num_rows == 0:
+            return out_arrow.empty_table()
+        (plane,) = next(tiling.tile_planes(tile))
+        nr, nc = plane.shape
+        ti = pts.column("ti").to_numpy().astype(np.int64)
+        tj = pts.column("tj").to_numpy().astype(np.int64)
+        # bounds guard for ragged tiles: ti >= ncols would silently
+        # wrap into the next row, tj >= nrows would IndexError in the
+        # executor — out-of-extent points sample NaN instead
+        ok = (ti >= 0) & (ti < nc) & (tj >= 0) & (tj < nr)
+        value = np.where(ok, plane.ravel()[np.where(ok, tj * nc + ti, 0)], np.nan)
+        # NaN samples leave as nulls, the representation pandas UDFs emit
+        return pa.Table.from_arrays(
+            [*(pts.column(c) for c in cols), pa.array(value, from_pandas=True)],
+            schema=out_arrow,
+        )
+
     return (
         p.groupBy("tile_x", "tile_y")
         .cogroup(t.groupBy("tile_x", "tile_y"))
-        .applyInPandas(extract, out_schema)
+        .applyInArrow(extract, out_schema)
     )

@@ -8,9 +8,9 @@ cells, row-unstandardized):
                / sum_i dev_i^2,          dev_i = x_i - mean(x)
 
 Scale design — two passes, both map-side-partial shaped:
-1. the global mean: per-tile (n, sum) partials via mapInPandas, one
-   single-row agg, one scalar collect (constant driver traffic at any
-   raster size);
+1. the global mean: ``zonal.moments``' per-tile partials (one
+   ``tiling.map_tiles`` pass), one single-row agg, one scalar collect
+   (constant driver traffic at any raster size);
 2. ONE 1-pixel halo group (``tiling.halo_map``, the exchange and Arrow
    group runner of every focal op) that reduces each tile to six
    scalars (num, den, W, n, Geary and Getis partials) — the
@@ -33,45 +33,23 @@ Pinned semantics:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from engine import tiling
+from engine import tiling, zonal
 
 __all__ = ["band_moments", "moran_i"]
 
 
 def band_moments(tiles: DataFrame, band: str) -> tuple[int, float, float]:
     """Global (n, sum, sum-of-squares) over the valid cells of one
-    band — ONE map-side-partial pass (per-batch NumPy reduction via
-    mapInPandas, one single-row agg, one scalar collect; constant
-    driver traffic at any raster size)."""
-    sub = tiles.filter(F.col("band") == band)
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-            if not vs:
-                continue
-            v = np.concatenate(vs)
-            v = v[np.isfinite(v)]
-            if len(v):
-                yield pd.DataFrame(
-                    {"n": [len(v)], "s": [v.sum()], "s2": [(v * v).sum()]}
-                )
-
+    band — ``zonal.moments``' one map-side-partial pass, one single-row
+    agg, one scalar collect; constant driver traffic at any raster
+    size."""
     row = (
-        sub.select("data")
-        .mapInPandas(partials, "n long, s double, s2 double")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.sum("s2").alias("s2"),
-        )
+        zonal.moments(tiles, band)
+        .agg(F.sum("n").alias("n"), F.sum("s").alias("s"), F.sum("s2").alias("s2"))
         .collect()[0]
     )
     if row.n is None or int(row.n) == 0:
@@ -109,7 +87,7 @@ def moran_i(
     # denominator): (sum x)^2 - sum x^2 — global scalars, no pair scan.
     g_den = s_glob**2 - s2_glob
 
-    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> dict:
         (_, z), = bands.items()
         c = z[1 : 1 + nr, 1 : 1 + nc]
         valid = np.isfinite(c)
@@ -131,12 +109,10 @@ def moran_i(
         den = float(np.sum(dev * dev))
         w = int(np.sum(deg[valid]))
         gnum = float(np.sum(np.where(valid, c, 0.0) * nbr_sum))
-        return pd.DataFrame(
-            {
-                "num": [num], "den": [den], "w": [w],
-                "n": [int(valid.sum())], "cnum": [cnum], "gnum": [gnum],
-            }
-        )
+        return {
+            "num": [num], "den": [den], "w": [w],
+            "n": [int(valid.sum())], "cnum": [cnum], "gnum": [gnum],
+        }
 
     part = tiling.halo_map(
         sub, T, 1, wrap_nx, run,

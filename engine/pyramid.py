@@ -3,10 +3,11 @@ coarser levels (S/A-family extension — the raster analogue of a
 hypertable rollup, and what every tile server precomputes).
 
 Scale design: one overview level costs exactly ONE shuffle.
-Stage A (mapInPandas, zero shuffle) block-reduces each T x T tile to
-its (T/2) x (T/2) parent quadrant; stage B (applyInPandas after a
-groupBy on the parent key) assembles <=4 quadrants into the parent
-tile. Data volume quarters per level, so a full pyramid costs ~4/3 of
+Stage A (``tiling.map_tiles``, zero shuffle) block-reduces each T x T
+tile to its (T/2) x (T/2) parent quadrant, still keyed by the child
+tile; stage B (``applyInArrow`` after a groupBy on the parent key, the
+child key shifted right by one bit in the JVM) assembles <=4 quadrants
+into the parent tile. Data volume quarters per level, so a full pyramid costs ~4/3 of
 one pass over the base raster regardless of depth. Parent tiles exist
 iff any child tile exists; parents are sized to the ACTUAL covered
 extent (ragged edge tiles — odd sizes included — reduce to ragged
@@ -29,22 +30,13 @@ with GROUP BY gi//2, gj//2):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from engine import tiling
 
 __all__ = ["block_reduce", "build_overview", "build_pyramid"]
-
-_QUAD_SCHEMA = (
-    "ptx int, pty int, qx int, qy int, level int, band string, "
-    "nrows int, ncols int, data array<double>"
-)
-
 
 def block_reduce(a: np.ndarray, agg: str) -> np.ndarray:
     """(H, W) -> (ceil(H/2), ceil(W/2)) NaN-aware 2x2 reduction. Odd
@@ -94,55 +86,31 @@ def build_overview(
     if T % 2:
         raise ValueError("tile size must be even for 2x2 overviews")
 
-    def reduce_quads(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = np.asarray(r.data, dtype=np.float64).reshape(r.nrows, r.ncols)
-                red = block_reduce(a, agg)
-                rows.append(
-                    {
-                        "ptx": r.tile_x // 2, "pty": r.tile_y // 2,
-                        "qx": r.tile_x % 2, "qy": r.tile_y % 2,
-                        "level": level - 1, "band": r.band,
-                        "nrows": red.shape[0], "ncols": red.shape[1],
-                        "data": red.ravel(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["ptx", "pty", "qx", "qy", "level", "band",
-                         "nrows", "ncols", "data"],
-            )
+    h = T // 2
 
-    quads = tiles.mapInPandas(reduce_quads, _QUAD_SCHEMA)
+    def reduce_quad(tx: int, ty: int, lv: int, band: str, plane: np.ndarray):
+        return tiling.tile_table(tx, ty, level - 1, [band], [block_reduce(plane, agg)])
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ptx, pty, band = int(key[0]), int(key[1]), str(key[2])
-        h = T // 2
+    def assemble(key, table):  # unannotated: Arrow UDFs take no eval type from hints
+        ptx, pty, band = (k.as_py() for k in key)
+        quads = [
+            ((ty % 2) * h, (tx % 2) * h, q)
+            for tx, ty, q in tiling.tile_planes(table, "tile_x", "tile_y")
+        ]
         # parent sized to the ACTUAL covered extent (ragged edge tiles
         # produce ragged parents — no NaN cells invented beyond the
         # raster's true extent); quadrants absent within the extent
         # still fill NaN
-        nr = max(int(r.qy) * h + int(r.nrows) for r in pdf.itertuples(index=False))
-        nc = max(int(r.qx) * h + int(r.ncols) for r in pdf.itertuples(index=False))
+        nr = max(y + q.shape[0] for y, _, q in quads)
+        nc = max(x + q.shape[1] for _, x, q in quads)
         out = np.full((nr, nc), np.nan)
-        for r in pdf.itertuples(index=False):
-            blk = np.asarray(r.data, dtype=np.float64).reshape(r.nrows, r.ncols)
-            out[r.qy * h : r.qy * h + r.nrows, r.qx * h : r.qx * h + r.ncols] = blk
-        return pd.DataFrame(
-            [
-                {
-                    "tile_x": ptx, "tile_y": pty,
-                    "level": int(pdf.iloc[0].level), "band": band,
-                    "nrows": nr, "ncols": nc, "data": out.ravel(),
-                }
-            ]
-        )
+        for y, x, q in quads:
+            out[y : y + q.shape[0], x : x + q.shape[1]] = q
+        return tiling.tile_table(ptx, pty, level - 1, [band], [out])
 
-    return quads.groupBy("ptx", "pty", "band").applyInPandas(
-        assemble, tiling.TILES_SCHEMA
-    )
+    quads = tiling.map_tiles(tiles, reduce_quad, tiling.TILES_SCHEMA)
+    parent = [F.shiftright(c, 1).alias(p) for c, p in (("tile_x", "ptx"), ("tile_y", "pty"))]
+    return quads.groupBy(*parent, "band").applyInArrow(assemble, tiling.TILES_SCHEMA)
 
 
 def build_pyramid(

@@ -12,10 +12,12 @@ scale-up — the alternative (explode per-pixel, join 4 corners) would
 shuffle 4 rows per OUTPUT pixel.
 
 Warp scale design: ONE warp path. ``warp_transform`` plans each output
-tile's source bbox from metadata only, ships each source tile to the
-output tiles whose bbox covers it, and gathers once per output tile
-in an ``applyInArrow`` group; ``warp_affine`` is a minification guard
-(overview pre-reduction) in front of it.
+tile's source bbox on the driver from metadata only (a grid of pixel
+centers, interior included), ships each source tile to the output
+tiles whose bbox covers it, and gathers once per output tile in an
+``applyInArrow`` group that raises if a pixel reads outside its plan;
+``warp_affine`` is a minification guard (overview pre-reduction) in
+front of it. No stage of this module is a pandas UDF.
 
 Pinned upsample semantics (SQL-replicable; oracle = 4-corner
 arithmetic join):
@@ -38,7 +40,6 @@ arithmetic join):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,13 +72,20 @@ def _bilinear_corners(fx, fy):
             yield dy, dx, wy, wx
 
 
+def _anchor(p: np.ndarray, method: str) -> np.ndarray:
+    """The first source cell the sampler reads along one axis: the
+    containing cell floor(p) for nearest, the low corner floor(p − .5)
+    for bilinear (whose second corner is the next cell)."""
+    return np.floor(p if method == "nearest" else p - 0.5).astype(np.int64)
+
+
 def _sample_from_rows(
     table: pa.Table, p_i: np.ndarray, p_j: np.ndarray, method: str, T: int
 ) -> np.ndarray:
     """Sample source-pixel coordinates (p_i, p_j) from the source tiles
     one output tile's warp gather received (an Arrow table with
     ``tile_x``, ``tile_y``, ``nrows``, ``ncols`` and ``data`` columns,
-    payloads read through ``tiling._list_values``, null cells as NaN).
+    read through ``tiling.tile_planes``, null cells as NaN).
     NaN coordinates (out of the transform's domain) and coordinates no
     gathered tile covers yield NaN.
 
@@ -89,31 +97,23 @@ def _sample_from_rows(
     ok = np.isfinite(p_i) & np.isfinite(p_j)
     pi = np.where(ok, p_i, -(2.0**40))  # sentinel far outside any tile
     pj = np.where(ok, p_j, -(2.0**40))
-    src = []
-    for b in table.to_batches():
-        off, vals = tiling._list_values(b.column("data"))
-        tx, ty, nr, nc = (
-            b.column(c).to_numpy() for c in ("tile_x", "tile_y", "nrows", "ncols")
-        )
-        src += [
-            (int(tx[k]) * T, int(ty[k]) * T, int(nr[k]), int(nc[k]),
-             vals[off[k] : off[k + 1]])
-            for k in range(b.num_rows)
-        ]
+    src = [
+        (tx * T, ty * T, plane)
+        for tx, ty, plane in tiling.tile_planes(table, "tile_x", "tile_y")
+    ]
 
     def lookup(ci: np.ndarray, cj: np.ndarray) -> np.ndarray:
         v = np.full(len(ci), np.nan)
-        for x0, y0, snr, snc, flat in src:
+        for x0, y0, plane in src:
             li, lj = ci - x0, cj - y0
-            sel = (li >= 0) & (li < snc) & (lj >= 0) & (lj < snr)
+            sel = (li >= 0) & (li < plane.shape[1]) & (lj >= 0) & (lj < plane.shape[0])
             if sel.any():
-                v[sel] = flat[lj[sel] * snc + li[sel]]
+                v[sel] = plane[lj[sel], li[sel]]
         return v
 
+    i0, j0 = _anchor(pi, method), _anchor(pj, method)
     if method == "nearest":
-        return lookup(np.floor(pi).astype(np.int64), np.floor(pj).astype(np.int64))
-    i0 = np.floor(pi - 0.5).astype(np.int64)
-    j0 = np.floor(pj - 0.5).astype(np.int64)
+        return lookup(i0, j0)
     fx = (pi - 0.5) - i0
     fy = (pj - 0.5) - j0
     num = np.zeros(len(pi))
@@ -165,32 +165,16 @@ def upsample_bilinear(
         tiles = tiles.filter(tiles.band == band)
     g = 1
 
-    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
+    def run(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pa.Table:
         (band_name, padded), = bands.items()
         child = bilinear_2x(padded, nr, nc, g)
-        rows = []
-        for qy in (0, 1):
-            y0, y1 = qy * T, min((qy + 1) * T, 2 * nr)
-            for qx in (0, 1):
-                x0, x1 = qx * T, min((qx + 1) * T, 2 * nc)
-                if y0 >= y1 or x0 >= x1:
-                    continue
-                sub = child[y0:y1, x0:x1]
-                rows.append(
-                    {
-                        "tile_x": 2 * tx + qx,
-                        "tile_y": 2 * ty + qy,
-                        "level": level + 1,
-                        "band": band_name,
-                        "nrows": sub.shape[0],
-                        "ncols": sub.shape[1],
-                        "data": sub.ravel(),
-                    }
-                )
-        return pd.DataFrame(
-            rows,
-            columns=["tile_x", "tile_y", "level", "band", "nrows", "ncols", "data"],
-        )
+        quads = [
+            (2 * tx + qx, 2 * ty + qy, child[qy * T : (qy + 1) * T, qx * T : (qx + 1) * T])
+            for qy in (0, 1) for qx in (0, 1)
+        ]
+        quads = [q for q in quads if q[2].size]
+        cx, cy, planes = zip(*quads)
+        return tiling.tile_table(cx, cy, level + 1, [band_name] * len(planes), list(planes))
 
     return tiling.halo_map(tiles, T, g, None, run, tiling.TILES_SCHEMA)
 
@@ -284,7 +268,7 @@ def sample_bilinear(
 # warp_affine's per-output-tile gather backstop (source tiles)
 _WARP_GATHER_CAP = 256
 
-# boundary samples per output-tile edge in warp_transform's planner
+# samples per output-tile axis in warp_transform's planner
 _EDGE_SAMPLES = 9
 
 
@@ -317,7 +301,7 @@ def warp_affine(
     ``warp_transform`` with the affine as its inverse map, which plans
     and gathers. Its planner needs no extra ``margin`` here: an
     affine's extrema over an output tile lie at the tile's corner pixel
-    centers, which are among the boundary samples.
+    centers, which are among the planner's samples.
 
     Minification guard (round 4, pinned semantics; r5 fix): a strongly
     minifying affine would gather O(extent-ratio) source tiles into one
@@ -434,26 +418,30 @@ def warp_transform(
     outside the transform's domain → NaN output. Sampling (nearest /
     bilinear NaN-renormalizing corners) is ``_sample_from_rows``.
 
-    Scale design: a METADATA-ONLY mapInPandas over the output-tile list
-    (ny·nx rows, never pixels) pushes ``_EDGE_SAMPLES`` points per tile
-    boundary edge (corners included) through ``inverse`` and takes the
-    sample bbox ± ``margin`` source pixels (+1 for the bilinear
-    corners). Contract (standard gdalwarp sampling assumption): the
-    transform is smooth enough that its coordinate extrema over a tile
-    rectangle occur on (within ``margin`` px of) the boundary samples —
-    true for every map projection at practical tile sizes, and exact
-    with ``margin=0`` for an affine. The bbox explodes JVM-side to
-    covered source-tile ids, a broadcast join ships each source tile
-    only where needed, and ONE ``groupBy(otx, oty).applyInArrow`` per
-    output tile gathers, reading the payloads zero-copy. Per-pixel
-    rows never shuffle; an output tile whose bbox covers no present
-    source tile is absent (sparse-raster convention).
+    Scale design: a METADATA-ONLY plan on the driver (ny·nx rows,
+    never pixels) pushes an ``_EDGE_SAMPLES``² grid of pixel centers
+    per output tile, interior included, through ``inverse`` and takes
+    the in-domain samples' bbox ± ``margin`` source pixels (+1 for the
+    bilinear corners). Contract (standard gdalwarp sampling
+    assumption): the transform is smooth enough that its coordinate
+    extrema over a tile lie within ``margin`` px of the samples — true
+    for every map projection at practical tile sizes, and exact with
+    ``margin=0`` for an affine; the gather raises, naming the output
+    tile, when an in-domain pixel reads a source tile outside its
+    planned range. The bbox explodes JVM-side to covered source-tile
+    ids, a broadcast join ships each source tile only where needed, and
+    ONE ``groupBy(otx, oty).applyInArrow`` per output tile gathers,
+    reading the payloads zero-copy. Per-pixel rows never shuffle; an
+    output tile whose bbox covers no present source tile, or none of
+    whose samples is in the domain, is absent (sparse-raster
+    convention).
 
     Guard: a tile whose bbox covers more than ``max_gather_tiles``
-    source tiles raises (executor-memory cliff — strongly minifying
-    transforms should pre-reduce through the overview pyramid, as
-    warp_affine does automatically, or warp at a parent level).
-    ``stats`` records {'max_fanout_tiles': n} for plan tests."""
+    source tiles raises on the driver, naming the worst tile
+    (executor-memory cliff — strongly minifying transforms should
+    pre-reduce through the overview pyramid, as warp_affine does
+    automatically, or warp at a parent level). ``stats`` records
+    {'max_fanout_tiles': n} for plan tests."""
     if method not in ("nearest", "bilinear"):
         raise ValueError(f"unknown warp method: {method}")
     H, W = out_shape
@@ -462,106 +450,83 @@ def warp_transform(
     marg = float(margin) + (0.0 if method == "nearest" else 1.0)
     S = _EDGE_SAMPLES
 
-    out_tiles = tiles.sparkSession.range(nx_out * ny_out).select(
-        (F.col("id") % nx_out).cast("int").alias("otx"),
-        (F.col("id") / nx_out).cast("int").alias("oty"),
+    # the plan is metadata only (ny·nx rows): S×S pixel-center samples
+    # per output tile, interior included, through ``inverse`` on the
+    # driver
+    oty, otx = np.divmod(np.arange(nx_out * ny_out), nx_out)
+    x0, y0 = otx * T + 0.5, oty * T + 0.5
+    xs = np.linspace(x0, x0 + np.minimum(W - otx * T, T) - 1, S, axis=1)
+    ys = np.linspace(y0, y0 + np.minimum(H - oty * T, T) - 1, S, axis=1)
+    gx, gy = np.broadcast_arrays(xs[:, None, :], ys[:, :, None])
+    p_i, p_j = (
+        np.asarray(p, dtype=np.float64).reshape(len(otx), S * S)
+        for p in inverse(gx.ravel(), gy.ravel())
     )
+    ok = np.isfinite(p_i) & np.isfinite(p_j)
+    keep = ok.any(axis=1)  # a tile wholly outside the domain is absent
+    otx, oty, p_i, p_j, ok = otx[keep], oty[keep], p_i[keep], p_j[keep], ok[keep]
 
-    def plan_bbox(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                otx, oty = int(r.otx), int(r.oty)
-                onr = min(H - oty * T, T)
-                onc = min(W - otx * T, T)
-                # boundary samples: S points per edge, pixel-center span
-                tx = np.linspace(otx * T + 0.5, otx * T + onc - 0.5, S)
-                ty = np.linspace(oty * T + 0.5, oty * T + onr - 0.5, S)
-                gx = np.concatenate([tx, tx, np.full(S, tx[0]), np.full(S, tx[-1])])
-                gy = np.concatenate([np.full(S, ty[0]), np.full(S, ty[-1]), ty, ty])
-                p_i, p_j = inverse(gx, gy)
-                p_i = np.asarray(p_i, dtype=np.float64)
-                p_j = np.asarray(p_j, dtype=np.float64)
-                ok = np.isfinite(p_i) & np.isfinite(p_j)
-                if not ok.any():
-                    continue  # fully outside the transform's domain
-                rows.append({
-                    "otx": otx, "oty": oty,
-                    "sti0": int(np.floor((p_i[ok].min() - marg) / T)),
-                    "sti1": int(np.floor((p_i[ok].max() + marg) / T)),
-                    "stj0": int(np.floor((p_j[ok].min() - marg) / T)),
-                    "stj1": int(np.floor((p_j[ok].max() + marg) / T)),
-                })
-            yield pd.DataFrame(
-                rows, columns=["otx", "oty", "sti0", "sti1", "stj0", "stj1"]
-            )
+    def tile_range(p: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        lo = np.where(ok, p, np.inf).min(axis=1)
+        hi = np.where(ok, p, -np.inf).max(axis=1)
+        return (
+            np.floor((lo - marg) / T).astype(np.int64),
+            np.floor((hi + marg) / T).astype(np.int64),
+        )
 
-    planned = out_tiles.mapInPandas(
-        plan_bbox, "otx int, oty int, sti0 int, sti1 int, stj0 int, stj1 int"
-    )
-    fanout = (
-        (F.col("sti1") - F.col("sti0") + 1)
-        * (F.col("stj1") - F.col("stj0") + 1)
-    )
-    planned = planned.withColumn("_fan", fanout)
+    (sti0, sti1), (stj0, stj1) = tile_range(p_i), tile_range(p_j)
+    fan = (sti1 - sti0 + 1) * (stj1 - stj0 + 1)
     if stats is not None:
-        # the stats aggregation runs the (metadata-only) planning pass
-        # an extra time — deliberately NOT checkpointed/persisted: a
-        # checkpoint pins non-recomputable blocks (executor loss kills
-        # the query) and the plan is ny·nx ROWS of boundary samples,
-        # cheap next to the warp itself; stats is a diagnostic path
-        mf = planned.agg(F.max("_fan")).collect()[0][0]
-        stats["max_fanout_tiles"] = int(mf or 0)
-        if mf is not None and mf > max_gather_tiles:
-            raise ValueError(
-                f"warp_transform: an output tile's source bbox covers "
-                f"{mf} tiles (> max_gather_tiles={max_gather_tiles}) — "
-                "pre-reduce via the overview pyramid or warp at a parent "
-                "level"
-            )
-    plan = (
-        planned.select(
-            "otx", "oty", "stj0", "stj1", "_fan",
-            F.explode(F.sequence("sti0", "sti1")).alias("tile_x"),
+        stats["max_fanout_tiles"] = int(fan.max(initial=0))
+    if fan.size and fan.max() > max_gather_tiles:
+        k = int(fan.argmax())
+        raise ValueError(
+            f"warp_transform: output tile ({otx[k]},{oty[k]}) gathers {fan[k]} "
+            f"source tiles (> max_gather_tiles={max_gather_tiles}) — "
+            "pre-reduce via the overview pyramid or warp at a parent level"
         )
-        .select(
-            "otx", "oty", "tile_x", "_fan",
-            F.explode(F.sequence("stj0", "stj1")).alias("tile_y"),
-        )
+    ranges = ["sti0", "sti1", "stj0", "stj1"]
+    planned = tiles.sparkSession.createDataFrame(
+        np.stack([otx, oty, sti0, sti1, stj0, stj1], axis=1).tolist(),
+        "otx int, oty int, " + ", ".join(f"{c} int" for c in ranges),
     )
+    plan = planned.select(
+        "*", F.explode(F.sequence("sti0", "sti1")).alias("tile_x")
+    ).select("*", F.explode(F.sequence("stj0", "stj1")).alias("tile_y"))
     joined = plan.join(
         tiles.filter(F.col("band") == band).select(
             "tile_x", "tile_y", "nrows", "ncols", "data"
         ),
         ["tile_x", "tile_y"],
     )
-
-    arrow = tiling.arrow_schema(tiling.TILES_SCHEMA)
+    span = 0 if method == "nearest" else 1
 
     def gather(key, table):  # unannotated: Arrow UDFs take no eval type from hints
         otx, oty = key[0].as_py(), key[1].as_py()
-        fan = table.column("_fan")[0].as_py()
-        if fan > max_gather_tiles:
-            # executor-side guard: fires even when stats wasn't requested
-            raise ValueError(
-                f"warp_transform: output tile ({otx},{oty}) gathers {fan} "
-                f"source tiles (> max_gather_tiles={max_gather_tiles}) — "
-                "pre-reduce via the overview pyramid or warp at a parent level"
-            )
+        i_lo, i_hi, j_lo, j_hi = (table.column(c)[0].as_py() for c in ranges)
         onr = min(H - oty * T, T)
         onc = min(W - otx * T, T)
         oj, oi = np.divmod(np.arange(onr * onc), onc)
-        p_i, p_j = inverse(otx * T + oi + 0.5, oty * T + oj + 0.5)
-        out = _sample_from_rows(
-            table, np.asarray(p_i, dtype=np.float64),
-            np.asarray(p_j, dtype=np.float64), method, T
+        p_i, p_j = (
+            np.asarray(p, dtype=np.float64)
+            for p in inverse(otx * T + oi + 0.5, oty * T + oj + 0.5)
         )
-        # NaN cells cross as Spark nulls, as tile payloads do elsewhere
-        data = pa.ListArray.from_arrays(
-            pa.array([0, onr * onc], pa.int32()), pa.array(out, from_pandas=True)
-        )
-        return pa.Table.from_arrays(
-            [[otx], [oty], [level], [out_band], [onr], [onc], data], schema=arrow
-        )
+        # the smoothness contract, checked: every source tile an
+        # in-domain pixel reads must have been planned for this tile
+        ok = np.isfinite(p_i) & np.isfinite(p_j)
+        i0, j0 = _anchor(p_i[ok], method), _anchor(p_j[ok], method)
+        for di in range(span + 1):
+            for dj in range(span + 1):
+                ti, tj = (i0 + di) // T, (j0 + dj) // T
+                bad = np.flatnonzero((ti < i_lo) | (ti > i_hi) | (tj < j_lo) | (tj > j_hi))
+                if bad.size:
+                    raise ValueError(
+                        f"warp_transform: output tile ({otx},{oty}) reads source "
+                        f"tile ({ti[bad[0]]},{tj[bad[0]]}) outside its planned tiles "
+                        f"x {i_lo}..{i_hi}, y {j_lo}..{j_hi} — the inverse varies "
+                        "faster than the planner's samples; raise margin"
+                    )
+        out = _sample_from_rows(table, p_i, p_j, method, T)
+        return tiling.tile_table(otx, oty, level, [out_band], [out.reshape(onr, onc)])
 
     return joined.groupBy("otx", "oty").applyInArrow(gather, tiling.TILES_SCHEMA)

@@ -33,10 +33,16 @@ Scale design notes (the part the 100 TB grade hangs on):
   any stage per focal op, 0.22 s now. The price is a second crossing:
   bytes sent to Python per op went from 37.9 to 71.9 MB.
 
-- **One halo group runner** (``halo_map``): window assembly and the
-  per-window work run in the SAME ``applyInArrow`` group for every halo
-  consumer (focal kernels, autocorrelation, cost paths, patches,
-  upsampling, polygonize, contours, zonal geometry). The canvas is
+- **Two tile runners.** ``map_tiles`` is one ``mapInArrow`` calling a
+  per-tile function on a zero-copy plane (histograms, moments,
+  quantile scans, zone painting, overview quadrants). ``halo_map``
+  runs window assembly and the per-window work in the SAME
+  ``applyInArrow`` group for every halo consumer (focal kernels,
+  autocorrelation, cost paths, patches, upsampling, polygonize,
+  contours, zonal geometry); with ``g=0`` it is the co-located band
+  group (zonal stats, cross tabulation, local map algebra), whose
+  exchange is a JVM projection with no Python emitter. Tile rows leave
+  either runner through ``tile_table``. The canvas is
   painted from the list array's offsets and the focal result leaves as
   one Arrow list array — no pandas frame on either side. Python worker
   time per focal op fell from 3.2 to 2.0 s on the same run. Of what was left,
@@ -70,6 +76,14 @@ TILES_SCHEMA = (
     "tile_x int, tile_y int, level int, band string, "
     "nrows int, ncols int, data array<double>"
 )
+
+# TILES_SCHEMA as Arrow, spelled out: workers have no JVM to parse DDL
+TILES_ARROW = pa.schema([
+    ("tile_x", pa.int32()), ("tile_y", pa.int32()), ("level", pa.int32()),
+    ("band", pa.string()), ("nrows", pa.int32()), ("ncols", pa.int32()),
+    ("data", pa.list_(pa.field("element", pa.float64()))),
+])
+_TILE_COLS = TILES_ARROW.names
 
 _HALO_SCHEMA = (
     "dst_tx int, dst_ty int, band string, is_center boolean, "
@@ -251,6 +265,18 @@ def _list_values(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
     return col.offsets.to_numpy(), col.values.to_numpy(zero_copy_only=False)
 
 
+def tile_planes(data: pa.RecordBatch | pa.Table, *cols: str) -> Iterator[tuple]:
+    """Per row of a batch or a group table: the Python values of
+    ``cols``, then the row's (nrows, ncols) plane, a read-only view of
+    its payload (null cells read as NaN). A group table's columns are
+    chunked, so it is read batch by batch."""
+    for b in data.to_batches() if isinstance(data, pa.Table) else (data,):
+        off, vals = _list_values(b.column("data"))
+        values = [b.column(c).to_pylist() for c in ("nrows", "ncols", *cols)]
+        for i, (nr, nc, *row) in enumerate(zip(*values)):
+            yield (*row, vals[off[i] : off[i + 1]].reshape(nr, nc))
+
+
 def _emit_halo(
     T: int, g: int, wrap_nx: int | None, batches: Iterator[pa.RecordBatch]
 ) -> Iterator[pa.RecordBatch]:
@@ -262,30 +288,25 @@ def _emit_halo(
     crossing the x seam is addressed as if both sides were full tiles,
     so a ragged tile would read NaN halos silently."""
     for b in batches:
-        off, vals = _list_values(b.column("data"))
-        tx, ty, nrows, ncols = (
-            b.column(c).to_numpy() for c in ("tile_x", "tile_y", "nrows", "ncols")
-        )
         meta: list[tuple] = []
         parts: list[np.ndarray] = []
-        for i in range(b.num_rows):
-            nr, nc = int(nrows[i]), int(ncols[i])
+        for i, (tx, ty, arr) in enumerate(tile_planes(b, "tile_x", "tile_y")):
+            nr, nc = arr.shape
             if wrap_nx is not None and nc < T:
                 raise ValueError(
                     f"halo_exchange: wrap_nx requires x-regular tiles (ncols >= T "
-                    f"== {T}); tile ({tx[i]},{ty[i]}) has ncols={nc}"
+                    f"== {T}); tile ({tx},{ty}) has ncols={nc}"
                 )
-            arr = vals[off[i] : off[i + 1]].reshape(nr, nc)
             for dy in (-1, 0, 1):
                 y0 = max(0, dy * T - g)
                 y1 = min(nr, dy * T + T + g)
-                dst_y = int(ty[i]) + dy
+                dst_y = ty + dy
                 if y0 >= y1 or dst_y < 0:
                     continue
                 for dx in (-1, 0, 1):
                     x0 = max(0, dx * T - g)
                     x1 = min(nc, dx * T + T + g)
-                    dst_x = int(tx[i]) + dx
+                    dst_x = tx + dx
                     if wrap_nx is not None:
                         dst_x %= wrap_nx
                     elif dst_x < 0:
@@ -325,7 +346,15 @@ def halo_exchange(
     tile key. Downstream: groupBy(dst) + ``paint_halo`` (see halo_map).
 
     The emitter is a ``mapInArrow`` NumPy slicer over the projected tile
-    columns; only those six columns cross into Python."""
+    columns; only those six columns cross into Python. With ``g == 0``
+    there are no strips, only center payloads, so the rows are projected
+    into the exchange schema in the JVM and nothing crosses."""
+    if g == 0:
+        return tiles.select(
+            F.col("tile_x").alias("dst_tx"), F.col("tile_y").alias("dst_ty"),
+            "band", F.lit(True).alias("is_center"),
+            F.lit(0).alias("oy"), F.lit(0).alias("ox"), "nrows", "ncols", "data",
+        )
     return tiles.select(
         "tile_x", "tile_y", "band", "nrows", "ncols", "data"
     ).mapInArrow(partial(_emit_halo, T, g, wrap_nx), _HALO_SCHEMA)
@@ -341,20 +370,14 @@ def paint_halo(
     None."""
     canvases: dict[str, np.ndarray] = {}
     nr = nc = None
-    for b in table.to_batches():
-        off, vals = _list_values(b.column("data"))
-        bands = b.column("band").to_pylist()
-        center = b.column("is_center").to_pylist()
-        oy, ox, h, w = (b.column(c).to_numpy() for c in ("oy", "ox", "nrows", "ncols"))
-        for i in range(b.num_rows):
-            canvas = canvases.get(bands[i])
-            if canvas is None:
-                canvas = canvases[bands[i]] = np.full((T + 2 * g, T + 2 * g), np.nan)
-            canvas[oy[i] : oy[i] + h[i], ox[i] : ox[i] + w[i]] = (
-                vals[off[i] : off[i + 1]].reshape(h[i], w[i])
-            )
-            if center[i] and nr is None:
-                nr, nc = int(h[i]), int(w[i])
+    for band, center, oy, ox, block in tile_planes(table, "band", "is_center", "oy", "ox"):
+        canvas = canvases.get(band)
+        if canvas is None:
+            canvas = canvases[band] = np.full((T + 2 * g, T + 2 * g), np.nan)
+        h, w = block.shape
+        canvas[oy : oy + h, ox : ox + w] = block
+        if center and nr is None:
+            nr, nc = h, w
     if nr is None:
         return canvases, None, None
     return {b: c[: nr + 2 * g, : nc + 2 * g] for b, c in canvases.items()}, nr, nc
@@ -367,32 +390,88 @@ def arrow_schema(ddl: str) -> pa.Schema:
     return to_arrow_schema(StructType.fromDDL(ddl))
 
 
+def _as_table(out, arrow: pa.Schema) -> pa.Table:
+    """A tile runner's ``fn`` result as a table of ``arrow``: a
+    ``pa.Table`` passes; a dict of columns or a ``pd.DataFrame``
+    converts against the schema (a DataFrame's NaN list cells cross as
+    nulls, as from a pandas UDF); None is no rows."""
+    if out is None:
+        return arrow.empty_table()
+    if isinstance(out, dict):
+        return pa.Table.from_pydict(out, schema=arrow)
+    if isinstance(out, pd.DataFrame):
+        return pa.Table.from_pandas(out, schema=arrow, preserve_index=False)
+    return out
+
+
+def tile_table(tx, ty, level, bands: list[str], planes: list[np.ndarray]) -> pa.Table:
+    """TILES rows, one per 2-D plane, ``bands[k]`` naming ``planes[k]``;
+    ``tx``, ``ty`` and ``level`` are one int shared by every row or one
+    per row. NaN cells leave as Spark nulls (``from_pandas=True``), the
+    representation pandas UDFs emit."""
+    n = len(planes)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum([p.size for p in planes], out=offsets[1:])
+    values = np.concatenate([np.ravel(p) for p in planes]) if n else np.empty(0)
+    data = pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(values.astype(np.float64, copy=False), from_pandas=True)
+    )
+    per_row = [[v] * n if np.ndim(v) == 0 else list(v) for v in (tx, ty, level)]
+    shapes = [[p.shape[k] for p in planes] for k in (0, 1)]
+    return pa.Table.from_arrays(
+        [*per_row, pa.array(bands, pa.string()), *shapes, data], schema=TILES_ARROW
+    )
+
+
+def map_tiles(
+    tiles: DataFrame,
+    fn: Callable[..., pa.Table | pd.DataFrame | dict | None],
+    schema: str,
+) -> DataFrame:
+    """The one co-located tile runner: ONE ``mapInArrow`` over the
+    projected TILES columns, calling ``fn(tx, ty, level, band, plane)``
+    once per tile (Python scalars; ``plane`` is a read-only (nrows,
+    ncols) view of the payload, nulls as NaN). ``fn`` returns rows of
+    the DDL ``schema`` as ``halo_map``'s does; the rows of one input
+    batch leave as one batch."""
+    arrow = arrow_schema(schema)
+
+    def run(batches):  # unannotated: Arrow UDFs take no eval type from hints
+        for b in batches:
+            outs = [
+                _as_table(fn(*row), arrow)
+                for row in tile_planes(b, "tile_x", "tile_y", "level", "band")
+            ]
+            outs = [t for t in outs if t.num_rows]
+            if outs:
+                yield from pa.concat_tables(outs).combine_chunks().to_batches()
+
+    return tiles.select(*_TILE_COLS).mapInArrow(run, schema)
+
+
 def halo_map(
     tiles: DataFrame,
     T: int,
     g: int,
     wrap_nx: int | None,
-    fn: Callable[..., pa.Table | pd.DataFrame],
+    fn: Callable[..., pa.Table | pd.DataFrame | dict | None],
     schema: str,
 ) -> DataFrame:
     """The one halo group runner: ``halo_exchange`` + ONE
     ``groupBy(dst).applyInArrow``. Each receiving tile's window is
     painted by ``paint_halo`` and handed to ``fn(tx, ty, bands, nr,
     nc)`` (Python ints; ``bands`` maps band → padded (nr+2g, nc+2g)
-    array), which returns rows of the DDL ``schema`` as a ``pa.Table``
-    or a ``pd.DataFrame``. A DataFrame converts against the schema, so
-    NaN list cells cross as nulls, as from a pandas UDF. A group with no
-    center payload emits no rows."""
+    array), which returns rows of the DDL ``schema`` as a ``pa.Table``,
+    a dict of columns, a ``pd.DataFrame`` or None (see ``_as_table``).
+    A group with no center payload emits no rows. ``g=0`` is the
+    co-located band group: every band of one tile key, unpadded."""
     arrow = arrow_schema(schema)
 
     def run(key, table):  # unannotated: Arrow UDFs take no eval type from hints
         bands, nr, nc = paint_halo(table, T, g)
         if nr is None:
             return arrow.empty_table()
-        out = fn(key[0].as_py(), key[1].as_py(), bands, nr, nc)
-        if isinstance(out, pd.DataFrame):
-            out = pa.Table.from_pandas(out, schema=arrow, preserve_index=False)
-        return out
+        return _as_table(fn(key[0].as_py(), key[1].as_py(), bands, nr, nc), arrow)
 
     return (
         halo_exchange(tiles, T, g, wrap_nx)
@@ -442,12 +521,10 @@ def _focal_stage(
     """ONE ``halo_map`` group computing
     ``band_stats[in_band][out_band] = fn(padded, r, shape)`` per tile; the
     in_band ``None`` names the sole band of a single-band input. Output
-    payloads are built as one list array whose NaN cells cross as Spark
-    nulls (``from_pandas=True``), the representation pandas UDFs emit."""
+    rows leave through ``tile_table``."""
     g = halo if halo is not None else r
     if g < r:
         raise ValueError("halo must cover the kernel radius")
-    arrow = arrow_schema(TILES_SCHEMA)
 
     def run(tx, ty, bands, nr, nc):
         names, planes = [], []
@@ -461,15 +538,7 @@ def _focal_stage(
             for out_band, fn in fns.items():
                 names.append(out_band)
                 planes.append(fn(padded, r, shape)[g : g + nr, g : g + nc])
-        n = len(names)
-        data = pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * (nr * nc)),
-            pa.array(np.asarray(planes, dtype=np.float64).ravel(), from_pandas=True),
-        )
-        tx, ty, lv, nrs, ncs = ([v] * n for v in (tx, ty, level, nr, nc))
-        return pa.Table.from_arrays(
-            [tx, ty, lv, pa.array(names), nrs, ncs, data], schema=arrow
-        )
+        return tile_table(tx, ty, level, names, planes)
 
     return halo_map(tiles, T, g, wrap_nx, run, TILES_SCHEMA)
 

@@ -3,14 +3,18 @@ extension; the classic companion of focal stats in every raster
 engine).
 
 Scale design (the part that matters at 100 TB): statistics are
-decomposable, so ONE ``applyInPandas`` pass computes per-(tile, zone)
-partials — the raster never leaves its tiles and the only shuffle is
-the tiny per-zone final merge (#zones rows per tile, not T^2). This is
-the same partial+final shape Catalyst generates for a hash aggregate,
-expressed at tile granularity because the inputs are packed tile
-payloads rather than cell rows. Zones defined by polygons reduce to
-this: rasterize the polygon ids (J1 cover join + A2) into a zone band,
-then run ``zonal_stats``.
+decomposable, so ONE Arrow pass computes per-(tile, zone) partials —
+the raster never leaves its tiles and the only shuffle is the tiny
+per-zone final merge (#zones rows per tile, not T^2). This is the same
+partial+final shape Catalyst generates for a hash aggregate, expressed
+at tile granularity because the inputs are packed tile payloads rather
+than cell rows. Every pass runs on one of the two tile runners:
+two-band partials (``zonal_stats``, ``cross_tab``) in the co-located
+band group ``tiling.halo_map(g=0)``, one-band scans (``moments``,
+histograms, quantile rounds, zone painting) in ``tiling.map_tiles``,
+and ``zonal_geometry`` in a 1-deep halo group. Zones defined by
+polygons reduce to this: rasterize the polygon ids (J1 cover join +
+A2) into a zone band, then run ``zonal_stats``.
 
 Pinned semantics:
 - zone ids are the integer cast of the zone band's cell values;
@@ -24,13 +28,15 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from engine import tiling
 
 __all__ = [
     "cross_tab",
     "global_stats",
+    "moments",
     "quantile_exact",
     "raster_histogram",
     "rasterize_zones",
@@ -39,8 +45,6 @@ __all__ = [
     "zonal_percentile",
     "zonal_stats",
 ]
-
-_PARTIAL_SCHEMA = "zone long, n long, s double, mn double, mx double"
 
 
 def zonal_stats(
@@ -54,31 +58,25 @@ def zonal_stats(
     to 4 decimals (the oracle convention for float-hash stability)."""
     both = tiles.filter(F.col("band").isin([zone_band, value_band]))
 
-    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        by_band = {r.band: r for r in pdf.itertuples(index=False)}
-        zr = by_band.get(zone_band)
-        vr = by_band.get(value_band)
-        if zr is None or vr is None:
-            return pd.DataFrame(columns=["zone", "n", "s", "mn", "mx"])
-        zone = np.asarray(zr.data, dtype=np.float64)
-        val = np.asarray(vr.data, dtype=np.float64)
-        m = min(len(zone), len(val))
-        zone, val = zone[:m], val[:m]
+    def partials(tx: int, ty: int, bands: dict, nr: int, nc: int) -> dict | None:
+        if zone_band not in bands or value_band not in bands:
+            return None
+        zone, val = bands[zone_band], bands[value_band]
         ok = np.isfinite(zone) & np.isfinite(val)
-        if not ok.any():
-            return pd.DataFrame(columns=["zone", "n", "s", "mn", "mx"])
-        z = zone[ok].astype(np.int64)
+        uniq, inv = np.unique(zone[ok].astype(np.int64), return_inverse=True)
         v = val[ok]
-        uniq, inv = np.unique(z, return_inverse=True)
-        n = np.bincount(inv)
-        s = np.bincount(inv, weights=v)
         mn = np.full(len(uniq), np.inf)
         mx = np.full(len(uniq), -np.inf)
         np.minimum.at(mn, inv, v)
         np.maximum.at(mx, inv, v)
-        return pd.DataFrame({"zone": uniq, "n": n, "s": s, "mn": mn, "mx": mx})
+        return {
+            "zone": uniq, "n": np.bincount(inv), "s": np.bincount(inv, weights=v),
+            "mn": mn, "mx": mx,
+        }
 
-    part = both.groupBy("tile_x", "tile_y").applyInPandas(partials, _PARTIAL_SCHEMA)
+    part = tiling.halo_map(
+        both, T, 0, None, partials, "zone long, n long, s double, mn double, mx double"
+    )
     return (
         part.groupBy("zone")
         .agg(
@@ -101,32 +99,23 @@ def cross_tab(
     two co-registered class bands — one row per (class_a, class_b) pair.
 
     Same partial+final shape as zonal_stats: per-tile pair-code
-    bincount in NumPy (one applyInPandas pass, the rasters never leave
-    their tiles), then a per-pair final sum — shuffle rows ∝ distinct
-    pairs per tile, not T². A cell contributes iff BOTH bands are valid.
+    bincount in NumPy (one co-located band group, the rasters never
+    leave their tiles), then a per-pair final sum — shuffle rows ∝
+    distinct pairs per tile, not T². A cell contributes iff BOTH bands
+    are valid.
     """
     both = tiles.filter(F.col("band").isin([band_a, band_b]))
 
-    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        by_band = {r.band: r for r in pdf.itertuples(index=False)}
-        ar = by_band.get(band_a)
-        br = by_band.get(band_b)
-        if ar is None or br is None:
-            return pd.DataFrame(columns=["ca", "cb", "n"])
-        a = np.asarray(ar.data, dtype=np.float64)
-        b = np.asarray(br.data, dtype=np.float64)
-        m = min(len(a), len(b))
-        a, b = a[:m], b[:m]
+    def partials(tx: int, ty: int, bands: dict, nr: int, nc: int) -> dict | None:
+        if band_a not in bands or band_b not in bands:
+            return None
+        a, b = bands[band_a], bands[band_b]
         ok = np.isfinite(a) & np.isfinite(b)
-        if not ok.any():
-            return pd.DataFrame(columns=["ca", "cb", "n"])
         pairs = np.stack([a[ok].astype(np.int64), b[ok].astype(np.int64)], axis=1)
         uniq, cnt = np.unique(pairs, axis=0, return_counts=True)
-        return pd.DataFrame({"ca": uniq[:, 0], "cb": uniq[:, 1], "n": cnt})
+        return {"ca": uniq[:, 0], "cb": uniq[:, 1], "n": cnt}
 
-    part = both.groupBy("tile_x", "tile_y").applyInPandas(
-        partials, "ca long, cb long, n long"
-    )
+    part = tiling.halo_map(both, T, 0, None, partials, "ca long, cb long, n long")
     return part.groupBy("ca", "cb").agg(F.sum("n").alias("n_cells"))
 
 
@@ -196,14 +185,11 @@ def rasterize_zones(
     center lies exactly on an edge — the rule then needs no boundary
     epsilon.
 
-    Scale: map-only (mapInPandas over the band's tiles; rings ship as a
-    closure constant — polygon sets big enough to matter should go
-    through the J1 cover join instead); per-tile NumPy parity test is
-    vectorized over the tile's pixel grid.
+    Scale: map-only (``tiling.map_tiles`` over the band's tiles; rings
+    ship as a closure constant — polygon sets big enough to matter
+    should go through the J1 cover join instead); per-tile NumPy parity
+    test is vectorized over the tile's pixel grid.
     """
-    from collections.abc import Iterator
-
-    sub = tiles.filter(F.col("band") == band)
     # normalize to (zid, [outer] + holes)
     ordered = sorted(
         ((r[0], [r[1]] + (list(r[2]) if len(r) > 2 and r[2] else []))
@@ -211,33 +197,29 @@ def rasterize_zones(
         key=lambda r: r[0],
     )
 
-    def paint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            datas = []
-            for row in pdf.itertuples(index=False):
-                nr, nc = int(row.nrows), int(row.ncols)
-                cx = int(row.tile_x) * T + np.arange(nc) + 0.5
-                cy = int(row.tile_y) * T + np.arange(nr) + 0.5
-                px = np.broadcast_to(cx, (nr, nc))
-                py = np.broadcast_to(cy[:, None], (nr, nc))
-                zone = np.full((nr, nc), np.nan)
-                for zid, zrings in reversed(ordered):  # lowest id paints last
-                    inside = np.zeros((nr, nc), dtype=bool)
-                    for ring in zrings:
-                        for k in range(len(ring) - 1):
-                            (x1, y1), (x2, y2) = ring[k], ring[k + 1]
-                            crosses = (y1 > py) != (y2 > py)
-                            with np.errstate(divide="ignore", invalid="ignore"):
-                                xcross = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
-                            inside ^= crosses & (px < xcross)
-                    zone[inside] = zid
-                datas.append(zone.ravel())
-            out["band"] = zone_band
-            out["data"] = datas
-            yield out
+    def paint(tx: int, ty: int, level: int, b: str, plane: np.ndarray):
+        nr, nc = plane.shape
+        px = np.broadcast_to(tx * T + np.arange(nc) + 0.5, (nr, nc))
+        py = np.broadcast_to((ty * T + np.arange(nr) + 0.5)[:, None], (nr, nc))
+        zone = np.full((nr, nc), np.nan)
+        for zid, zrings in reversed(ordered):  # lowest id paints last
+            inside = np.zeros((nr, nc), dtype=bool)
+            for ring in zrings:
+                for k in range(len(ring) - 1):
+                    (x1, y1), (x2, y2) = ring[k], ring[k + 1]
+                    crosses = (y1 > py) != (y2 > py)
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        xcross = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
+                    inside ^= crosses & (px < xcross)
+            zone[inside] = zid
+        return tiling.tile_table(tx, ty, level, [zone_band], [zone])
 
-    return sub.mapInPandas(paint, sub.schema)
+    sub = tiles.filter(F.col("band") == band)
+    return tiling.map_tiles(sub, paint, tiling.TILES_SCHEMA)
+
+
+def _valid(plane: np.ndarray) -> np.ndarray:
+    return plane[np.isfinite(plane)]
 
 
 def raster_histogram(
@@ -252,72 +234,58 @@ def raster_histogram(
     cells land in bins -1 / nbins (never silently dropped).
 
     Same partial+final shape as zonal_stats: per-tile bincounts via
-    mapInPandas (no shuffle before the partials; a histogram needs no
-    tile key at all), then one tiny groupBy over #bins rows per tile."""
-    from collections.abc import Iterator
-
+    ``tiling.map_tiles`` (no shuffle before the partials; a histogram
+    needs no tile key at all), then one tiny groupBy over #bins rows
+    per tile."""
     width = (hi - lo) / nbins
-    sub = tiles.filter(F.col("band") == band).select("data")
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-            if not vs:
-                continue
-            v = np.concatenate(vs)
-            v = v[np.isfinite(v)]
-            if len(v) == 0:
-                continue
-            b = np.clip(np.floor((v - lo) / width), -1, nbins).astype(np.int64)
-            uniq, inv = np.unique(b, return_inverse=True)
-            yield pd.DataFrame(
-                {
-                    "bin": uniq,
-                    "n": np.bincount(inv),
-                    "s": np.bincount(inv, weights=v),
-                }
-            )
+    def partials(tx: int, ty: int, level: int, b: str, plane: np.ndarray) -> dict:
+        v = _valid(plane)
+        bins = np.clip(np.floor((v - lo) / width), -1, nbins).astype(np.int64)
+        uniq, inv = np.unique(bins, return_inverse=True)
+        return {
+            "bin": uniq,
+            "n": np.bincount(inv),
+            "s": np.bincount(inv, weights=v),
+        }
 
-    part = sub.mapInPandas(partials, "bin long, n long, s double")
+    sub = tiles.filter(F.col("band") == band)
+    part = tiling.map_tiles(sub, partials, "bin long, n long, s double")
     return part.groupBy("bin").agg(
         F.sum("n").alias("n_cells"),
         F.round(F.sum("s"), 4).alias("v_sum"),
     )
 
 
+def moments(tiles: DataFrame, band: str) -> DataFrame:
+    """Per-tile (n, s = Σv, s2 = Σv², mn, mx) partials over the valid
+    cells of one band — the one moments pass (``tiling.map_tiles``)
+    behind ``global_stats``, ``quantile_exact``'s bounds and
+    ``autocorr.band_moments``. Extrema are unrounded; a tile with no
+    valid cell emits no row."""
+
+    def partials(tx: int, ty: int, level: int, b: str, plane: np.ndarray) -> dict | None:
+        v = _valid(plane)
+        if not len(v):
+            return None
+        return {
+            "n": [len(v)], "s": [v.sum()], "s2": [(v * v).sum()],
+            "mn": [v.min()], "mx": [v.max()],
+        }
+
+    sub = tiles.filter(F.col("band") == band)
+    return tiling.map_tiles(
+        sub, partials, "n long, s double, s2 double, mn double, mx double"
+    )
+
+
 def global_stats(tiles: DataFrame, band: str) -> DataFrame:
     """One-row global summary of a band: n / sum / mean / min / max /
-    population stddev — per-tile decomposable partials (n, Σv, Σv²,
-    min, max) then a single-row merge; std via the sum-of-squares
-    identity (one sqrt at extract, SQL-replicable)."""
-    from collections.abc import Iterator
-
-    sub = tiles.filter(F.col("band") == band).select("data")
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-            if not vs:
-                continue
-            v = np.concatenate(vs)
-            v = v[np.isfinite(v)]
-            if len(v) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "n": [len(v)],
-                    "s": [v.sum()],
-                    "s2": [(v * v).sum()],
-                    "mn": [v.min()],
-                    "mx": [v.max()],
-                }
-            )
-
-    part = sub.mapInPandas(
-        partials, "n long, s double, s2 double, mn double, mx double"
-    )
+    population stddev — ``moments``' per-tile partials, then a
+    single-row merge; std via the sum-of-squares identity (one sqrt at
+    extract, SQL-replicable)."""
     n, s, s2 = F.sum("n"), F.sum("s"), F.sum("s2")
-    return part.agg(
+    return moments(tiles, band).agg(
         n.alias("n_cells"),
         F.round(s, 4).alias("v_sum"),
         F.round(s / n, 6).alias("v_mean"),
@@ -343,88 +311,49 @@ def quantile_exact(
     the same float expression; zonal_percentile below uses exact
     per-myriad integer ceil instead (its oracle mirrors that).
 
-    Scale design: each round is ONE mapInPandas bincount pass over the
-    data, SHARED by every still-pending quantile (the pass bins values
-    for each distinct candidate interval — Q quantiles cost one scan
-    per round, not Q; the r2→r3 fix for the per-quantile rescan).
-    Map-side partials → ≤(#intervals · nbins)-row merge → driver picks
-    each quantile's holding bin. The interval shrinks ~nbins× per
-    round, so a full f64 range resolves in 2-3 rounds; when ≤``tail``
-    values remain per quantile the exact elements come from one shared
-    small collect. Driver traffic is O(Q·(nbins + tail)) — never the
-    data.
+    Scale design: each round is ONE ``tiling.map_tiles`` bincount pass
+    over the data, SHARED by every still-pending quantile (the pass
+    bins values for each distinct candidate interval — Q quantiles cost
+    one scan per round, not Q; the r2→r3 fix for the per-quantile
+    rescan). Map-side partials → ≤(#intervals · nbins)-row merge →
+    driver picks each quantile's holding bin. The interval shrinks
+    ~nbins× per round, so a full f64 range resolves in 2-3 rounds; when
+    ≤``tail`` values remain per quantile the exact elements come from
+    one shared small collect. Driver traffic is O(Q·(nbins + tail)) —
+    never the data.
     """
-    from collections.abc import Iterator
-
-    sub = tiles.filter(F.col("band") == band).select("data")
+    sub = tiles.filter(F.col("band") == band)
 
     def counter_multi(
         ivs: list[tuple[float, float]],
     ) -> dict[tuple[float, float], np.ndarray]:
-        # one scan: bincount of values in [lo, hi) for EVERY interval
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-                if not vs:
-                    continue
-                v = np.concatenate(vs)
-                v = v[np.isfinite(v)]
-                if len(v) == 0:
-                    continue
-                frames = []
-                for i, (lo, hi) in enumerate(ivs):
-                    w = (hi - lo) / nbins
-                    x = v[(v >= lo) & (v < hi)]
-                    if len(x) == 0:
-                        continue
-                    b = np.minimum(
-                        (np.floor((x - lo) / w)).astype(np.int64), nbins - 1
-                    )
-                    u, inv = np.unique(b, return_inverse=True)
-                    frames.append(
-                        pd.DataFrame({"iv": i, "bin": u, "n": np.bincount(inv)})
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+        # one scan: bincount of values in [lo, hi) for EVERY interval,
+        # keyed k = interval index · nbins + bin
+        def run(tx: int, ty: int, level: int, b: str, plane: np.ndarray) -> dict:
+            v = _valid(plane)
+            keys = []
+            for i, (lo, hi) in enumerate(ivs):
+                x = v[(v >= lo) & (v < hi)]
+                bins = np.floor((x - lo) / ((hi - lo) / nbins)).astype(np.int64)
+                keys.append(i * nbins + np.minimum(bins, nbins - 1))
+            k, n = np.unique(np.concatenate(keys), return_counts=True)
+            return {"k": k, "n": n}
 
         pdf = (
-            sub.mapInPandas(run, "iv long, bin long, n long")
-            .groupBy("iv", "bin").agg(F.sum("n").alias("n"))
+            tiling.map_tiles(sub, run, "k long, n long")
+            .groupBy("k").agg(F.sum("n").alias("n"))
             .toPandas()
         )
-        out: dict[tuple[float, float], np.ndarray] = {}
-        for i, iv in enumerate(ivs):
-            counts = np.zeros(nbins, dtype=np.int64)
-            rows = pdf[pdf["iv"] == i]
-            if len(rows):
-                counts[rows["bin"].to_numpy()] = rows["n"].to_numpy()
-            out[iv] = counts
-        return out
+        counts = np.zeros(len(ivs) * nbins, dtype=np.int64)
+        counts[pdf["k"].to_numpy(np.int64)] = pdf["n"].to_numpy(np.int64)
+        return {iv: counts[i * nbins : (i + 1) * nbins] for i, iv in enumerate(ivs)}
 
     # global n / bounds — UNROUNDED (global_stats rounds its extrema
     # for oracle-hash stability; a rounded-up min would clip real
     # values out of the candidate interval and corrupt every rank)
-    def bounds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-            if not vs:
-                continue
-            v = np.concatenate(vs)
-            v = v[np.isfinite(v)]
-            if len(v):
-                yield pd.DataFrame(
-                    {"n": [len(v)], "mn": [v.min()], "mx": [v.max()]}
-                )
-
-    g = (
-        sub.mapInPandas(bounds, "n long, mn double, mx double")
-        .agg(
-            F.sum("n").alias("n"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-        .collect()[0]
-    )
+    g = moments(tiles, band).agg(
+        F.sum("n").alias("n"), F.min("mn").alias("mn"), F.max("mx").alias("mx")
+    ).collect()[0]
     n = int(g.n)
     # per-quantile narrowing state; every round shares ONE scan
     states = [
@@ -460,24 +389,13 @@ def quantile_exact(
     # candidate values, keyed by interval
     ivs = sorted({(s["lo"], s["hi"]) for s in states})
 
-    def collect_multi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vs = [np.asarray(d, dtype=np.float64) for d in pdf["data"]]
-            if not vs:
-                continue
-            v = np.concatenate(vs)
-            v = v[np.isfinite(v)]
-            if len(v) == 0:
-                continue
-            frames = []
-            for i, (lo, hi) in enumerate(ivs):
-                x = v[(v >= lo) & (v < hi)]
-                if len(x):
-                    frames.append(pd.DataFrame({"iv": i, "v": x}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def collect_multi(tx: int, ty: int, level: int, b: str, plane: np.ndarray) -> dict:
+        v = _valid(plane)
+        xs = [v[(v >= lo) & (v < hi)] for lo, hi in ivs]
+        iv = np.repeat(np.arange(len(ivs)), [len(x) for x in xs])
+        return {"iv": iv, "v": np.concatenate([v[:0], *xs])}
 
-    pdf = sub.mapInPandas(collect_multi, "iv long, v double").toPandas()
+    pdf = tiling.map_tiles(sub, collect_multi, "iv long, v double").toPandas()
     vals_by_iv = {
         iv: np.sort(pdf[pdf["iv"] == i]["v"].to_numpy())
         for i, iv in enumerate(ivs)
@@ -510,16 +428,14 @@ def zonal_geometry(
     group, then the tiny per-zone final sum — the zonal_stats
     partial+final shape with a halo, shuffle rows ∝ zones per tile,
     never T²."""
-    from engine import tiling
-
     sub = tiles.filter(F.col("band") == zone_band)
 
-    def partials(tx: int, ty: int, bands: dict, nr: int, nc: int) -> pd.DataFrame:
+    def partials(tx: int, ty: int, bands: dict, nr: int, nc: int) -> dict | None:
         (_, z), = bands.items()
         c = z[1 : 1 + nr, 1 : 1 + nc]
         valid = np.isfinite(c)
         if not valid.any():
-            return pd.DataFrame(columns=["zone", "a", "p"])
+            return None
         nsame = np.zeros_like(c, dtype=np.int64)
         for dy, dx in ((-1, 0), (1, 0), (0, -1), (0, 1)):
             nb = z[1 + dy : 1 + dy + nr, 1 + dx : 1 + dx + nc]
@@ -527,11 +443,11 @@ def zonal_geometry(
         zi = c[valid].astype(np.int64)
         per = (4 - nsame)[valid]
         uniq, inv = np.unique(zi, return_inverse=True)
-        return pd.DataFrame({
+        return {
             "zone": uniq,
             "a": np.bincount(inv),
             "p": np.bincount(inv, weights=per).astype(np.int64),
-        })
+        }
 
     part = tiling.halo_map(sub, T, 1, wrap_nx, partials, "zone long, a long, p long")
     area = F.sum("a").cast("long")

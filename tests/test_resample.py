@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from engine import fixtures, resample
 
@@ -547,3 +548,50 @@ def test_warp_transform_sinusoidal_golden(spark):
         np.nan_to_num(got, nan=-9), np.nan_to_num(want, nan=-9)
     )
     assert np.isfinite(want).sum() > 2000
+
+
+@pytest.mark.parametrize(
+    ("center", "r_in", "r_out", "n_tiles"),
+    [((24.5, 24.5), 0.0, 4.0, 1), ((32.0, 32.0), 2.6, 4.1, 4)],
+    ids=["disk_inside_one_tile", "annulus_across_tiles"],
+)
+def test_warp_transform_plans_tile_interiors(spark, center, r_in, r_out, n_tiles):
+    """An identity inverse valid only on a disk inside one output tile,
+    or on a thin annulus around a tile corner that misses every edge
+    sample of the four tiles it crosses: those tiles are still planned
+    and gathered, and the warp equals the brute per-pixel map."""
+    arr = fixtures.dem_arith(size=64)
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(arr, 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    cx, cy = center
+
+    def inv(gx, gy):
+        r = np.hypot(gx - cx, gy - cy)
+        ok = (r >= r_in) & (r <= r_out)
+        return np.where(ok, gx, np.nan), np.where(ok, gy, np.nan)
+
+    out = resample.warp_transform(tiles, 16, inv, (64, 64), margin=0)
+    want = brute_transform_nearest(arr, inv, (64, 64))
+    assert np.isfinite(want).sum() >= 20
+    assert out.count() == n_tiles
+    np.testing.assert_array_equal(
+        np.nan_to_num(_plane(out, 16, 64, 64), nan=-9), np.nan_to_num(want, nan=-9)
+    )
+
+
+def test_warp_transform_gather_raises_outside_plan(spark):
+    """A pixel whose source lies in a tile its output tile's plan does
+    not cover fails loudly, naming both tiles, instead of reading NaN:
+    the spike at pixel (20, 20) falls between the planner's samples."""
+    tiles = spark.createDataFrame(
+        fixtures.tiles_rows_from_array(fixtures.dem_arith(size=64), 16, band="z"),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+
+    def inv_spike(gx, gy):
+        return gx + np.where((gx == 20.5) & (gy == 20.5), 40.0, 0.0), gy
+
+    with pytest.raises(Exception, match=r"output tile \(1,1\) reads source tile \(3,1\)"):
+        resample.warp_transform(tiles, 16, inv_spike, (64, 64), margin=0).collect()

@@ -435,3 +435,136 @@ def test_warp_gathers_read_groups_in_arrow(spark, warp):
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     nodes = {ln.lstrip(" :+-|").split(" ", 1)[0] for ln in plan.splitlines()}
     assert {n for n in nodes & set(_PY_NODES) if "Groups" in n} == {"FlatMapGroupsInArrow"}, plan
+
+
+def test_tiles_arrow_matches_ddl(spark):
+    """The literal Arrow schema workers build tile rows with is the one
+    Spark derives from TILES_SCHEMA."""
+    assert tiling.TILES_ARROW == tiling.arrow_schema(tiling.TILES_SCHEMA)
+
+
+def _py_nodes_below(plan: str, node: str) -> list[set[str]]:
+    """For each ``node`` of a physical plan tree, the Python nodes in
+    its subtree."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-|")) for ln in lines]
+    name = [ln[d:].split(" ", 1)[0] for ln, d in zip(lines, depth)]
+    found = []
+    for i in (i for i, n in enumerate(name) if n == node):
+        j = i + 1
+        while j < len(lines) and depth[j] > depth[i]:
+            j += 1
+        found.append(set(name[i + 1 : j]) & set(_PY_NODES))
+    return found
+
+
+_COLOCATED = ("zonal_stats", "cross_tab", "local_map")
+
+
+@pytest.mark.parametrize(
+    "op",
+    [*_COLOCATED, "global_stats", "raster_histogram", "quantile_exact",
+     "rasterize_zones", "sample_raster", "build_overview", "band_moments"],
+)
+def test_tile_stages_run_in_arrow(spark, monkeypatch, op):
+    """Zonal, algebra, pyramid and moments stages run on the two tile
+    runners: no pandas UDF node in any plan they execute, and the
+    co-located band groups (``halo_map`` with g=0) have no Python
+    emitter below them."""
+    from pyspark.sql import DataFrame
+
+    from engine import algebra, autocorr, pyramid, zonal
+
+    T = 16
+    arr = fixtures.dem_arith(size=32)
+    tiles = spark.createDataFrame(
+        pd.concat([
+            fixtures.tiles_rows_from_array(arr, T, band="z"),
+            fixtures.tiles_rows_from_array(np.floor(arr / 3), T, band="zone"),
+        ], ignore_index=True),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    pts = spark.createDataFrame(
+        [(1, 0, 1, 3, 4)], "doc_id long, tile_x int, tile_y int, ti int, tj int"
+    )
+    ring = [(2.3, 1.2), (28.7, 6.4), (15.1, 27.6), (2.3, 1.2)]
+    ran: list = []
+    cls = type(tiles)
+    for name in ("collect", "toPandas"):
+        real = getattr(cls, name)
+        monkeypatch.setattr(
+            cls, name, lambda self, *a, _f=real, **k: ran.append(self) or _f(self, *a, **k)
+        )
+    out = {
+        "zonal_stats": lambda: zonal.zonal_stats(tiles, T),
+        "cross_tab": lambda: zonal.cross_tab(tiles, T, "zone", "z"),
+        "local_map": lambda: algebra.local_map(
+            tiles, T, "d", lambda b: b["z"] - b["zone"], ["z", "zone"]
+        ),
+        "global_stats": lambda: zonal.global_stats(tiles, "z"),
+        "raster_histogram": lambda: zonal.raster_histogram(tiles, "z", -2.0, 8.0, 20),
+        "quantile_exact": lambda: zonal.quantile_exact(tiles, "z", [0.5], nbins=8, tail=16),
+        "rasterize_zones": lambda: zonal.rasterize_zones(tiles, [(1, ring)], T, "z"),
+        "sample_raster": lambda: algebra.sample_raster(pts, tiles, T, "z"),
+        "build_overview": lambda: pyramid.build_overview(tiles, T, 10),
+        "band_moments": lambda: autocorr.band_moments(tiles, "z"),
+    }[op]()
+    plans = [
+        df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        for df in ran + ([out] if isinstance(out, DataFrame) else [])
+    ]
+    assert plans
+    for plan in plans:
+        nodes = {ln.lstrip(" :+-|").split(" ", 1)[0] for ln in plan.splitlines()}
+        assert nodes & set(_PY_NODES) and not any("InPandas" in n for n in nodes), plan
+    if op in _COLOCATED:
+        groups = [b for plan in plans for b in _py_nodes_below(plan, "FlatMapGroupsInArrow")]
+        assert groups and not any("MapInArrow" in b for b in groups), plans
+
+
+@pytest.mark.parametrize("op", _COLOCATED)
+def test_colocated_band_group_ragged_tiles(spark, op):
+    """The co-located band group on a 17×33 raster at T=16, whose last
+    tile row and column are partial, equals whole-array NumPy."""
+    from engine import algebra, zonal
+
+    T = 16
+    rng = np.random.default_rng(7)
+    z = rng.random((17, 33)) * 10.0
+    zone = np.floor(rng.random((17, 33)) * 4.0)
+    z[rng.random(z.shape) < 0.1] = np.nan
+    zone[rng.random(z.shape) < 0.1] = np.nan
+    tiles = spark.createDataFrame(
+        pd.concat([
+            fixtures.tiles_rows_from_array(z, T, band="z"),
+            fixtures.tiles_rows_from_array(zone, T, band="zone"),
+        ], ignore_index=True),
+        fixtures.TILES_SCHEMA_DDL,
+    )
+    ok = np.isfinite(z) & np.isfinite(zone)
+    if op == "local_map":
+        out = algebra.local_map(
+            tiles, T, "d", lambda b: b["z"] * b["zone"], ["z", "zone"]
+        ).toPandas()
+        shapes = [(16, 16), (16, 16), (16, 1), (1, 16), (1, 16), (1, 1)]
+        assert sorted(zip(out.nrows, out.ncols)) == sorted(shapes)
+        np.testing.assert_array_equal(fixtures.array_from_tiles_rows(out, T), z * zone)
+    elif op == "zonal_stats":
+        got = zonal.zonal_stats(tiles, T, "zone", "z").toPandas().set_index("zone")
+        zones = np.unique(zone[ok]).astype(np.int64)
+        assert sorted(got.index) == zones.tolist()
+        for k in zones:
+            v = z[ok & (zone == k)]
+            row = got.loc[k]
+            assert row.n_cells == len(v)
+            np.testing.assert_allclose(
+                [row.z_sum, row.z_mean, row.z_min, row.z_max],
+                [v.sum(), v.mean(), v.min(), v.max()], atol=1e-4,
+            )
+    else:
+        got = zonal.cross_tab(tiles, T, "zone", "z").toPandas()
+        pairs, n = np.unique(
+            np.stack([zone[ok], z[ok]], axis=1).astype(np.int64), axis=0, return_counts=True
+        )
+        want = {(int(a), int(b)): int(c) for (a, b), c in zip(pairs, n)}
+        assert dict(zip(zip(got.ca, got.cb), got.n_cells)) == want
